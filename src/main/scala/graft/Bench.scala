@@ -22,30 +22,19 @@ import scala.util.control.NonFatal
   *    round-12 reboot did exactly that to the graph family, q143 pass
   *    spread 13.2 s, while per-pass minima sat at the r11 medians).
   *    With 5 passes the statistic needs three bad passes to move.
-  *    "value" = sum of per-query trimmed means;
+  *    "value" = sum of the per-entry trimmed means over plan queries
+  *    and shared builds (see [[summarize]]);
   *  - caches (Spark catalog + graft chunk-table memos + registered
   *    persisted intermediates) are cleared before EVERY pass, so each
   *    pass pays identical cold-plan work and passes are comparable;
   *  - every query is fully materialized through the `noop` sink — a
   *    `count()` would let Catalyst prune the projections being measured;
   *  - failures are REPORTED (per-query "errors" map + rc!=0), never
-  *    swallowed; warmup ignores only NonFatal errors;
-  *  - the headline is WEATHER-PROOF BY CONSTRUCTION (VERDICT r13 #1):
-  *    when canary_agreement exceeds [[Bench.AgreementBar]] or
-  *    canary_scale exceeds [[Bench.ScaleBar]] after the initial
-  *    passes, up to [[Bench.MaxExtraPasses]] recovery passes run; if
-  *    a bar is still blown, "value" demotes to min(trimmed-mean sum,
-  *    per-query median over the CALMEST passes) — load only pushes
-  *    measurements up, so the smaller of two upward-biased statistics
-  *    is the better clean-cost estimate ("gate_basis" records which
-  *    fired, and all candidate totals stay in the artifact; pinned
-  *    evidence: BENCH_weatherproof.json);
-  *  - the canary REFERENCES are context-aware (VERDICT r14 #1): the
-  *    pinned refs carry the boot_id AND core count they were measured
-  *    at, and in any other context Bench self-calibrates fresh refs
-  *    before the gate arms instead of reading a re-clocked box (or a
-  *    local[4] dev run's 3x-slower canaries) as permanent weather
-  *    (pinned evidence: BENCH_bootcal.json).
+  *    swallowed; warmup ignores only NonFatal errors.
+  *
+  * Host load is not corrected for here: a speed claim is a paired,
+  * alternating parent/change run of the perfbench harness, not a
+  * comparison of two Bench totals taken at different times.
   */
 object Bench {
   /** Correctness entries whose evaluation does eager side-effecting
@@ -56,179 +45,6 @@ object Bench {
     Set("ref_memo_resume", "q89_jsonl_roundtrip", "q90_csv_roundtrip",
       "q91_clustered_write", "q96_compacted_rewrite", "q125_orc_roundtrip",
       "q137_merge_schema", "q140_ivf_cells_layout", "q212_avro_roundtrip")
-
-  /** Drift-normalizing calibration canaries (VERDICT r10 #1: the
-    * driver's 171 s vs a same-day local 125 s on identical plans —
-    * box weather, not code — was eating the 2x bench gate's headroom).
-    * Three fixed, plan-trivial, SF-INDEPENDENT workloads (pure codegen
-    * CPU / one shuffle exchange / a global sort-limit over synthetic
-    * ranges — no file IO, no catalog data) timed under their own line
-    * items every pass. Box drift scales these and the catalog alike,
-    * so `value_normalized` = value * canaryRefSum / canarySum reads
-    * round-over-round as code, with the weather divided out.
-    *
-    * Round-12 stabilization (VERDICT r11 #1: two same-hour runs with
-    * ~1% raw delta produced canary_scale 0.959 vs 0.866 — sub-second
-    * single-shot canary medians injected a phantom ±12% into the
-    * normalized total): each canary is sized to ~1-2 s and timed
-    * [[CanaryReps]] times per pass, reporting the TRIMMED MEAN (drop
-    * min and max, average the middle) so one GC pause or JIT blip
-    * cannot move a pass's sample; the across-pass spread is pinned in
-    * the artifact's "canary_spread" section as the stability evidence.
-    *
-    * Gate discipline (ADVICE r11): the canaries are deliberately
-    * IO-free, so canary_scale captures CPU/shuffle weather only — IO
-    * drift (page cache, disk contention) is NOT divided out. The raw
-    * "value" stays the gate metric; "value_normalized" is a DIAGNOSTIC
-    * for reading round-over-round deltas, never a pass/fail input.
-    */
-  val Canaries: Seq[(String, SparkSession => org.apache.spark.sql.DataFrame)] = Seq(
-    ("canary:cpu", (s: SparkSession) => s.range(0L, 96000000L, 1L, 32)
-      .selectExpr("sum(xxhash64(cast(id as string)) & 1048575) as h")),
-    ("canary:shuffle", (s: SparkSession) => s.range(0L, 8000000L, 1L, 32)
-      .selectExpr("id % 200000 as k").groupBy("k").count()
-      .selectExpr("cast(sum(count) as long) as n", "count(*) as g")),
-    ("canary:sort", (s: SparkSession) => s.range(0L, 32000000L, 1L, 32)
-      .selectExpr("xxhash64(id) as k").orderBy("k").limit(1000)))
-
-  /** In-pass repetitions per canary; the pass's sample is the trimmed
-    * mean of these (drop fastest + slowest, mean the rest).
-    */
-  val CanaryReps = 5
-
-  /** END-of-pass repetitions per canary (ADVICE r14 #1: pass weather
-    * was sampled only at pass START, so load arriving mid-pass after
-    * the canaries finished was invisible to the clean-pass ranking and
-    * a loaded pass could be classified calm). Each pass now re-times
-    * every canary this many times AFTER the catalog queries and the
-    * pass's weather index is the MAX of the start and end samples —
-    * load anywhere in the pass moves the index. The end sample is the
-    * MIN of the reps (robust to a single GC pause; sustained load
-    * inflates both reps, so the min still sees it). End samples feed
-    * ONLY the per-pass weather ranking — canary_scale/agreement (the
-    * gate bars) stay on the trimmed start samples, whose 5-rep
-    * statistic is the stable one.
-    */
-  val EndReps = 2
-
-  /** Self-calibration repetitions per canary when the pinned refs'
-    * boot doesn't match (see [[CanaryRefBootId]]); the ref is the
-    * trimmed mean (drop min and max).
-    */
-  val CalibrationReps = 7
-
-  /** Per-canary reference trimmed-means (seconds), pinned from the
-    * round-16 boot's post-warmup self-calibration on boot
-    * [[CanaryRefBootId]] (VERDICT r15 #2: the r15 runs were
-    * `cached_calibration` on this boot because the round-13 pins were
-    * two boots stale; these are the values the calibration machinery
-    * itself produced and cached on this boot's first canonical run —
-    * the r15 driver run's in-pass medians on the same boot read within
-    * 6% of them). Historical context (the canaries run measurably
-    * slower inside a
-    * 220-query pass than in a one-query dev run — JIT/cache context —
-    * so the anchor must come from the same context the driver measures
-    * in; and a reboot re-clocks the box, so the anchor must come from
-    * the boot being measured — the round-12 refs read 0.35x-0.64x on
-    * a later boot with agreement 1.83). The ABSOLUTE values only
-    * anchor the normalization scale; comparisons should always quote
-    * the ratio (canary_scale), and only when canary_agreement is
-    * near 1.
-    */
-  val CanaryRef: Map[String, Double] = Map(
-    "canary:cpu" -> 0.235, "canary:shuffle" -> 0.448, "canary:sort" -> 0.138)
-
-  /** Boot the pinned [[CanaryRef]] values were measured on (VERDICT
-    * r14 #1: a host reboot re-clocks the VM — the round-12 reboot read
-    * the same canaries at ~2.8x their pre-reboot refs on an idle box —
-    * so pinned refs are only meaningful on their own boot). When the
-    * running boot differs, [[main]] ignores the pins and SELF-
-    * CALIBRATES fresh refs (after the warmup pass, so JIT context is
-    * close to in-pass), caching them keyed by boot_id so later runs on
-    * the same boot reuse one calibration. The artifact records the
-    * resolution in "canary_ref_source" ("pinned" / "cached_calibration"
-    * / "self_calibrated") and "boot_id". After each canonical run on a
-    * new boot, re-pin these constants from its canary trimmed means.
-    */
-  val CanaryRefBootId = "6139f93d-88c2-4508-b1cb-0550fb9c0c5c"
-
-  /** Core count the pinned [[CanaryRef]] values were measured at. The
-    * canaries are fixed-size parallel jobs, so their wall time scales
-    * with the executor thread count: a local[4] dev run (the verify
-    * recipe's default) reads the SAME canaries ~3x slower than the
-    * local[32] canonical context the refs were pinned in — pure
-    * context, not weather — and would burn recovery passes + demote on
-    * an idle box. Refs are therefore only "pinned" when boot AND cpus
-    * both match; any other context self-calibrates (cache keyed by
-    * both).
-    */
-  val CanaryRefCpus = 32
-
-  /** Weather gate (VERDICT r13 #1): the run's trimmed means are NOT
-    * trusted as the headline when EITHER canary signal blows its bar —
-    * canary_agreement > [[AgreementBar]] (the regimes moved apart:
-    * the r13 driver run read 4.755 while inflating the headline 12%
-    * over a same-boot twin; a clean same-boot run reads ~1.07-1.15)
-    * or canary_scale > [[ScaleBar]] (the regimes moved TOGETHER —
-    * uniform external load inflates every canary alike, so agreement
-    * alone cannot see it; clean same-boot runs read 0.95-1.13).
-    *
-    * When a bar is blown after the initial passes, Bench first runs up
-    * to [[MaxExtraPasses]] additional passes (buying samples taken
-    * after transient load has passed); if a bar is STILL blown, the
-    * headline demotes to the CLEAN-PASS MEDIAN: passes are ranked by
-    * their own canary weather (median canary ratio of that pass, max
-    * of the start- and end-of-pass samples — see [[EndReps]]), passes
-    * within [[CleanPassTolerance]] of the calmest pass are
-    * kept (always at least 2), and "value" = min(trimmed-mean sum,
-    * clean-pass-median sum): load only ever pushes measurements UP, so
-    * both candidates are upward-biased estimates of the clean cost and
-    * the smaller is the better one — pass-concentrated weather (the
-    * r13 event) inflates the trimmed mean while the calm-pass medians
-    * stay clean, pulsed intra-pass weather can do the reverse. On a
-    * clean run both statistics coincide, so the demoted headline of a
-    * noise-injected run lands within noise of a clean-box run — unlike
-    * a raw per-query-minimum sum, which undershoots a clean headline
-    * ~15% by construction (still reported as "value_min").
-    *
-    * Known bias (ADVICE r14 #2): min() of two noisy statistics is
-    * pulled slightly BELOW either statistic's expectation by ordinary
-    * measurement variance (independent of load), so a demoted headline
-    * can read marginally under a clean-box trimmed mean — the
-    * "neither candidate can go below the clean cost" argument holds
-    * for load, not for variance. Accepted: both candidate totals stay
-    * in the artifact ("value_trimmed"/"value_clean_pass"), so a reader
-    * can always quote the undemoted numbers, and the bias is bounded
-    * by the smaller of the two statistics' noise, far under the ~15%
-    * min-basis bias the demotion exists to avoid.
-    *
-    * The artifact records which basis fired ("gate_basis"), the
-    * per-pass weather indices ("pass_weather"), and both candidate
-    * totals, so a reader can always reconstruct the undemoted number.
-    * Pinned evidence: BENCH_weatherproof.json (clean vs stressed run).
-    * The demotion math itself is pure ([[gateOf]]) and unit-tested in
-    * BenchSpec, so it survives refactors without re-running 27-minute
-    * experiments.
-    */
-  val AgreementBar = 1.5
-
-  /** canary_scale ceiling for the uniform-load arm of the weather
-    * gate — see [[AgreementBar]].
-    */
-  val ScaleBar = 1.5
-
-  /** A pass qualifies as clean when its weather index is within this
-    * factor of the calmest pass's — see [[AgreementBar]].
-    */
-  val CleanPassTolerance = 1.25
-
-  /** Extra recovery passes attempted when a weather bar is blown,
-    * before demoting the gate metric (bounded: each full pass is
-    * ~3.5 min at sf0.1).
-    */
-  val MaxExtraPasses = 2
-
-  // ---- pure gate math (unit-tested in BenchSpec) -------------------
 
   /** True median: average of the two middle elements for even sizes
     * (upper-middle alone would report the SLOWER of 2 passes).
@@ -251,150 +67,37 @@ object Bench {
     else median(xs)
   }
 
-  /** Timings-map key of a canary's END-of-pass sample (never a timed
-    * line item — only [[passWeather]] reads it).
+  /** The per-entry sections of the artifact and the headline totals.
+    * `queries*` hold plan queries only; `value` and `valueMin` sum the
+    * plan queries AND the shared builds (the shared work was always
+    * part of the total — it used to hide inside its first consumer).
     */
-  private[graft] def endKey(canary: String): String =
-    "canaryend:" + canary.stripPrefix("canary:")
+  private[graft] final case class Summary(
+      queries: Seq[(String, Double)], queriesMin: Seq[(String, Double)],
+      queriesSpread: Seq[(String, Double)], sharedBuilds: Seq[(String, Double)],
+      sideEffects: Seq[(String, Double)], value: Double, valueMin: Double)
 
-  /** Per-canary across-pass scales vs the refs (measured/ref). */
-  private[graft] def scalesOf(timings: Seq[Map[String, Double]],
-      refs: Map[String, Double], canaryNames: Seq[String]): Seq[Double] =
-    canaryNames.map(n => stat(timings.map(_(n))) / refs(n))
-
-  /** max/min of the per-canary scales — the regimes-moved-APART gate
-    * signal (1.0 when they agree perfectly).
+  /** Summarize completed passes (one name -> seconds map per pass) over
+    * `entries`. An errored entry's wall time is a fast-fail, not a
+    * measurement (ADVICE r6), so it appears in no section and no total;
+    * side-effect entries are reported but kept out of the totals.
     */
-  private[graft] def agreementOf(timings: Seq[Map[String, Double]],
-      refs: Map[String, Double], canaryNames: Seq[String]): Double = {
-    val s = scalesOf(timings, refs, canaryNames)
-    if (s.isEmpty) 1.0 else s.max / s.min
+  private[graft] def summarize(timings: Seq[Map[String, Double]],
+      entries: Seq[String], errors: Set[String]): Summary = {
+    val timed = entries.filterNot(errors)
+    def across(f: Seq[Double] => Double) = timed.map(n => n -> f(timings.map(_(n))))
+    val stats = across(stat)
+    val mins = across(_.min)
+    // max - min across passes: lets a reader classify 1.3-1.6x
+    // run-to-run drift as noise from the artifact alone (VERDICT r5 #6)
+    val spread = across(xs => xs.max - xs.min)
+    val isShared = (kv: (String, Double)) => kv._1.startsWith("shared:")
+    val isSide = (kv: (String, Double)) => SideEffectQueries(kv._1)
+    val isPlan = (kv: (String, Double)) => !isShared(kv) && !isSide(kv)
+    Summary(stats.filter(isPlan), mins.filter(isPlan), spread.filter(isPlan),
+      stats.filter(isShared), stats.filter(isSide),
+      stats.filterNot(isSide).map(_._2).sum, mins.filterNot(isSide).map(_._2).sum)
   }
-
-  /** Median per-canary scale — the regimes-moved-TOGETHER gate signal. */
-  private[graft] def scaleOf(timings: Seq[Map[String, Double]],
-      refs: Map[String, Double], canaryNames: Seq[String]): Double = {
-    val s = scalesOf(timings, refs, canaryNames)
-    if (s.isEmpty) 1.0 else median(s)
-  }
-
-  /** Whether either weather bar is blown over a pass set. */
-  private[graft] def barBlown(timings: Seq[Map[String, Double]],
-      refs: Map[String, Double], canaryNames: Seq[String]): Boolean =
-    agreementOf(timings, refs, canaryNames) > AgreementBar ||
-      scaleOf(timings, refs, canaryNames) > ScaleBar
-
-  /** One pass's weather index: the median canary measured/ref ratio,
-    * taken as the MAX of the pass-start sample (trimmed mean of
-    * [[CanaryReps]] reps) and the pass-end sample (min of [[EndReps]]
-    * reps under [[endKey]]), so load arriving mid-pass after the start
-    * canaries finish still moves the index (ADVICE r14 #1). Passes
-    * without end samples (older artifacts, unit fixtures) fall back to
-    * the start sample alone.
-    */
-  private[graft] def passWeather(t: Map[String, Double],
-      refs: Map[String, Double], canaryNames: Seq[String]): Double = {
-    val start = canaryNames.map(n => t(n) / refs(n))
-    val end = canaryNames.flatMap(n => t.get(endKey(n)).map(_ / refs(n)))
-    val s = if (start.isEmpty) 1.0 else median(start)
-    if (end.isEmpty) s else math.max(s, median(end))
-  }
-
-  /** Indices of the passes the demotion keeps: within
-    * [[CleanPassTolerance]] of the calmest pass, always at least 2.
-    */
-  private[graft] def keptIndices(weights: Seq[Double]): Seq[Int] = {
-    val wMin = weights.min
-    val calm = weights.indices.filter(i => weights(i) <= wMin * CleanPassTolerance)
-    if (calm.size >= 2) calm
-    else weights.indices.sortBy(weights).take(2)
-  }
-
-  /** Everything the weather gate decides from a completed pass set —
-    * see [[AgreementBar]] for the semantics of each field.
-    */
-  private[graft] final case class GateResult(
-      total: Double, totalClean: Double, value: Double, basis: String,
-      canaryScale: Double, canaryAgreement: Double,
-      passWeather: Seq[Double], keptIdx: Seq[Int])
-
-  /** The pure demotion math (VERDICT r14 #1: unit-testable so the
-    * logic survives refactors without 27-minute experiments): given
-    * the completed passes, the canary refs, and the headline query
-    * names (plans + shared builds; canaries and side-effect entries
-    * excluded by the caller), compute both candidate totals, the gate
-    * signals, and the basis/value the headline reports.
-    */
-  private[graft] def gateOf(timings: Seq[Map[String, Double]],
-      refs: Map[String, Double], canaryNames: Seq[String],
-      headlineNames: Seq[String]): GateResult = {
-    val total = headlineNames.map(n => stat(timings.map(_(n)))).sum
-    val weights = timings.map(t => passWeather(t, refs, canaryNames))
-    val kept = keptIndices(weights)
-    val totalClean =
-      headlineNames.map(n => median(kept.map(i => timings(i)(n)))).sum
-    val cScale = scaleOf(timings, refs, canaryNames)
-    val cAgree = agreementOf(timings, refs, canaryNames)
-    val distorted = cAgree > AgreementBar || cScale > ScaleBar
-    // Load can only push a measurement UP, so both candidate totals
-    // are upward-biased estimates of the clean-box cost and the SMALLER
-    // one is the better estimate: pass-concentrated weather (the r13
-    // event) inflates the trimmed mean while the calm-pass medians stay
-    // clean; pulsed intra-pass weather can land inside canary-calm
-    // passes and inflate the medians while per-query trimming sheds it.
-    // Neither mechanism can drive either statistic BELOW the clean
-    // cost, so min() stays honest for load (see the [[AgreementBar]]
-    // note for the small variance-driven downward bias it accepts).
-    val value = if (distorted) math.min(total, totalClean) else total
-    val basis =
-      if (!distorted) "trimmed_mean"
-      else if (totalClean <= total) "clean_pass_median"
-      else "trimmed_mean_weathered_min"
-    GateResult(total, totalClean, value, basis, cScale, cAgree, weights, kept)
-  }
-
-  // ---- boot-aware canary ref resolution ----------------------------
-
-  private[graft] def readBootId(): String =
-    sys.env.getOrElse("SPARK_GRAFT_BOOT_ID",
-      try {
-        val s = scala.io.Source.fromFile("/proc/sys/kernel/random/boot_id")
-        try s.mkString.trim finally s.close()
-      } catch { case NonFatal(_) => "unknown" })
-
-  /** On-disk cache of one boot's self-calibrated refs (one line of
-    * JSON we both write and parse ourselves; /tmp is fine — the cache
-    * is only valid for the boot that wrote it anyway).
-    */
-  private[graft] def refCachePath: String =
-    sys.env.getOrElse("SPARK_GRAFT_CANARY_CACHE", "/tmp/graft_canary_ref.json")
-
-  private[graft] def readRefCache(path: String, bootId: String,
-      cpus: Int): Option[Map[String, Double]] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      val bootRe = """"boot_id"\s*:\s*"([^"]+)"""".r
-      val cpusRe = """"cpus"\s*:\s*([0-9]+)""".r
-      if (!bootRe.findFirstMatchIn(txt).exists(_.group(1) == bootId) ||
-          !cpusRe.findFirstMatchIn(txt).exists(_.group(1).toInt == cpus)) None
-      else {
-        val refRe = """"(canary:[a-z]+)"\s*:\s*([0-9.]+)""".r
-        val refs = refRe.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        if (refs.nonEmpty && refs.values.forall(_ > 0)) Some(refs) else None
-      }
-    } catch { case NonFatal(_) => None }
-
-  private[graft] def writeRefCache(path: String, bootId: String, cpus: Int,
-      refs: Map[String, Double]): Unit =
-    try {
-      val body = refs.toSeq.sorted
-        .map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (s"""{"boot_id":"$bootId","cpus":$cpus,$body}""" + "\n").getBytes("UTF-8"))
-    } catch { case NonFatal(e) =>
-      System.err.println(s"canary ref cache write failed ($path): $e") }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -439,8 +142,6 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
     if (warmDir.nonEmpty) {
-      Canaries.foreach { case (_, fn) =>
-        try materialize(fn(spark)) catch { case NonFatal(_) => () } }
       SparkEntry.sharedBuilds.foreach { case (_, fn) =>
         try materialize(fn(spark, warmDir)) catch { case NonFatal(_) => () } }
       names.foreach { n =>
@@ -449,131 +150,30 @@ object Bench {
       }
     }
 
-    // Context-aware ref resolution (VERDICT r14 #1 — see
-    // CanaryRefBootId / CanaryRefCpus): in the pinned context (same
-    // boot AND same core count), use the pinned refs; in any other
-    // context, use that context's cached calibration or self-calibrate
-    // now (AFTER the warmup pass, so the canaries run with JIT context
-    // close to the timed passes'; ~15 s for 3 canaries x
-    // CalibrationReps). SPARK_GRAFT_CANARY_REF_SCALE (test hook,
-    // BENCH_bootcal.json) scales the PINNED refs only, simulating
-    // stale pins; calibrated refs are fresh by construction.
-    val bootId = readBootId()
-    val refScale = sys.env.get("SPARK_GRAFT_CANARY_REF_SCALE")
-      .map(_.toDouble).getOrElse(1.0)
-    val (refs, refSource): (Map[String, Double], String) =
-      if (bootId == CanaryRefBootId && cpus.toInt == CanaryRefCpus)
-        (CanaryRef.map { case (k, v) => k -> v * refScale }, "pinned")
-      else readRefCache(refCachePath, bootId, cpus.toInt) match {
-        case Some(cached) => (cached, "cached_calibration")
-        case None =>
-          System.err.println(s"BENCH context (boot $bootId, cpus $cpus) != " +
-            s"pinned (boot $CanaryRefBootId, cpus $CanaryRefCpus) and no " +
-            "cached calibration - self-calibrating canary refs")
-          val fresh = Canaries.map { case (name, fn) =>
-            val samples = (1 to CalibrationReps).map { _ =>
-              val t0 = System.nanoTime()
-              try materialize(fn(spark)) catch { case NonFatal(_) => () }
-              (System.nanoTime() - t0) / 1e9
-            }
-            name -> stat(samples)
-          }.toMap
-          writeRefCache(refCachePath, bootId, cpus.toInt, fresh)
-          (fresh, "self_calibrated")
-      }
-
     var errors = Map.empty[String, String]
+    def timeOne(name: String)(body: => Unit): (String, Double) = {
+      val t0 = System.nanoTime()
+      try body
+      catch { case e: Throwable =>
+        if (!errors.contains(name))
+          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+      }
+      name -> (System.nanoTime() - t0) / 1e9
+    }
     // Shared memoized builds (Chunker.sharedTable) are materialized
     // FIRST each pass under their own named timers, so the build cost
     // of a train-once-serve-many intermediate no longer lands on
     // whichever consumer query runs first in alphabetical order
     // (VERDICT r9 "what's wrong" #1: q84/q80-class numbers swung 3-10x
-    // round-over-round purely from attribution). Reported in a
-    // separate "shared_builds" JSON section; their sum stays inside
-    // the headline "value" (same total work, now attributable).
-    val sharedNames = SparkEntry.sharedBuilds.map(_._1)
-    val runShared = only.isEmpty // a filtered dev run times queries standalone
-    def timeCanary(name: String, fn: SparkSession => org.apache.spark.sql.DataFrame,
-        reps: Int): Seq[Double] =
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try materialize(fn(spark))
-        catch { case e: Throwable =>
-          if (!errors.contains(name))
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-    def runPass(): Map[String, Double] = {
+    // round-over-round purely from attribution). A filtered dev run
+    // times its queries standalone.
+    val shared = if (only.isEmpty) SparkEntry.sharedBuilds else Nil
+    val timings = (1 to passes).map { _ =>
       clearAll()
-      // Canaries run FIRST each pass (even in filtered dev runs —
-      // they're sub-second and make any run self-calibrating).
-      val canary = Canaries.map { case (name, fn) =>
-        // trimmed mean of CanaryReps in-pass repetitions (drop min and
-        // max): a single GC pause or JIT deopt cannot move the sample
-        val samples = timeCanary(name, fn, CanaryReps).sorted
-        name -> samples.slice(1, samples.size - 1).sum / (samples.size - 2)
-      }.toMap
-      val shared = canary ++ (if (!runShared) Map.empty[String, Double] else
-        SparkEntry.sharedBuilds.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try materialize(fn(spark, sfDir))
-          catch { case e: Throwable =>
-            if (!errors.contains(name))
-              errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          }
-          name -> (System.nanoTime() - t0) / 1e9
-        }.toMap)
-      val queryTimes = names.map { name =>
-        val t0 = System.nanoTime()
-        try materialize(SparkEntry.queries(name)(spark, sfDir))
-        catch { case e: Throwable =>
-          if (!errors.contains(name))
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-      // Canaries again LAST (ADVICE r14 #1 — see EndReps): the pass's
-      // weather index is max(start, end), so load arriving after the
-      // start canaries finished still marks the pass. Stored under
-      // endKey names, which are never timed line items.
-      val canaryEnd = Canaries.map { case (name, fn) =>
-        endKey(name) -> timeCanary(endKey(name), fn, EndReps).min
-      }.toMap
-      shared ++ queryTimes ++ canaryEnd
+      (shared.map { case (name, fn) => timeOne(name)(materialize(fn(spark, sfDir))) } ++
+        names.map(n => timeOne(n)(materialize(SparkEntry.queries(n)(spark, sfDir))))).toMap
     }
-    // The weather-gate signals over a pass set (see [[AgreementBar]]);
-    // canaries that errored or lack a positive ref are excluded.
-    def liveCanaries: Seq[String] = Canaries.map(_._1)
-      .filter(n => refs.get(n).exists(_ > 0) && !errors.contains(n))
-    val timingsBuf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    (1 to passes).foreach(_ => timingsBuf += runPass())
-    // Weather recovery (VERDICT r13 #1): while a weather bar is blown,
-    // buy more samples — extra passes taken after transient load has
-    // passed feed the clean-pass subset the gate metric demotes to.
-    var extraPasses = 0
-    while (barBlown(timingsBuf.toSeq, refs, liveCanaries) &&
-        extraPasses < MaxExtraPasses) {
-      System.err.println(f"BENCH weather: agreement " +
-        f"${agreementOf(timingsBuf.toSeq, refs, liveCanaries)}%.3f / scale " +
-        f"${scaleOf(timingsBuf.toSeq, refs, liveCanaries)}%.3f over bars " +
-        f"($AgreementBar%.2f/$ScaleBar%.2f) after ${timingsBuf.size} " +
-        "passes - running an extra pass")
-      extraPasses += 1
-      timingsBuf += runPass()
-    }
-    val timings = timingsBuf.toSeq
-    // An errored query's wall time is a fast-fail, not a measurement —
-    // reporting it as a timing made error-vs-fast indistinguishable in
-    // the r6 artifact (ADVICE r6). Errored names live ONLY in `errors`.
-    val timed = (Canaries.map(_._1) ++ (if (runShared) sharedNames else Nil) ++ names)
-      .filterNot(errors.contains)
-    val med = timed.map(n => n -> stat(timings.map(_(n))))
-    val mins = timed.map(n => n -> timings.map(_(n)).min)
-    // Per-query spread (max - min across passes): lets a reader classify
-    // 1.3-1.6x run-to-run drift as noise from the artifact alone,
-    // without a fresh bench run (VERDICT r5 #6).
-    val spread = timed.map(n => n -> (timings.map(_(n)).max - timings.map(_(n)).min))
+    val summary = summarize(timings, shared.map(_._1) ++ names, errors.keySet)
 
     def jstr(s: String) = "\"" + s.flatMap {
       case '"'  => "\\\""
@@ -590,51 +190,7 @@ object Bench {
     def jmap(m: Seq[(String, Double)]) =
       m.map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    // ref_memo_resume eagerly deletes + rebuilds the on-disk memo per
-    // evaluation — that's the in-plan resume PROOF, not a plan, and its
-    // timing measures tmpfs writes. Report it separately so "value" and
-    // "queries" measure plans only.
-    val (canaryMed, med1) = med.partition(kv => kv._1.startsWith("canary:"))
-    val (sharedMed, med2) = med1.partition(kv => kv._1.startsWith("shared:"))
-    val (sideEff, plans) = med2.partition(kv => SideEffectQueries(kv._1))
-    // shared-build medians stay inside the headline total: the work was
-    // always part of "value" (it used to hide inside the first consumer
-    // query); only the attribution moved. Canaries stay OUTSIDE it —
-    // they're the measuring stick, not the workload.
-    val headlineNames = plans.map(_._1) ++ sharedMed.map(_._1)
-    // Min-basis twin of `total`: per-query across-pass minima over the
-    // same query set (plans + shared builds). A diagnostic floor —
-    // biased ~15% below a clean trimmed mean by construction, which is
-    // why the weather gate demotes to the clean-pass median instead
-    // (see [[AgreementBar]]).
-    val totalMin = mins.filter(kv => !kv._1.startsWith("canary:") &&
-      !SideEffectQueries(kv._1)).map(_._2).sum
-    // Per-canary scales (VERDICT r12 #1c): after the round-12 reboot
-    // the three canaries disagreed 0.37x-4.15x against their refs — a
-    // single scalar averaged over regimes that disagree 11x corrects
-    // nothing. So: report each canary's own measured/ref ratio
-    // ("canary_scales"), take the MEDIAN ratio as canary_scale (robust
-    // to one regime re-clocking), and pin "canary_agreement" =
-    // max/min of the three ratios. canary_scale > 1 = this box/run is
-    // SLOWER than the pinned reference; value_normalized divides that
-    // weather out of "value" — a DIAGNOSTIC that is only meaningful
-    // when canary_agreement is near 1 (the regimes moved together).
-    // The raw "value" stays the gate metric always.
-    val canaryScales = canaryMed.toSeq.sortBy(_._1).collect {
-      case (n, v) if refs.contains(n) && refs(n) > 0 => n -> v / refs(n)
-    }
-    // Weather-proof gate metric (VERDICT r13 #1): all demotion math is
-    // the pure gateOf (unit-tested in BenchSpec) — see [[AgreementBar]].
-    val gate = gateOf(timings, refs, liveCanaries, headlineNames)
-    val normalized = gate.total / gate.canaryScale
-    val nonPlan = (kv: (String, Double)) =>
-      SideEffectQueries(kv._1) || kv._1.startsWith("shared:") ||
-        kv._1.startsWith("canary:")
-    // across-pass spread of the per-pass trimmed means — the canary's
-    // own stability evidence (VERDICT r11 #1); canary_scale is only
-    // trustworthy when these are small relative to the medians
-    val canarySpread = spread.filter(_._1.startsWith("canary:"))
-    val line = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","agreement_bar":${jnum(AgreementBar)},"scale_bar":${jnum(ScaleBar)},"extra_passes":$extraPasses,"pass_weather":${gate.passWeather.map(jnum).mkString("[", ",", "]")},"passes_kept":${gate.keptIdx.size},"value_trimmed":${jnum(gate.total)},"value_clean_pass":${jnum(gate.totalClean)},"value_min":${jnum(totalMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"boot_id":${jstr(bootId)},"canary_ref_source":${jstr(refSource)},"canary":${jmap(canaryMed)},"canary_ref":${jmap(refs.toSeq.sorted)},"canary_scales":${jmap(canaryScales)},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"canary_spread":${jmap(canarySpread)},"value_normalized":${jnum(normalized)},"queries":${jmap(plans)},"queries_min":${jmap(mins.filterNot(nonPlan))},"queries_spread":${jmap(spread.filterNot(nonPlan))},"shared_builds":${jmap(sharedMed)},"side_effect_queries":${jmap(sideEff)},"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${jnum(summary.value)},"value_min":${jnum(summary.valueMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"errors":$es,"sf":"$sfDir"}"""
     // The full per-query line outgrew the driver's 2000-char stdout tail
     // window at ~136 queries (r3/r4/r5 all recorded parsed:null because
     // the line's HEAD — "{"metric":... — fell outside the window). So:
@@ -650,7 +206,7 @@ object Bench {
     // canonical detail — the committed r15 BENCH_detail.json was the
     // c8 scaling run because the low-core invocation ran LAST
     // (VERDICT r15 #8); the full-core canonical run keeps the plain
-    // name. Additive only; the timed methodology is untouched.
+    // name.
     val repoDetail = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPO_OUT",
       if (cpus.toInt == Runtime.getRuntime.availableProcessors()) "BENCH_detail.json"
       else s"BENCH_detail_c$cpus.json")
@@ -660,7 +216,7 @@ object Bench {
       catch { case NonFatal(e) => System.err.println(s"bench detail write failed ($p): $e") }
     println(line)
     spark.stop()
-    val compact = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","unit":"sec","passes":${timings.size},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"value_normalized":${jnum(normalized)},"n_queries":${plans.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
+    val compact = s"""{"metric":"total","value":${jnum(summary.value)},"unit":"sec","passes":${timings.size},"n_queries":${summary.queries.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
     println(compact)
     if (errors.nonEmpty) sys.exit(1)
   }

