@@ -131,7 +131,7 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     def clearAll(): Unit = {
-      pipeline.Chunker.clearCaches() // unpersist + forget (not just unpersist)
+      SessionCache.clear() // unpersist + forget (not just unpersist)
       spark.catalog.clearCache()
     }
 
@@ -160,7 +160,7 @@ object Bench {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // Shared memoized builds (Chunker.sharedTable) are materialized
+    // Shared memoized builds (SessionCache.shared) are materialized
     // FIRST each pass under their own named timers, so the build cost
     // of a train-once-serve-many intermediate no longer lands on
     // whichever consumer query runs first in alphabetical order

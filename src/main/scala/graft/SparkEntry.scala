@@ -57,7 +57,7 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._2).reduce(_ ++ _)
 
-  /** Session-memoized intermediates ([[Chunker.sharedTable]]) that
+  /** Session-memoized intermediates ([[SessionCache.shared]]) that
     * several catalog queries ride (train-once-serve-many). Bench and
     * ScaleProbe materialize these under their OWN named timers before
     * timing the consumers, so per-query numbers measure the query, not

@@ -71,9 +71,6 @@ object Tables {
     * kernels, the exact brute-force similarity arms — and nowhere
     * else. Callers pass the table's primary key.
     *
-    * SPARK_GRAFT_SPREAD=0 disables (dev A/B hook; never set by the
-    * driver).
-    *
     * The no-op guard reads the scan's ACTUAL layout (ADVICE r15 #1):
     * `df.rdd.getNumPartitions` counts file SPLITS, which are sized by
     * `spark.sql.files.maxPartitionBytes` — a single-file
@@ -88,13 +85,12 @@ object Tables {
     * >= defaultParallelism FILES it is parallel regardless of row
     * groups (no footer reads), otherwise the per-file row-group counts
     * come from the parquet footers (driver-side KB-sized reads, cached
-    * per (session, fileset) for the life of the session — the files
-    * under an sf dir are immutable within a session, the same contract
-    * Chunker's memos document). Non-scan-rooted inputs (test fixtures,
-    * derived unions) keep the split-count guard.
+    * per (session, fileset) by [[SessionCache.scanLayout]] for the life
+    * of the session — the files under an sf dir are immutable within a
+    * session). Non-scan-rooted inputs (test fixtures, derived unions)
+    * keep the split-count guard.
     */
   private[graft] def spread(df: DataFrame, keys: String*): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SPREAD").contains("0")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     val nonEmpty = nonEmptyScanPartitions(df)
       .getOrElse(df.rdd.getNumPartitions)
@@ -123,13 +119,9 @@ object Tables {
     math.max(1L, math.min(Int.MaxValue.toLong,
       (rows + RowsPerLoopPartition - 1) / RowsPerLoopPartition)).toInt
 
-  /** Cached per (session, fileset-root): upper bound on the number of
-    * non-empty partitions a scan of that fileset can produce. See
-    * [[spread]].
+  /** Upper bound on the number of non-empty partitions a scan of `df`
+    * can produce, when `df` roots in one file relation. See [[spread]].
     */
-  private val scanLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
-
   private def nonEmptyScanPartitions(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val spark = df.sparkSession
@@ -137,14 +129,10 @@ object Tables {
       case Seq(lr: LogicalRelation) => lr.relation match {
         case fs: HadoopFsRelation =>
           val rootKey = fs.location.rootPaths.map(_.toString).sorted.mkString(",")
-          // bound the memo (it strongly references sessions; spec
-          // suites create many short-lived ones — a clear just costs a
-          // few footer re-reads)
-          if (scanLayoutCache.size > 256) scanLayoutCache.clear()
-          Option(scanLayoutCache.computeIfAbsent((spark, rootKey), _ => {
+          Some(SessionCache.scanLayout(spark, rootKey) {
             val p = spark.sparkContext.defaultParallelism
             val files = fs.location.inputFiles
-            if (files.length >= p) Integer.valueOf(files.length)
+            if (files.length >= p) files.length
             else {
               val conf = spark.sessionState.newHadoopConf()
               val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
@@ -167,9 +155,9 @@ object Tables {
                 // but never more non-empty than row groups
                 total += rgs
               }
-              Integer.valueOf(math.min(total, Int.MaxValue.toLong).toInt)
+              math.min(total, Int.MaxValue.toLong).toInt
             }
-          }).intValue)
+          })
         case _ => None
       }
       case _ => None

@@ -41,96 +41,10 @@ object Chunker {
 
   val DefaultBudget = 2000 // tokens; mirrors mapreduce.go:46
 
-  /** Registry of DataFrames persisted inside lazy plan builders
-    * ([[runningSum]], graft.plans.Ranks): a lazy API cannot know when
-    * its caller is done consuming the plan, so the persisted
-    * range-partitioned inputs would otherwise live for the session.
-    * [[clearCaches]] is the explicit release valve — Bench calls it
-    * between passes; long-lived sessions call it between pipelines.
-    *
-    * Keyed by owning SparkSession (like chunkTableCache), so a
-    * per-session clear never unpersists another session's plans, and
-    * the onApplicationEnd listener drains a stopping session's entries.
+  /** Forwards to [[graft.SessionCache.clear]]; kept only because the
+    * perfbench/ harness calls it by this name.
     */
-  private val persistedRegistry =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.Set[DataFrame]]()
-
-  def registerForCleanup(df: DataFrame): Unit = {
-    watchSession(df.sparkSession)
-    persistedRegistry
-      .computeIfAbsent(df.sparkSession,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]())
-      .add(df)
-    ()
-  }
-
-  /** Session-lifetime memo for SHARED BUILD TABLES — intermediates that
-    * many catalog queries derive from the same immutable input (the
-    * corpus shingle table, its minhash signatures, the LSH candidate
-    * pairs). One pipeline run evaluates many such queries; without the
-    * memo each rebuilds the identical explode+sha256 lineage from the
-    * parquet scan — the single largest repeated cost in the dedup
-    * family. Keyed by (session, caller-chosen key — by convention
-    * "family:build:<input dir>"); entries are persisted on first build
-    * and dropped by [[clearCaches]] (Bench clears between passes, so
-    * every timed pass still pays the build exactly once) or when the
-    * session stops.
-    *
-    * Same documented contract as chunkTableCache: files under the
-    * keyed dir are immutable within a session.
-    */
-  private val sharedTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def sharedTable(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    watchSession(spark)
-    val k = (spark, key)
-    val existing = sharedTableCache.get(k)
-    if (existing != null) existing
-    else {
-      // NOT computeIfAbsent: builds nest (candidates → minhash →
-      // shingles all live in this map) and CHM forbids recursive
-      // updates. get/putIfAbsent tolerates the nesting; a concurrent
-      // duplicate build loses the race and unpersists itself.
-      val built = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val prev = sharedTableCache.putIfAbsent(k, built)
-      if (prev != null) { built.unpersist(false); prev } else built
-    }
-  }
-
-  /** Unpersist + forget every cached chunk table and registered
-    * intermediate, across ALL sessions in the JVM. Safe any time;
-    * subsequent calls rebuild lazily. Single-session processes (Bench,
-    * Verify, Cli) use this; multi-session hosts use the per-session
-    * overload.
-    */
-  def clearCaches(): Unit = {
-    chunkTableCache.forEach((_, df) => df.unpersist(false))
-    chunkTableCache.clear()
-    sharedTableCache.forEach((_, df) => df.unpersist(false))
-    sharedTableCache.clear()
-    persistedRegistry.forEach((_, dfs) => dfs.forEach(df => df.unpersist(false)))
-    persistedRegistry.clear()
-  }
-
-  /** Per-session release: unpersist + forget only `spark`'s cached
-    * chunk tables and registered intermediates.
-    */
-  def clearCaches(spark: SparkSession): Unit = {
-    val it = chunkTableCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(false); it.remove() }
-    }
-    val st = sharedTableCache.entrySet().iterator()
-    while (st.hasNext) {
-      val e = st.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(false); st.remove() }
-    }
-    Option(persistedRegistry.remove(spark))
-      .foreach(_.forEach(df => df.unpersist(false)))
-  }
+  def clearCaches(): Unit = graft.SessionCache.clear()
 
   /** Scalable global running sum of `weightCol` ordered by `idCol`
     * (ids must be globally unique; ties would make results ambiguous).
@@ -146,10 +60,9 @@ object Chunker {
     // the per-partition-totals action below and the final window+join —
     // persist it so the most expensive stage of the pipeline runs once,
     // not twice (MEMORY_AND_DISK: spills instead of OOMing at scale).
-    val parted = df.repartitionByRange(parts, col(idCol))
-      .withColumn("_graft_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerForCleanup(parted)
+    val parted = graft.SessionCache.persist(
+      df.repartitionByRange(parts, col(idCol))
+        .withColumn("_graft_pid", spark_partition_id()))
     // Phase 2 first (it is the materializing action): per-partition
     // totals -> exclusive prefix offsets. One row per partition; tiny at
     // any data scale. A plain groupBy — no window needed for totals.
@@ -257,50 +170,15 @@ object Chunker {
         count(lit(1)).as("n_records"))
   }
 
-  /** [[chunkTable]] memoized per (session, path, budget) and persisted:
-    * the catalog queries that consume the same chunk table (the ref_*
-    * family) would otherwise rebuild the tokenize+shuffle+window lineage
-    * once each. Entries are evicted when their session's SparkContext
-    * ends (listener below), or explicitly via [[clearCaches]].
-    *
-    * ASSUMPTION (documented contract): files under `dir` are immutable
-    * within a session — a rewrite during the session would be served
-    * stale until clearCaches().
-    */
-  private val chunkTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-
-  private val watchedSessions =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Drop a stopping session's memo/registry entries so the static maps
-    * never pin dead sessions or their plans. (No unpersist on a stopped
-    * context — its blocks are already gone.)
-    */
-  private def watchSession(spark: SparkSession): Unit =
-    if (watchedSessions.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          chunkTableCache.keySet.removeIf(_._1 eq spark)
-          sharedTableCache.keySet.removeIf(_._1 eq spark)
-          persistedRegistry.remove(spark)
-          watchedSessions.remove(spark)
-          ()
-        }
-      })
-    }
-
-  /** Chunk table over `documents` at `dir`, built once per (session, dir,
-    * budget) and served persisted thereafter.
+  /** [[chunkTable]] over `documents` at `dir`, built once per (session,
+    * dir, budget) and served persisted thereafter: the catalog queries
+    * that consume the same chunk table (the ref_* family) would otherwise
+    * rebuild the tokenize+shuffle+window lineage once each.
     */
   def documentChunks(spark: SparkSession, dir: String,
-                     budget: Int = DefaultBudget): DataFrame = {
-    watchSession(spark)
-    chunkTableCache.computeIfAbsent((spark, dir, budget), _ =>
-      chunkTable(graft.Tables.documents(spark, dir), "doc_id", "text", budget)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+                     budget: Int = DefaultBudget): DataFrame =
+    graft.SessionCache.shared(spark, s"chunks:$dir:$budget")(
+      chunkTable(graft.Tables.documents(spark, dir), "doc_id", "text", budget))
 
   // ---------------------------------------------------------------------
   // Reference-exact greedy packing (driver-side; parity tests only).

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
+
 /** Resume/memoization for the map stage.
   *
   * The reference caches each chunk result as `result%d.txt` keyed by
@@ -76,8 +78,7 @@ object MemoCache {
       .select(col("chunk_id"), col("text"), col("result"))
     val misses = keyed.join(memo, Seq("key"), "left_anti")
     val fresh = LlmMap.mapChunks(misses, client, prompt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(fresh)
+      .transform(SessionCache.persist)
     // The append is the materializing action that populates `fresh`'s
     // cache; everything downstream reuses it instead of re-calling the
     // model.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
+
 /** Scalable GLOBAL ranking. A bare `Window.orderBy(...)` collapses the
   * whole input to one partition — correct, but a straggler at scale
   * (and the source of Spark's "No Partition Defined" warning). This is
@@ -35,8 +37,7 @@ object Ranks {
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val parted = df.repartitionByRange(parts, sortCols: _*)
       .withColumn("_graft_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(parted)
+      .transform(SessionCache.persist)
     val totals = parted.groupBy(col("_graft_pid"))
       .agg(count(lit(1)).as("n"),
         countDistinct(struct(keyCols: _*)).as("nd"))

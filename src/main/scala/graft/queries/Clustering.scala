@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** k-means (Lloyd) over the `embeddings` table — the trained-centroid
@@ -94,8 +95,7 @@ object Clustering {
     */
   def kmeansFull(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     var cents = seedCentroids(e, k)
     for (_ <- 1 to iters) cents = recentroid(assign(e, cents))
     assign(e, cents)
@@ -156,8 +156,7 @@ object Clustering {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("cent_id"))
           .orderBy(col("dist_sq"), col("vec_id"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(a)
+      .transform(SessionCache.persist)
     val capped = a.filter(col("rn") <= SemDedupCap)
     val l = capped.select(col("cent_id"), col("embedding").as("emb_a"),
       col("nrm").as("nrm_a"), col("rn").as("rn_a"))
@@ -192,8 +191,7 @@ object Clustering {
     // `assigned` feeds both the size aggregate and the membership
     // filter — persist it or its whole upstream (4 Lloyd passes when
     // fed from kmeans) executes twice
-    val a = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(a)
+    val a = SessionCache.persist(assigned)
     val rates = a.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_c"))
       .select(col("cluster"),
@@ -235,8 +233,7 @@ object Clustering {
                       codebook: Option[Int => DataFrame] = None): DataFrame = {
     val subDim = dim / m
     val e = emb.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     val parts = (0 until m).map { j =>
       val sub = e.select(col("vec_id"),
         slice(col("embedding"), j * subDim + 1, subDim).as("embedding"))
@@ -260,8 +257,7 @@ object Clustering {
     */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     var cents = seedCentroids(e, k)
     for (_ <- 1 to iters) cents = recentroid(assign(e, cents))
     cents
@@ -269,7 +265,7 @@ object Clustering {
 
   /** The corpus's trained centroid table, SHARED across the q139
     * family (q139 assignment, q142 sample, q160 SemDeDup, q189
-    * silhouette) via [[graft.pipeline.Chunker.sharedTable]] — training
+    * silhouette) via [[SessionCache.shared]] — training
     * is a deterministic function of (corpus, k, iters), so every
     * consumer assigning against the same model must not re-derive the
     * Lloyd sweep lineage (VERDICT r8: q189 re-ran the full 7-shuffle
@@ -284,11 +280,11 @@ object Clustering {
     * re-scanning parquet (4 sub-codebooks = 4 scans otherwise).
     */
   private def sharedEmbBase(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"cluster:embbase:$d")(
+    SessionCache.shared(s, s"cluster:embbase:$d")(
       embeddings(s, d).select(col("vec_id"), col("embedding")))
 
   def sharedCentroids(s: SparkSession, d: String, k: Int, iters: Int): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"cluster:centroids:$d:$k:$iters")(
+    SessionCache.shared(s, s"cluster:centroids:$d:$k:$iters")(
       kmeansCentroids(sharedEmbBase(s, d), k, iters))
 
   /** Shared per-subspace PQ codebook (subvector j of the corpus,
@@ -299,7 +295,7 @@ object Clustering {
     */
   def sharedSubCentroids(s: SparkSession, d: String, j: Int, subDim: Int,
                          k: Int, iters: Int): DataFrame =
-    graft.pipeline.Chunker.sharedTable(
+    SessionCache.shared(
       s, s"cluster:pqcents:$d:$j:$subDim:$k:$iters")(
       kmeansCentroids(sharedEmbBase(s, d).select(col("vec_id"),
         slice(col("embedding"), j * subDim + 1, subDim).as("embedding")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables.documents
 import graft.queries.TextAnalytics.{hashFraction, hashFractionSql}
 
@@ -102,7 +103,7 @@ object Curation {
     * [[decontaminate]]/[[bloomDecontaminate]]'s default path.
     */
   def sharedDecontamGrams(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"cur:decontam_grams:$d") {
+    SessionCache.shared(s, s"cur:decontam_grams:$d") {
       decontamGrams(documents(s, d))
     }
 
@@ -117,8 +118,7 @@ object Curation {
     val grams = gramsIn.getOrElse(decontamGrams(docs))
     val isEval = hashFraction(col("doc_id")) < DecontamEvalFrac
     val evalGrams = grams.filter(isEval).select(col("g")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(evalGrams)
+      .transform(SessionCache.persist)
     val nEval = math.max(evalGrams.count(), 1000L)
     val bf = evalGrams.agg(ExprBridge.column(
       new BloomFilterAggregate(
@@ -228,8 +228,7 @@ object Curation {
       // r7 plan audit caught the duplicated exchange)
       val tf = words.groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(tf)
+        .transform(SessionCache.persist)
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .filter(col("df").between(IndexMinDf, IndexMaxDf))
       tf.join(df, Seq("term"))
@@ -254,8 +253,7 @@ object Curation {
       // 20-row aggregate or the corpus scan behind it runs twice
       val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
         .withColumn("w_micro", round(sqrt(col("n_src")) * 1e6, 0).cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(counts)
+        .transform(SessionCache.persist)
       val tot = counts.agg(sum(col("w_micro")).as("w_tot"),
         sum(col("n_src")).as("n_tot"))
       val rates = counts.crossJoin(broadcast(tot))
@@ -298,8 +296,7 @@ object Curation {
           .as("key"))
         // both self-join sides read this — persist or the deletion
         // explode builds twice
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(keys)
+        .transform(SessionCache.persist)
       // banded verify: levenshtein with threshold 1 computes a 3-cell
       // band per row instead of the full len^2 DP (−1 = "exceeds 1"),
       // ~8x cheaper over the ~1M candidate rows the key join emits.
@@ -358,8 +355,7 @@ object Curation {
             .as("n_tokens"))
         .withColumn("w_micro",
           round(sqrt(col("n_tokens")) * 1e6, 0).cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(perSrc)
+        .transform(SessionCache.persist)
       val tot = perSrc.agg(sum(col("w_micro")).as("w_tot"),
         sum(col("n_tokens")).as("tok_tot"))
       perSrc.crossJoin(broadcast(tot))
@@ -482,8 +478,7 @@ object Curation {
         explode(TextOps.wordsOf(col("text"))).as("w"))
       .withColumn("b",
         floor(hashFraction(col("w")) * DsirBuckets).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(occ)
+      .transform(SessionCache.persist)
     val isTarget = col("source") === targetSource
     val bt = occ.groupBy(col("b"))
       .agg(sum(when(isTarget, 1L).otherwise(0L)).as("ct"),
@@ -524,8 +519,7 @@ object Curation {
         explode(TextOps.wordsOf(col("text"))).as("w"))
       .withColumn("b",
         floor(hashFraction(col("w")) * DsirBuckets).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(occ)
+      .transform(SessionCache.persist)
     val isPos = col("source") === curatedSource
     val bt = occ.groupBy(col("b"))
       .agg(sum(when(isPos, 1L).otherwise(0L)).as("cp"),
@@ -574,8 +568,7 @@ object Curation {
     val occ = docs
       .select(col("doc_id"), col("lang"),
         explode(TextOps.wordsOf(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(occ)
+      .transform(SessionCache.persist)
     val cw = occ.groupBy(col("w")).agg(count(lit(1)).as("cw"))
     val tot = occ.agg(count(lit(1)).as("n_tot"))
     // docScore feeds the tertile boundaries AND the final bucket

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
-import graft.pipeline.Chunker
 
 /** Document deduplication (north star; SURVEY.md §2.2): exact
   * content-hash dedup, MinHash+LSH near-dup candidate generation,
@@ -340,8 +340,7 @@ object Dedup {
     // whole shingle->sha256x9->minhash lineage runs once per side.
     val bands = capBuckets(minhashBandsFromTable(minhashes),
         Seq("band_idx", "band_hash"), "doc")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(bands)
+      .transform(SessionCache.persist)
     bands.as("a").join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -360,7 +359,7 @@ object Dedup {
   // identical explode+sha256x9 lineage from the parquet scan once per
   // operator — at 100 TB that is the difference between one corpus
   // scan and twelve. These accessors memoize the build per (session,
-  // dir) via [[Chunker.sharedTable]]: first caller pays, everyone
+  // dir) via [[SessionCache.shared]]: first caller pays, everyone
   // else reads the persisted table; Bench clears between passes so
   // every timed pass still pays each build exactly once. Operators
   // over SUBSETS of the corpus (q78's append batch, fixtures in
@@ -369,7 +368,7 @@ object Dedup {
 
   /** Memoized [[shingleTable]] of the full documents table at `dir`. */
   def corpusShingles(s: SparkSession, dir: String): DataFrame =
-    Chunker.sharedTable(s, s"dedup:shingles:$dir")(
+    SessionCache.shared(s, s"dedup:shingles:$dir")(
       shingleTable(documents(s, dir), "doc_id", "text"))
 
   /** POSITIONAL word-3-gram shingles per doc: (doc, pos, shingle),
@@ -398,7 +397,7 @@ object Dedup {
     * riders.
     */
   def corpusPosShingles(s: SparkSession, dir: String): DataFrame =
-    Chunker.sharedTable(s, s"dedup:posshingles:$dir")(
+    SessionCache.shared(s, s"dedup:posshingles:$dir")(
       posShingleTable(documents(s, dir), "doc_id", "text"))
 
   /** [[minhashTable]]'s signature computed PER DOCUMENT ROW: the doc's
@@ -441,14 +440,14 @@ object Dedup {
   /** Memoized minhash signature table over the corpus —
     * [[minhashTablePerRow]], the zero-shuffle per-doc form. */
   def corpusMinhash(s: SparkSession, dir: String): DataFrame =
-    Chunker.sharedTable(s, s"dedup:minhash:$dir")(
+    SessionCache.shared(s, s"dedup:minhash:$dir")(
       minhashTablePerRow(documents(s, dir), "doc_id", "text"))
 
   /** Memoized LSH candidate pairs (doc_a, doc_b, n_shared_bands) over
     * [[corpusMinhash]].
     */
   def corpusCandidates(s: SparkSession, dir: String): DataFrame =
-    Chunker.sharedTable(s, s"dedup:cands:$dir")(
+    SessionCache.shared(s, s"dedup:cands:$dir")(
       minhashCandidatesFromMinhashes(corpusMinhash(s, dir)))
 
   /** Memoized q151 output — the certified exact J ≥ t pair table over
@@ -458,7 +457,7 @@ object Dedup {
     * the last spill in SCALE.md.
     */
   def corpusPrefixJoin(s: SparkSession, dir: String): DataFrame =
-    Chunker.sharedTable(s, s"dedup:prefixjoin:$dir")(
+    SessionCache.shared(s, s"dedup:prefixjoin:$dir")(
       prefixFilterJoinFromShingles(corpusShingles(s, dir), PrefixJoinT))
 
   /** Exact n-gram Jaccard VERIFY stage over the MinHash candidates: the
@@ -472,12 +471,10 @@ object Dedup {
     // `sh` feeds three plan branches (counts + both intersection sides)
     // and `cands` two — persist both or each branch replays its lineage.
     val sh = shingleTable(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(sh)
+      .transform(SessionCache.persist)
     val cands = minhashCandidatesFromShingles(sh)
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(cands)
+      .transform(SessionCache.persist)
     ngramJaccardFromParts(sh, cands)
   }
 
@@ -533,8 +530,7 @@ object Dedup {
                        maxDf: Long = RareShingleMaxDf,
                        threshold: Double = ContainmentThreshold): DataFrame = {
     val sh = shingleTable(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(sh)
+      .transform(SessionCache.persist)
     containmentPairsFromShingles(sh, maxDf, threshold)
   }
 
@@ -562,8 +558,7 @@ object Dedup {
     // one partition anyway.
     val shAnnot = sh.withColumn("sdf",
         count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(shAnnot)
+      .transform(SessionCache.persist)
     val counts = shAnnot.groupBy(col("doc")).agg(
       count(lit(1)).as("n_sh"),
       sum(when(col("sdf") > maxDf, 1L).otherwise(0L)).as("n_common"))
@@ -594,8 +589,7 @@ object Dedup {
       .filter((col("n_mid") + least(col("common_a"), col("common_b")))
         >= lit(threshold) * least(col("n_a"), col("n_b")))
       .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(survivors)
+      .transform(SessionCache.persist)
     val inter = survivors
       .join(sh.as("sa"), col("doc_a") === col("sa.doc"))
       .join(sh.as("sb"),
@@ -710,8 +704,7 @@ object Dedup {
   def embeddingNearDups(emb: DataFrame, threshold: Double): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"),
         Similarity.norm(col("embedding")).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(base)
+      .transform(SessionCache.persist)
     // (vec_id, band_idx, band_sig): consumed by BOTH sides of the
     // candidate join (probed + exact) — persist or the sig lineage
     // (EmbBands x EmbBitsPerBand VecDot folds per row) runs twice.
@@ -721,8 +714,7 @@ object Dedup {
     // a quadratic blowup.
     val bands = capBuckets(embeddingBands(base),
         Seq("band_idx", "band_sig"), "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(bands)
+      .transform(SessionCache.persist)
     // One probed side suffices in a self-join: a pair whose band sigs
     // differ by one bit matches via the smaller-id side's flip.
     val probes = bands.select(col("vec_id"), col("band_idx"),
@@ -772,7 +764,6 @@ object Dedup {
     * subset of the corpus: /root/reference/internal/cli/mapreduce.go:91).
     */
   def neardupClusters(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = docs.sparkSession
     // Row counts are cheap here: docs is a parquet relation (metadata
     // count) and pairs is the persisted shared candidates table. They
@@ -790,10 +781,9 @@ object Dedup {
       .coalesce(loopParts) // cached-layout twin of the conf: the union
       // inherits the candidates table's core-count partitioning, and
       // every round's join re-reads it as that many map tasks
-      .persist(MEMORY_AND_DISK)
-    Chunker.registerForCleanup(edges)
+      .transform(SessionCache.persist)
     var labels = docs.select(col(idCol).as("doc"), col(idCol).as("label"))
-      .persist(MEMORY_AND_DISK)
+      .transform(SessionCache.persist)
     // Exact, id-type-agnostic fixpoint test: did ANY label change this
     // round? (A numeric checksum would silently mis-converge for string
     // ids, where sum() is null.) The limit(1) stops the probe join at
@@ -810,7 +800,7 @@ object Dedup {
         .select(col("dst").as("doc"), col("label"))
       val next = labels.union(msgs).groupBy(col("doc"))
         .agg(min(col("label")).as("label"))
-        .persist(MEMORY_AND_DISK)
+        .transform(SessionCache.persist)
       converged = !anyChanged(next, labels)
       labels.unpersist()
       labels = next
@@ -819,7 +809,6 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"label propagation did not converge in $MaxClusterIters rounds")
-    Chunker.registerForCleanup(labels)
     labels.select(col("doc").as(idCol), col("label").as("cluster_id"),
       (col("doc") === col("label")).cast("long").as("is_survivor"))
     }
@@ -879,8 +868,7 @@ object Dedup {
     // three consumers (train side, eval side, eval totals) — persist so
     // the tokenize+explode lineage runs once, per the bands convention
     val sh = shingleTable(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(sh)
+      .transform(SessionCache.persist)
     decontaminateFromShingles(sh, isEvalDoc, minShared)
   }
 
@@ -1001,8 +989,7 @@ object Dedup {
   def prefixFilterJoin(docs: DataFrame, idCol: String, textCol: String,
                        t: Double): DataFrame = {
     val sh = shingleTable(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(sh)
+      .transform(SessionCache.persist)
     prefixFilterJoinFromShingles(sh, t)
   }
 
@@ -1044,8 +1031,7 @@ object Dedup {
       .filter(col("r") <=
         col("n_sh") - ceil(lit(t) * col("n_sh")) + lit(1L))
       .select(col("doc"), col("shingle"), col("r"), col("n_sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Chunker.registerForCleanup(ranked)
+      .transform(SessionCache.persist)
     val pa = ranked.select(col("doc").as("doc_a"), col("shingle"),
       col("r").as("ra"), col("n_sh").as("na"))
     val pb = ranked.select(col("doc").as("doc_b"), col("shingle"),
@@ -1395,8 +1381,7 @@ object Dedup {
       // OPTIMIZATION_r16.md.
       val pos = lines.select(col("doc_id"),
         posexplode(col("ls")).as(Seq("pos", "line")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Chunker.registerForCleanup(pos)
+        .transform(SessionCache.persist)
       val removed = pos.groupBy(col("line"))
         .agg(count(lit(1)).as("n_occ"))
         .filter(col("n_occ") >= C4LineMinOcc)
@@ -1447,8 +1432,7 @@ object Dedup {
             lit("page top"))), col("ls")).as("ls")) // plant
         // both the per-line and per-source aggregates read base —
         // persist it or the scan + line synthesis runs twice
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Chunker.registerForCleanup(base)
+        .transform(SessionCache.persist)
       val perLine = base
         .select(col("source"), col("doc_id"), explode(col("ls")).as("line"))
         .groupBy(col("source"), col("line"))
@@ -1576,8 +1560,7 @@ object Dedup {
       val bands = capBuckets(
           minhashBandsFromTable(corpusMinhash(s, d)),
           Seq("band_idx", "band_hash"), "doc")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Chunker.registerForCleanup(bands)
+        .transform(SessionCache.persist)
       bands.as("a").join(bands.as("b"),
           col("a.band_idx") === col("b.band_idx") &&
             col("a.band_hash") === col("b.band_hash"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Event-stream semantics in batch form (SURVEY.md §2.2 Streaming row):
@@ -40,8 +41,7 @@ object EventsQueries {
         col("v_us") <= col("p_us") &&
         col("v_us") > col("p_us") - winUs)
       .withColumn("w", lit(winUs) - (col("p_us") - col("v_us")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(pairs)
+      .transform(SessionCache.persist)
     val tot = pairs.groupBy(col("purchase_id"))
       .agg(sum(col("w")).as("w_tot"), count(lit(1)).as("n_touches"))
     pairs.join(tot, Seq("purchase_id"))
@@ -247,12 +247,10 @@ object EventsQueries {
       val e = events(s, d)
         .filter(col("event_type").isin("view", "purchase"))
         .select(col("event_type"), col("user_id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(e)
+        .transform(SessionCache.persist)
       val both = e.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_types"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(both)
+        .transform(SessionCache.persist)
       val exact = both.agg(
         count(lit(1)).as("n_union_exact"),
         sum((col("n_types") === 2).cast("long")).as("n_inter_exact"))
@@ -621,8 +619,7 @@ object EventsQueries {
         .groupBy(col("h"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .withColumn("he", unix_timestamp(col("h")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(c)
+        .transform(SessionCache.persist)
       val contrib = c
         .select(col("event_type").as("et"), col("n"), col("he"),
           explode(sequence(lit(0), lit(11))).as("lag"))

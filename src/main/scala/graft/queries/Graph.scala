@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Iterative graph computation — the operator family behind link
@@ -56,14 +57,11 @@ object Graph {
     */
   def iterateToFixpoint(init: DataFrame, maxSweeps: Int)
                        (step: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var cur = init.persist(MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(cur)
+    var cur = SessionCache.persist(init)
     var sweeps = 0
     var converged = false
     while (sweeps < maxSweeps && !converged) {
-      val next = step(cur).persist(MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(next)
+      val next = SessionCache.persist(step(cur))
       // probe only while stopping can still SAVE a sweep — never after
       // the final sweep (the loop exits anyway) and never after the
       // first (a nontrivial graph always changes state on sweep 1; if
@@ -96,7 +94,7 @@ object Graph {
     * long here so every derivation agrees on the node id type.
     */
   def sharedTradeWeights(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"graph:tradew:$d") {
+    SessionCache.shared(s, s"graph:tradew:$d") {
       val co = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
         .join(customer(s, d).select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
@@ -142,8 +140,7 @@ object Graph {
                nodeCount: Long, broadcastRanks: Boolean = true): DataFrame = {
     val init = PrScale / nodeCount
     val teleport = (PrScale * 15L / 100L) / nodeCount
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+    val e = SessionCache.persist(edges)
     val pr = iterateToFixpoint(
         nodes.select(col("node"), lit(init).as("pr_micro")), iters) { pr0 =>
       // shuffle_hash hint: without it Catalyst would see the tiny test
@@ -201,8 +198,7 @@ object Graph {
   def degreeOrientEdges(und: DataFrame): DataFrame = {
     // the edge list feeds the degree build twice and the orientation
     // join once — persist it or the upstream fact joins run 3x
-    val e = und.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+    val e = SessionCache.persist(und)
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -227,8 +223,7 @@ object Graph {
     * two are count-identical by the total-order argument.
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+    val e = SessionCache.persist(edges)
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"),
@@ -265,8 +260,7 @@ object Graph {
                           broadcastLabels: Boolean = true): DataFrame = {
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(sym)
+      .transform(SessionCache.persist)
     // each round reads the label table TWICE (sweep + merge) plus the
     // convergence probe — iterateToFixpoint persists per round
     iterateToFixpoint(
@@ -309,8 +303,7 @@ object Graph {
                               broadcastLabels: Boolean = true): DataFrame = {
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(sym)
+      .transform(SessionCache.persist)
     // per round the label table feeds the sweep twice, `swept` feeds
     // the doubling self-join twice, and the probe reads the result —
     // iterateToFixpoint persists the round state, `swept` persists here
@@ -325,8 +318,7 @@ object Graph {
         .select(lab("node"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("comp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(swept)
+        .transform(SessionCache.persist)
       val y = swept.select(col("node").as("c_node"), col("comp").as("c_comp"))
       val yb = if (broadcastLabels) broadcast(y) else y.hint("shuffle_hash")
       swept.as("x")
@@ -382,8 +374,7 @@ object Graph {
   def sssp(nodes: DataFrame, edges: DataFrame, source: Long, sweeps: Int,
            broadcastDist: Boolean = true): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("cost"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     // each sweep reads the distance table twice (relax + merge) plus
     // the convergence probe — iterateToFixpoint persists per sweep
     iterateToFixpoint(
@@ -448,8 +439,7 @@ object Graph {
     * once and reused by every sweep.
     */
   def labelProp(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+    val e = SessionCache.persist(edges)
     val labels = iterateToFixpoint(
         nodes.select(col("node"), col("node").as("label")), iters) { labs =>
       val votes = e

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Multimodal column modeling (north star; SURVEY.md §2.2): semi-
@@ -247,8 +248,7 @@ object Multimodal {
     */
   def bandVerify(phashes: DataFrame): DataFrame = {
     val ph = phashes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(ph)
+      .transform(SessionCache.persist)
     val bands = ph.select(col("doc_id"),
         explode(sequence(lit(0), lit(PHashBands - 1))).as("band_idx"),
         col("phash"))
@@ -424,8 +424,7 @@ object Multimodal {
     */
   def frameBandVerify(phashes: DataFrame): DataFrame = {
     val ph = phashes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(ph)
+      .transform(SessionCache.persist)
     val bands = ph.select(col("doc_id"), col("frame_idx"),
         explode(sequence(lit(0), lit(PHashBands - 1))).as("band_idx"),
         col("phash"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Relational operator catalog (SURVEY.md §2.2): scans, filters,
@@ -151,8 +152,7 @@ object Relational {
         .groupBy(col("l_returnflag").as("f"),
           col("l_extendedprice").as("v"))
         .agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(h)
+        .transform(SessionCache.persist)
       // Both window columns ride ONE window spec (same partition AND
       // order): the group total is the running-sum spec with an
       // explicit unbounded-unbounded ROWS frame, so Spark plans a

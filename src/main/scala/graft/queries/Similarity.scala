@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Similarity search over the `embeddings` table (north star; SURVEY.md
@@ -259,8 +260,7 @@ object Similarity {
   def ivfBase(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"), col("label"),
         norm(col("embedding")).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     e
   }
 
@@ -285,8 +285,7 @@ object Similarity {
       .withColumn("crn", row_number().over(
         Window.partitionBy(col("vec_id"))
           .orderBy(col("c_cos").desc, col("cent_id"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(scored)
+      .transform(SessionCache.persist)
     scored
   }
 
@@ -350,7 +349,7 @@ object Similarity {
     * many attribution belongs.
     */
   def sharedIvfServing(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"similarity:ivf_serving:$d") {
+    SessionCache.shared(s, s"similarity:ivf_serving:$d") {
       val e = ivfBase(embeddings(s, d))
       val cents = ivfCentroids(e)
       // Cell assignment as ONE partially-aggregating argmax, not a
@@ -730,8 +729,7 @@ object Similarity {
     */
   def annNdcg(e: DataFrame, k: Int, bits: Int): DataFrame = {
     val truth = bruteTopK(e, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(truth)
+      .transform(SessionCache.persist)
     annNdcgFrom(truth, annMultiprobe(e, bits, k), k)
   }
 
@@ -747,12 +745,12 @@ object Similarity {
     * Bench/ScaleProbe; `clearAll()` drops them every pass.
     */
   def sharedAnnTruth(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"sim:ann_eval_truth:$d") {
+    SessionCache.shared(s, s"sim:ann_eval_truth:$d") {
       bruteTopK(embeddings(s, d), NdcgK)
     }
 
   def sharedAnnMultiprobe(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"sim:ann_eval_probe:$d") {
+    SessionCache.shared(s, s"sim:ann_eval_probe:$d") {
       annMultiprobe(embeddings(s, d), Q52Bits, NdcgK)
     }
 
@@ -862,14 +860,12 @@ object Similarity {
       val long = p.select(col("vec_id"),
           posexplode(array((0 until JlDim).map(j => col(s"r$j")): _*)))
         .withColumnRenamed("pos", "dim").withColumnRenamed("col", "v")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(long)
+        .transform(SessionCache.persist)
       val stats = long.groupBy(col("dim"))
         .agg(expr("percentile(v, 0.5D)").as("med"))
       val dev = long.join(broadcast(stats), Seq("dim"))
         .withColumn("adev", abs(col("v") - col("med")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(dev)
+        .transform(SessionCache.persist)
       // Iglewicz–Hoban modified z; when a dimension's MAD is 0 (over
       // half the values sit exactly at the median) fall back to the
       // MEAN absolute deviation, 1.253313·(v−med)/meanAD, instead of
@@ -915,7 +911,6 @@ object Similarity {
   def kCenterCoreset(emb: DataFrame, k: Int): DataFrame = {
     val sp = emb.sparkSession
     import sp.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = emb.select(col("vec_id"), col("embedding"))
     val seedRows = e.orderBy(col("vec_id")).limit(1)
       .as[(Long, Seq[Float])].collect()
@@ -925,8 +920,7 @@ object Similarity {
       var cur = e.select(col("vec_id"), col("embedding"),
           (lit(1.0) - cosine(col("embedding"), typedlit(seedRows.head._2)))
             .as("mind"))
-        .persist(MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(cur)
+        .transform(SessionCache.persist)
       var prev: Option[DataFrame] = None
       while (centers.size < k) {
         // the argmax pass is what materializes `cur` into the cache;
@@ -940,8 +934,7 @@ object Similarity {
               least(col("mind"),
                 lit(1.0) - cosine(col("embedding"), typedlit(next._2)))
                 .as("mind"))
-            .persist(MEMORY_AND_DISK)
-          graft.pipeline.Chunker.registerForCleanup(upd)
+            .transform(SessionCache.persist)
           prev = Some(cur); cur = upd
         } else cur.unpersist(false)
       }
@@ -961,8 +954,7 @@ object Similarity {
     val sp = emb.sparkSession
     import sp.implicits._
     val e = emb.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.pipeline.Chunker.registerForCleanup(e)
+      .transform(SessionCache.persist)
     val seed = e.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect().head

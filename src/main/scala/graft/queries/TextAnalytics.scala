@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Text analytics over the `documents` corpus (north star; SURVEY.md
@@ -475,8 +476,7 @@ object TextAnalytics {
       val exact = documents(s, d)
         .select(explode(TextOps.wordsOf(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n_exact"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(exact)
+        .transform(SessionCache.persist)
       val withCounters = (0 until CmsD).foldLeft(exact.toDF) { (acc, k) =>
         val counters = exact
           .groupBy(cmsBucket(k, col("word")).as(s"b$k"))
@@ -626,8 +626,7 @@ object TextAnalytics {
       // persisted, or the corpus is re-scanned and re-exploded for
       // each consumer (plan audit showed 4 scans without this).
       val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(dl)
+        .transform(SessionCache.persist)
       val stats = dl.agg(count(lit(1)).as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
       val tf = words.filter(col("word").isin(Bm25Terms: _*))
@@ -663,8 +662,7 @@ object TextAnalytics {
       val tf = graft.Tables.spread(documents(s, d), "doc_id") // kernel-heavy map side
         .select(col("doc_id"), explode(TextOps.wordsOf(col("text"))).as("word"))
         .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(tf)
+        .transform(SessionCache.persist)
       val dl = tf.groupBy(col("doc_id"))
         .agg(sum(col("tf")).as("dl"), count(lit(1)).as("n_distinct"))
       tf.join(dl, Seq("doc_id"))
@@ -695,8 +693,7 @@ object TextAnalytics {
       // per-source totals are all rollups of it — without this the
       // corpus is scanned and exploded four times.
       val src = words.groupBy(col("source"), col("word")).agg(count(lit(1)).as("sc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(src)
+        .transform(SessionCache.persist)
       // Corpus count per word as a WINDOW over the word partition (the
       // q179 one-exchange trick): before, a separate groupBy(word)
       // aggregate was joined back by word — TWO word-keyed exchanges of
@@ -735,8 +732,7 @@ object TextAnalytics {
       val wd = documents(s, d)
         .select(col("doc_id"), explode(array_distinct(TextOps.wordsOf(col("text"))))
           .as("word"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(wd)
+        .transform(SessionCache.persist)
       val n = documents(s, d).agg(count(lit(1)).as("n_docs"))
       val cw = wd.groupBy(col("word")).agg(count(lit(1)).as("cw"))
       val pairs = wd.as("a")
@@ -1169,8 +1165,7 @@ object TextAnalytics {
             struct(element_at(col("ws"), i + 1).as("w1"),
               element_at(col("ws"), i + 2).as("w2")))).as("b"))
         .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(bg)
+        .transform(SessionCache.persist)
       val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
       val c1 = bg.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
       val v = bg.agg(countDistinct(col("w2")).as("vsize"))
@@ -1232,8 +1227,7 @@ object TextAnalytics {
           expr(s"($PropN * n_l) div total").as("base"),
           (lit(PropN) * col("n_l") -
             expr(s"($PropN * n_l) div total") * col("total")).as("rem"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(q)
+        .transform(SessionCache.persist)
       val ranked = graft.plans.Ranks.withGlobalRanks(q,
         Seq(col("rem").desc, col("lang")), Seq(col("rem"), col("lang")),
         rankCol = "seat_rank", denseCol = "_graft_dr")
@@ -1327,11 +1321,11 @@ object TextAnalytics {
     * ENTIRE two-arm retrieval (BM25 corpus scoring + the exact dense
     * arm) per evaluation, and q161 itself re-ran the q114 BM25 lineage
     * its own row already times. Itemized under `shared:rrf_fused` in
-    * Bench/ScaleProbe; `Chunker.clearCaches()` drops it every pass, so
+    * Bench/ScaleProbe; `SessionCache.clear()` drops it every pass, so
     * each timed pass pays the build once — not cross-run caching.
     */
   def sharedRrfFused(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.Chunker.sharedTable(s, s"text:rrf_fused:$d") {
+    SessionCache.shared(s, s"text:rrf_fused:$d") {
       rrfFuseWith(s, d, rrfDenseExact(s, d))
     }
 
@@ -1372,8 +1366,7 @@ object TextAnalytics {
             filter(split(col("word"), ""), c => length(c) > 0),
             c => concat(lit("|"), c, lit("|"))), " "),
           lit(" |</w>|")).as("repr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(cur)
+        .transform(SessionCache.persist)
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       var exhausted = false
       for (step <- 1 to steps if !exhausted) {
@@ -1412,12 +1405,7 @@ object TextAnalytics {
               if (truncateEvery > 0) {
                 if (step % truncateEvery == 0) stepped.localCheckpoint(true)
                 else stepped
-              } else {
-                val p = stepped.persist(
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                graft.pipeline.Chunker.registerForCleanup(p)
-                p
-              }
+              } else SessionCache.persist(stepped)
             cur = next
         }
         onStep(step, System.nanoTime() - stepT0) // per-step wall, for the

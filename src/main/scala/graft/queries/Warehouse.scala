@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionCache
 import graft.Tables._
 
 /** Warehouse-maintenance operators over the orders change log: the
@@ -112,8 +113,7 @@ object Warehouse {
     "q120_chi_square" -> ((s, d) => {
       val counts = documents(s, d)
         .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("obs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.Chunker.registerForCleanup(counts)
+        .transform(SessionCache.persist)
       val rows = counts.groupBy(col("lang")).agg(sum(col("obs")).as("n_l"))
       val cols = counts.groupBy(col("source")).agg(sum(col("obs")).as("n_s"))
       val tot = counts.agg(sum(col("obs")).as("n_tot"))

@@ -46,7 +46,7 @@ object PhaseProbe {
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 
     def clearAll(): Unit = {
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
       spark.catalog.clearCache()
     }
 

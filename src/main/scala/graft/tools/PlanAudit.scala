@@ -166,7 +166,7 @@ object PlanAudit {
     // over full rows, so projections are not pruned) and walk the FINAL
     // adaptively re-optimized plan. The `aqe Δjoins` column shows the
     // runtime join mix; `skew` counts skew-split shuffle reads.
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
     spark.catalog.clearCache()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     val adaptive = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -189,7 +189,7 @@ object PlanAudit {
         s"| ${sh.wscg} | ${sh.scans} (${sh.pushed}) | ${sh.windows} | ${sh.aggs} " +
         s"| ${a.shuffles} | $aqeJoins | ${a.skewReads} |"
     }
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
     spark.stop()
     val header = Seq(
       "| query | bench s | shuffles | bcasts | joins SMJ/BHJ/SHJ/BNLJ | codegen spans | scans (w/ pushdown) | windows | aggs | aqe shuffles | aqe joins | aqe skew splits |",

@@ -226,7 +226,7 @@ object ScaleProbe {
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def clearAll(): Unit = {
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
       spark.catalog.clearCache()
     }
     // deterministic telemetry cut-off: drain the async listener bus

@@ -170,7 +170,7 @@ object VideoScaleBench {
         if (decoder == "avi_mjpeg") graft.multimodal.AviMjpegFrames
         else graft.multimodal.IdentityFrames
       val walls = (1 to passes).map { _ =>
-        graft.pipeline.Chunker.clearCaches()
+        graft.SessionCache.clear()
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         materialize(graft.queries.Multimodal.videoPhashNeardup(blobs, dec))
@@ -179,10 +179,10 @@ object VideoScaleBench {
       // the suite's across-pass statistic (ADVICE r14 #5): trimmed
       // mean at >=4 passes, true median below — never the min
       val wall = graft.Bench.stat(walls)
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
       val pairs =
         graft.queries.Multimodal.videoPhashNeardup(blobs, dec).count()
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
       val arm = Arm(n, n / 4, walls, wall, pairs, decoder)
       System.err.println(f"VIDEOBENCH $decoder n=$n wall=$wall%.2f s " +
         f"(passes ${walls.map(w => f"$w%.2f").mkString("/")}) " +

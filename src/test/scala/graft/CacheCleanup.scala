@@ -3,7 +3,7 @@ package graft
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Mixed into every suite whose operators persist intermediates via
-  * `Chunker.registerForCleanup` (iterative graph sweeps, minhash/LSH
+  * `SessionCache.persist` (iterative graph sweeps, minhash/LSH
   * tables, k-means label tables, ...): drop them when the suite ends.
   * The test JVM hosts ~28 suites back-to-back — without this, cached
   * relations accumulate for the whole run and the heap eventually
@@ -12,7 +12,7 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   */
 trait CacheCleanup extends BeforeAndAfterAll { self: Suite =>
   abstract override def afterAll(): Unit = {
-    try graft.pipeline.Chunker.clearCaches()
+    try graft.SessionCache.clear()
     finally super.afterAll()
   }
 }

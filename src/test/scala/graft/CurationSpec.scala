@@ -315,7 +315,7 @@ class CurationSpec extends AnyFunSuite {
     assert(exact.keySet == Set(trainIds(0), trainIds(1)),
       s"fixture must contaminate exactly the two planted docs: $exact")
     assert(gated == exact)
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q207 keep rule equals a sequential recompute AND the published Pareto form") {
@@ -377,7 +377,7 @@ class CurationSpec extends AnyFunSuite {
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("p_curated")).toMap
     assert(byId(100L) > byId(101L),
       s"curated-vocab raw doc must outscore junk: $byId")
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q211 budget cut equals the sequential greedy-by-density " +
@@ -409,7 +409,7 @@ class CurationSpec extends AnyFunSuite {
     assert(got == expected,
       s"diverges: missing=${(expected.toSet -- got.toSet).take(3)} " +
         s"extra=${(got.toSet -- expected.toSet).take(3)}")
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q211 budget cut equals the sequential greedy on RANDOM corpora " +
@@ -447,7 +447,7 @@ class CurationSpec extends AnyFunSuite {
         .map(r => r.getAs[String]("source") ->
           ((r.getAs[Long]("n_sel"), r.getAs[Long]("tok_sel")))).toMap
       assert(got == expected, s"seed $seed diverges: got=$got want=$expected")
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
     }
   }
 }

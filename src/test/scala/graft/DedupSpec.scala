@@ -534,7 +534,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
           BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
           s"seed=$seed pair ($a,$b)")
       }
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
     }
   }
 
@@ -584,7 +584,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
           ((r.getAs[Long]("n_words_in"), r.getAs[Long]("n_words_kept"),
             r.getAs[String]("kept_hash")))).toMap
       assert(got == expected, s"seed=$seed")
-      graft.pipeline.Chunker.clearCaches()
+      graft.SessionCache.clear()
     }
   }
 

@@ -204,7 +204,7 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     assert(graft.queries.Multimodal.phashNeardup(noDocs2).count() == 0)
     val short2 = (1L to 20L).map(i => (i, "too short")).toDF("doc_id", "text")
     assert(graft.queries.Curation.bloomDecontaminate(short2).count() == 0)
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("round-7 wave-3+ operators on empty inputs") {

@@ -128,7 +128,7 @@ class MultimodalSpec extends AnyFunSuite {
       "unrelated blob must not pair")
     assert(java.lang.Long.bitCount(got(1L) ^ got(4L)) >
       Multimodal.PHashMaxHam)
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   /** Synthesize an uncompressed 24-bit bottom-up BMP; px(x, y) gives the
@@ -208,7 +208,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(viaBmp(1L) ==
       graft.expressions.MediaPhash.phash(BmpLuma.decode(original),
         Multimodal.PHashCells))
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   // ---- JDK-codec decoders (JpegLuma / PngLuma) ---------------------
@@ -283,7 +283,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"inverted image must not pair: $pairs")
     // the seam is format-honest: a JPEG decoder refuses PNG bytes
     intercept[IllegalArgumentException](JpegLuma.decode(pngBytes(srcImg)))
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("PngLuma is lossless: same pixels through PNG and BMP decode " +
@@ -475,7 +475,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"gain-doubled WAV must pair at hamming 0: $pairs")
     assert(!pairs.keySet.exists(p => p._1 == 3L || p._2 == 3L),
       s"the phase-inverted envelope must not pair: $pairs")
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("audio_resample: signed window means equal an independent fold " +
@@ -598,7 +598,7 @@ class MultimodalSpec extends AnyFunSuite {
       .videoPhashNeardup(blobs, AviMjpegFrames).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs == Set((2L, 3L), (6L, 7L)), s"got $pairs")
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q217 identity sampling: temporally-aligned sampled frames drive " +
@@ -634,7 +634,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(viaDecoder.length == nf)
     assert(viaDecoder.zipWithIndex.forall { case (f, k) =>
       f.sameElements(base.slice(k * c, (k + 1) * c)) })
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q217 pipeline with a REAL container decoder: a per-frame " +
@@ -672,7 +672,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(pairs((1L, 2L)) <= 3, "only the sampled frames (0,2,4) can match")
     assert(!pairs.keySet.exists(p => p._1 == 3L || p._2 == 3L),
       s"the inverted video must not pair: $pairs")
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("q214 through BmpLuma: a constant-color image resizes to " +

@@ -278,7 +278,7 @@ class PlanGuardSpec extends AnyFunSuite {
       }
     }
     // free the persisted intermediates the constructions registered
-    pipeline.Chunker.clearCaches()
+    SessionCache.clear()
     assert(offenders.isEmpty,
       s"scale-killer shapes found:\n${offenders.mkString("\n")}")
     assert(badShapes.isEmpty,
@@ -309,7 +309,7 @@ class PlanGuardSpec extends AnyFunSuite {
       }
       inspect(name, df.queryExecution.executedPlan, offenders)
     }
-    pipeline.Chunker.clearCaches()
+    SessionCache.clear()
     assert(offenders.isEmpty,
       s"scale-killer shapes in FINAL adaptive plans:\n${offenders.mkString("\n")}")
     assert(unfinalized.isEmpty,

@@ -32,7 +32,7 @@ object PlanProbe {
           println(chain(build).mkString(" -> "))
         case _ =>
       }
-      pipeline.Chunker.clearCaches()
+      SessionCache.clear()
     }
     spark.stop()
   }

@@ -69,7 +69,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
   test("shuffle-heavy catalog outputs are identical under injected task retries") {
     val d = TestSpark.sf0001
     val clean = Targets.map { n =>
-      pipeline.Chunker.clearCaches(); spark.catalog.clearCache()
+      SessionCache.clear(); spark.catalog.clearCache()
       n -> digest(SparkEntry.queries(n)(spark, d))
     }.toMap
     RetryChaosCounters.injected.set(0)
@@ -77,7 +77,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
     Tables.chaos = Some(failFirstAttempt)
     try {
       val chaos = Targets.map { n =>
-        pipeline.Chunker.clearCaches(); spark.catalog.clearCache()
+        SessionCache.clear(); spark.catalog.clearCache()
         n -> digest(SparkEntry.queries(n)(spark, d))
       }.toMap
       assert(RetryChaosCounters.injected.get > 0,
@@ -92,7 +92,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
       }
     } finally {
       Tables.chaos = None
-      pipeline.Chunker.clearCaches(); spark.catalog.clearCache()
+      SessionCache.clear(); spark.catalog.clearCache()
     }
     println(s"RetryDeterminismSpec: injected=${RetryChaosCounters.injected.get} " +
       s"retried=${RetryChaosCounters.retried.get} over ${Targets.size} queries")

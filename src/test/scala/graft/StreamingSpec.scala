@@ -547,7 +547,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // (ids 100..163) on each band, never 68
     val lastFlood = got.filter(c => c._1 == 169L && c._3 == 0).map(_._2)
     assert(lastFlood == (100L to 163L).toSet)
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 
   test("BOUNDED streaming gate == batch twin q218 across micro-batches: " +
@@ -594,6 +594,6 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // members (105..168), not the first 64 the unbounded gate keeps
     val lastFlood = got.filter(c => c._1 == 169L && c._3 == 0).map(_._2)
     assert(lastFlood == (105L to 168L).toSet)
-    graft.pipeline.Chunker.clearCaches()
+    graft.SessionCache.clear()
   }
 }
