@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR,
@@ -102,53 +101,21 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries; this catalog generates ~2,000 distinct codegen units
-      // per pass, so at the default EVERY query re-Janino-compiles all
-      // its generated classes on EVERY evaluation (PhaseProbe r15:
-      // per-rep compile counts of 60/67/44 for q119/q166/q80 with the
-      // identical source text, ~0.4-0.7 s per query per pass). Sizing
-      // the cache to the workload turns repeat evaluations into cache
-      // hits — a compiler-artifact cache keyed on generated SOURCE,
-      // never on data or results (every pass still recomputes from
-      // parquet; Bench's clearAll() wipes all data caches). Not a
-      // local[32] tune: any driver serving a many-query workload needs
-      // the same (the compiled-class footprint is a few hundred MB at
-      // worst, driver-side only).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val passes = Harness.passes(5)
+    val spark = Harness.session(cpus)
 
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    def clearAll(): Unit = {
-      SessionCache.clear() // unpersist + forget (not just unpersist)
-      spark.catalog.clearCache()
-    }
-
-    // Dev aid: SPARK_GRAFT_ONLY=q61,q41 restricts the suite to queries
-    // whose name starts with a listed prefix. The driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
-    if (warmDir.nonEmpty) {
-      SparkEntry.sharedBuilds.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case NonFatal(_) => () } }
-      names.foreach { n =>
-        try materialize(SparkEntry.queries(n)(spark, warmDir))
-        catch { case NonFatal(_) => () }
-      }
-    }
+    val keep = Harness.only()
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(keep)
+    // Shared memoized builds (SessionCache.shared) are materialized
+    // FIRST each pass under their own named timers, so the build cost
+    // of a train-once-serve-many intermediate no longer lands on
+    // whichever consumer query runs first in alphabetical order
+    // (VERDICT r9 "what's wrong" #1: q84/q80-class numbers swung 3-10x
+    // round-over-round purely from attribution).
+    val shared = SparkEntry.sharedBuilds.filter(kv => keep(kv._1))
+    val entries = shared ++ names.map(n => n -> SparkEntry.queries(n))
+    if (warmDir.nonEmpty) Harness.warmUp(spark, warmDir, entries)
 
     var errors = Map.empty[String, String]
     def timeOne(name: String)(body: => Unit): (String, Double) = {
@@ -160,37 +127,17 @@ object Bench {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // Shared memoized builds (SessionCache.shared) are materialized
-    // FIRST each pass under their own named timers, so the build cost
-    // of a train-once-serve-many intermediate no longer lands on
-    // whichever consumer query runs first in alphabetical order
-    // (VERDICT r9 "what's wrong" #1: q84/q80-class numbers swung 3-10x
-    // round-over-round purely from attribution). A filtered dev run
-    // times its queries standalone.
-    val shared = if (only.isEmpty) SparkEntry.sharedBuilds else Nil
     val timings = (1 to passes).map { _ =>
-      clearAll()
-      (shared.map { case (name, fn) => timeOne(name)(materialize(fn(spark, sfDir))) } ++
-        names.map(n => timeOne(n)(materialize(SparkEntry.queries(n)(spark, sfDir))))).toMap
+      Harness.clear(spark)
+      entries.map { case (n, fn) => timeOne(n)(Harness.materialize(fn(spark, sfDir))) }.toMap
     }
-    val summary = summarize(timings, shared.map(_._1) ++ names, errors.keySet)
+    val summary = summarize(timings, entries.map(_._1), errors.keySet)
 
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Millisecond precision: 17-digit doubles made the r3/r4 one-line
-    // JSON outgrow the driver's tail-capture window (parsed: null both
-    // rounds); 130 queries at 3 decimals fit comfortably. Plain decimal
-    // string, never scientific notation.
-    def jnum(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    import Harness.{num, str}
     def jmap(m: Seq[(String, Double)]) =
-      m.map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${jnum(summary.value)},"value_min":${jnum(summary.valueMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"errors":$es,"sf":"$sfDir"}"""
+      m.map { case (k, v) => str(k) + ":" + num(v) }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":${num(summary.value)},"value_min":${num(summary.valueMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"errors":$es,"sf":"$sfDir"}"""
     // The full per-query line outgrew the driver's 2000-char stdout tail
     // window at ~136 queries (r3/r4/r5 all recorded parsed:null because
     // the line's HEAD — "{"metric":... — fell outside the window). So:
@@ -208,7 +155,7 @@ object Bench {
     // (VERDICT r15 #8); the full-core canonical run keeps the plain
     // name.
     val repoDetail = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPO_OUT",
-      if (cpus.toInt == Runtime.getRuntime.availableProcessors()) "BENCH_detail.json"
+      if (cpus == Runtime.getRuntime.availableProcessors()) "BENCH_detail.json"
       else s"BENCH_detail_c$cpus.json")
     for (p <- Seq(detailPath, repoDetail).distinct)
       try java.nio.file.Files.write(java.nio.file.Paths.get(p),
@@ -216,7 +163,7 @@ object Bench {
       catch { case NonFatal(e) => System.err.println(s"bench detail write failed ($p): $e") }
     println(line)
     spark.stop()
-    val compact = s"""{"metric":"total","value":${jnum(summary.value)},"unit":"sec","passes":${timings.size},"n_queries":${summary.queries.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
+    val compact = s"""{"metric":"total","value":${num(summary.value)},"unit":"sec","passes":${timings.size},"n_queries":${summary.queries.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
     println(compact)
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -29,15 +28,9 @@ object Cli {
     val file = args(1)
     val keyword = if (args.length > 2) args(2) else "keep"
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-cli")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus,
+      "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"),
+      "spark.app.name" -> "graft-cli")
 
     val corpus = TextCorpus.lines(spark, file)
 

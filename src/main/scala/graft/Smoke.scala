@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke driver: runs the flagship entry + edge probes through the
   * public API exactly as the round driver would. Not part of the driver
   * contract; kept for fast end-to-end checks between rounds.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // catalog-sized codegen class cache — see the Bench builder note
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4)
     import spark.implicits._
 
     val df = SparkEntry.entry(spark)

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+
 /** Structured Streaming forms of the event-window queries (SURVEY.md
   * §2.2 Streaming): the SAME `window()` / `session_window()` expressions
   * as the batch catalog (graft.queries.EventsQueries q35/q37), run over
@@ -219,15 +221,15 @@ object StreamingJobs {
         .start()
       query.awaitTermination()
       spark.table(queryName)
-    } finally deleteRecursively(dir) // memory sink holds the result; the
-    q                                // staged source is no longer needed
+    } finally Harness.deleteTree(dir) // memory sink holds the result; the
+    q                                 // staged source is no longer needed
   }
 
   /** Stage one batch DataFrame as a single parquet file in `dir`, with a
     * deterministic monotone mtime so the file source processes batches
     * in sequence order (its listing order is mtime).
     */
-  private def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
+  private[graft] def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-inc-stage")
     b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -240,7 +242,7 @@ object StreamingJobs {
     Files.move(part, dest)
     Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    deleteRecursively(tmp)
+    Harness.deleteTree(tmp)
   }
 
   /** Checkpoint-restart recovery — the streaming twin of the batch memo
@@ -295,7 +297,7 @@ object StreamingJobs {
     val outSchema = mkAgg(mkSrc()).schema
     val rows = spark.read.schema(outSchema).parquet(outDir.toString)
       .collect().toSeq
-    Seq(srcDir, ckpt, outDir).foreach(deleteRecursively)
+    Seq(srcDir, ckpt, outDir).foreach(Harness.deleteTree)
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -324,13 +326,6 @@ object StreamingJobs {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally deleteRecursively(dir)
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    finally walk.close()
+    } finally Harness.deleteTree(dir)
   }
 }

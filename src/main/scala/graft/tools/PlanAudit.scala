@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Generates `PLANS.md`: a per-query PHYSICAL-PLAN SHAPE audit over the
@@ -143,18 +142,10 @@ object PlanAudit {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outMd = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
     val benchPath = if (args.length > 2) args(2) else "/root/repo/BENCH_detail.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE defers codegen collapse (and can elide exchanges) until
-      // stages materialize — audit the STATIC plan so codegen spans
-      // and exchange counts reflect the full pre-runtime shape
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE defers codegen collapse (and can elide exchanges) until
+    // stages materialize — audit the STATIC plan so codegen spans
+    // and exchange counts reflect the full pre-runtime shape
+    val spark = graft.Harness.session(8, "spark.sql.adaptive.enabled" -> "false")
     val times = benchTimes(benchPath)
     val static = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> shapeOf(fn(spark, sfDir).queryExecution.executedPlan)
@@ -166,8 +157,7 @@ object PlanAudit {
     // over full rows, so projections are not pruned) and walk the FINAL
     // adaptively re-optimized plan. The `aqe Δjoins` column shows the
     // runtime join mix; `skew` counts skew-split shuffle reads.
-    graft.SessionCache.clear()
-    spark.catalog.clearCache()
+    graft.Harness.clear(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     val adaptive = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sfDir)

@@ -48,14 +48,7 @@ object ScaleGen {
     // or "facts" (trade facts + events — added round 9 so the existing
     // x10/x30 corpora need not be regenerated to gain the new tables)
     val arm = if (args.length > 3) args(3) else "all"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(32)
     try {
       if (arm == "all" || arm == "corpus") generate(spark, srcDir, outDir, factor)
       if (arm == "all" || arm == "facts") generateFacts(spark, srcDir, outDir, factor)

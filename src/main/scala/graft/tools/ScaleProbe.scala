@@ -3,7 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.Harness
 
 /** Empirical scale probe (VERDICT r7 #5, widened r9 #2/#3, widened to
   * the FULL catalog r10 #1): run catalog queries once at sf0.1 and once
@@ -171,11 +172,8 @@ object ScaleProbe {
          |usage: ScaleProbe [<baseDir>] [<outMd>] [<bigDir>:<factor> ...]
          |  defaults: baseDir=/root/testdata/sf0.1 outMd=/root/repo/SCALE.md
          |            bigs=/root/repo/scaleprobe/x10:10
-         |  (legacy 3-arg form `<baseDir> <bigDir> <factor>` still accepted;
-         |   a 2nd arg ending in .md is the output file, otherwise it is a
-         |   10x corpus dir)
-         |env: SPARK_GRAFT_SCALE_PASSES (default 2),
-         |     SPARK_GRAFT_SCALE_ONLY=q151,... (prefix filter),
+         |env: SPARK_GRAFT_PASSES (default 2),
+         |     SPARK_GRAFT_ONLY=q151,... (prefix filter),
          |     SPARK_GRAFT_SCALE_FULL=0 (headliners only at every factor)""".stripMargin)
     sys.exit(2)
   }
@@ -200,35 +198,15 @@ object ScaleProbe {
     val (baseDir, outMd, bigs) = args.toSeq match {
       case Seq() => (DefaultBase, DefaultOut, DefaultBigs)
       case Seq(b) => (b, DefaultOut, DefaultBigs)
-      case Seq(b, second) =>
-        if (second.endsWith(".md")) (b, second, DefaultBigs)
-        else (b, DefaultOut, Seq(second -> 10))
-      case Seq(b, big, f) if f.forall(_.isDigit) && f.nonEmpty => // legacy
-        (b, DefaultOut, Seq(big -> f.toInt))
+      case Seq(b, out) => (b, out, DefaultBigs)
       case Seq(b, out, rest @ _*) => (b, out, rest.map(parseBig))
     }
-    if (bigs.isEmpty) usage("no <bigDir>:<factor> given")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "2").toInt
+    val passes = Harness.passes(2)
     val fullSweep = sys.env.getOrElse("SPARK_GRAFT_SCALE_FULL", "1") != "0"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // catalog-sized codegen class cache — see the Bench builder note
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val tele = new Telemetry
     spark.sparkContext.addSparkListener(tele)
 
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def clearAll(): Unit = {
-      graft.SessionCache.clear()
-      spark.catalog.clearCache()
-    }
     // deterministic telemetry cut-off: drain the async listener bus
     // before reading counters (late events mis-attributed ~query-sized
     // byte counts under the old fixed sleep)
@@ -238,17 +216,10 @@ object ScaleProbe {
       catch { case _: java.util.concurrent.TimeoutException =>
         System.err.println("SCALEPROBE WARN listener bus drain timed out") }
 
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def keep(n: String) = only.forall(_.exists(n.startsWith))
+    val keep = Harness.only()
     val headNames = Headliners.map(_._2).filter(keep)
     val allNames = graft.SparkEntry.queries.keys.toSeq.sorted.filter(keep)
-    // filtered dev runs time queries standalone, but a shared row can
-    // opt IN by prefix (e.g. ONLY=shared:ivf_serving,q62 measures the
-    // build and the serving row under their own timers, Bench-style)
-    val shared: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (only.isEmpty) graft.SparkEntry.sharedBuilds
-      else graft.SparkEntry.sharedBuilds.filter(kv => keep(kv._1))
+    val shared = graft.SparkEntry.sharedBuilds.filter(kv => keep(kv._1))
     val needFull = fullSweep && bigs.exists(_._2 <= FullSweepMaxFactor)
     val warmNames = if (needFull) allNames else headNames
 
@@ -260,7 +231,7 @@ object ScaleProbe {
     // of spill re-measuring a contract the 10× row already pins) —
     // and excluded above it; their PRODUCTION twins (q52/q62/q190/
     // q200, the AnnSubstitutionSpec substitution) stay in every sweep.
-    def entriesFor(factor: Int): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
+    def entriesFor(factor: Int): Seq[Harness.Entry] = {
       val names0 = if (fullSweep && factor <= FullSweepMaxFactor) allNames else headNames
       val names = if (factor <= 10) names0
         else names0.filterNot(ExactBaselines.contains)
@@ -271,12 +242,10 @@ object ScaleProbe {
       sharedFor ++ names.map(n => n -> graft.SparkEntry.queries(n))
     }
 
-    shared.foreach { case (_, fn) =>
-      try materialize(fn(spark, "/root/testdata/sf0.001"))
-      catch { case scala.util.control.NonFatal(_) => () } }
-    warmNames.foreach(n =>
-      try materialize(graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
-      catch { case scala.util.control.NonFatal(_) => () })
+    // warm-up corpus: the sf0.001 fixture beside the default sf0.1 base
+    val warmDir = java.nio.file.Paths.get(DefaultBase).resolveSibling("sf0.001").toString
+    Harness.warmUp(spark, warmDir,
+      shared ++ warmNames.map(n => n -> graft.SparkEntry.queries(n)))
 
     // a per-query failure (e.g. a disk-filling spill) must not lose the
     // other measurements — record it as NaN and keep probing.
@@ -288,14 +257,14 @@ object ScaleProbe {
     // queries, so ratios stay comparable.
     def time(dir: String, factor: Int): Map[String, Measure] =
       (1 to passes).map { p =>
-        clearAll()
+        Harness.clear(spark)
         spark.conf.set("spark.sql.shuffle.partitions",
           (32 * math.max(1, math.ceil(factor / 10.0).toInt)).toString)
         entriesFor(factor).map { case (n, fn) =>
           tele.reset()
           val t0 = System.nanoTime()
           val sec = try {
-            materialize(fn(spark, dir))
+            Harness.materialize(fn(spark, dir))
             (System.nanoTime() - t0) / 1e9
           } catch {
             case scala.util.control.NonFatal(e) =>

@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+import graft.streaming.StreamingJobs
+
 /** Streaming micro-bench (VERDICT r8 #5): measured rows/s and
   * state-store footprint across micro-batches for the stateful
   * streaming surfaces — `transformWithState` running stats,
@@ -37,29 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamBench {
 
-  private def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft-sbench-stage")
-    b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val listing = Files.list(tmp)
-    val part =
-      try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst.get
-      finally listing.close()
-    val dest = dir.resolve(f"batch-$i%05d.parquet")
-    Files.move(part, dest)
-    Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    deleteRecursively(tmp)
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    finally walk.close()
-  }
-
   final case class BatchPoint(batch: Long, rows: Long, ms: Long,
                               stateRows: Long, stateBytes: Long,
                               planMs: Long, addBatchMs: Long, commitMs: Long,
@@ -71,13 +51,9 @@ object StreamBench {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "/root/repo/BENCH_streaming.json"
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "8").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Harness.session(32,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // Changelog checkpointing: commit uploads a per-batch changelog
       // instead of a full RocksDB snapshot (snapshots move to background
       // maintenance). Diagnosed in r11 via the per-batch state_commit_ms
@@ -86,10 +62,33 @@ object StreamBench {
       // cumulative per batch on ~5k flat state rows — changelog mode
       // cut wall 41.2 s -> 29.2 s (+41% rows/s) on the same arm. This
       // is the production setting for every stateful job here.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sbench")
+    val runs = try measureAll(spark, sfDir, nBatches, tmp)
+      finally Harness.deleteTree(tmp)
+    spark.stop()
+
+    val js = runs.map { r =>
+      val pts = r.points.map(p =>
+        s"""{"batch":${p.batch},"rows":${p.rows},"ms":${p.ms},""" +
+          s""""state_rows":${p.stateRows},"state_bytes":${p.stateBytes},""" +
+          s""""plan_ms":${p.planMs},"add_batch_ms":${p.addBatchMs},""" +
+          s""""commit_ms":${p.commitMs},"state_commit_ms":${p.stateCommitMs}}""")
+        .mkString("[", ",", "]")
+      s""""${r.name}":{"rows_in":${r.rowsIn},"rows_out":${r.rowsOut},""" +
+        s""""wall_s":${Harness.num(r.wallSec)},""" +
+        s""""rows_per_s":${Harness.num(r.rowsIn / r.wallSec)},"batches":$pts}"""
+    }.mkString("{", ",", "}")
+    val line = s"""{"metric":"streaming","sf":"$sfDir","n_batches":$nBatches,""" +
+      s""""state_store":"rocksdb","workloads":$js}"""
+    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
+      (line + "\n").getBytes("UTF-8"))
+    println(line)
+  }
+
+  /** Stages the input slices under `tmp` and runs every arm. */
+  private def measureAll(spark: SparkSession, sfDir: String, nBatches: Int,
+                         tmp: java.nio.file.Path): Seq[Run] = {
     import spark.implicits._
 
     // chronological slices: the file source replays them in mtime order,
@@ -98,9 +97,10 @@ object StreamBench {
       .withColumn("slice",
         ntile(nBatches).over(org.apache.spark.sql.expressions.Window
           .orderBy(col("ts"), col("event_id"))))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-sbench-src")
+    def dir(name: String) = java.nio.file.Files.createDirectory(tmp.resolve(name))
+    val srcDir = dir("src")
     (1 to nBatches).foreach(i =>
-      stageBatch(srcDir, ev.filter(col("slice") === i).drop("slice"), i - 1))
+      StreamingJobs.stageBatch(srcDir, ev.filter(col("slice") === i).drop("slice"), i - 1))
     // KEY-CARDINALITY arms (VERDICT r9 #7): same rows, different key
     // structure — the state stores must scale with KEYS, not rows, and
     // a hot key must not stall a micro-batch.
@@ -108,16 +108,16 @@ object StreamBench {
     //    per-user state population grows ~10× at identical row count;
     //  - skewed: ~90% of rows land on ONE hot user (the remainder keep
     //    their key), so one task owns a corpus-sized key group.
-    val keys10Dir = java.nio.file.Files.createTempDirectory("graft-sbench-k10")
-    val skewDir = java.nio.file.Files.createTempDirectory("graft-sbench-skew")
+    val keys10Dir = dir("k10")
+    val skewDir = dir("skew")
     val evK10 = ev.withColumn("user_id",
       col("user_id") * 10 + pmod(col("event_id"), lit(10)))
     val evSkew = ev.withColumn("user_id",
       when(pmod(col("event_id"), lit(10)) === 0, col("user_id"))
         .otherwise(lit(0L)))
     (1 to nBatches).foreach { i =>
-      stageBatch(keys10Dir, evK10.filter(col("slice") === i).drop("slice"), i - 1)
-      stageBatch(skewDir, evSkew.filter(col("slice") === i).drop("slice"), i - 1)
+      StreamingJobs.stageBatch(keys10Dir, evK10.filter(col("slice") === i).drop("slice"), i - 1)
+      StreamingJobs.stageBatch(skewDir, evSkew.filter(col("slice") === i).drop("slice"), i - 1)
     }
     // documents stream for the q208 near-dup ingestion gate: id-ordered
     // slices (arrival = id order, the gate's parity contract). The raw
@@ -148,9 +148,9 @@ object StreamBench {
       .withColumn("slice",
         ntile(nBatches).over(org.apache.spark.sql.expressions.Window
           .orderBy(col("doc_id"))))
-    val docsDir = java.nio.file.Files.createTempDirectory("graft-sbench-docs")
+    val docsDir = dir("docs")
     (1 to nBatches).foreach(i =>
-      stageBatch(docsDir, docs.filter(col("slice") === i).drop("slice"), i - 1))
+      StreamingJobs.stageBatch(docsDir, docs.filter(col("slice") === i).drop("slice"), i - 1))
     // fanned ids are contiguous 0..N-1, so the row count doubles as the
     // event-time span (ts = doc_id ms) for the bounded-gate horizon
     val docsTotal = spark.read.parquet(docsDir.toString).count()
@@ -197,11 +197,7 @@ object StreamBench {
       Run(name, rowsIn, out, wall, pts)
     }
 
-    // Dev aid (mirrors Bench's SPARK_GRAFT_ONLY): restrict the suite to
-    // arms whose name starts with a listed prefix. Never set by the
-    // pinned-run recipe.
-    val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val keep = Harness.only()
     // Production state-partition size for the gate arms (VERDICT r14
     // #5): the canonical gate arms run at the AUTO-computed size — the
     // sizing rule a deployment gets by default — after the r13 A/B
@@ -270,7 +266,7 @@ object StreamBench {
         srcFrom(skewDir).select(col("user_id"), col("event_type"),
           col("event_id"), unix_micros(col("ts")).as("ts_us"))
           .as[graft.streaming.KeyedEvent]).toDF(), None))
-      .filter { case (n, _, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _, _) => keep(n) }
 
     // warmup: run the cheapest workload once so JVM/codegen/RocksDB
     // startup cost lands outside the recorded numbers
@@ -298,8 +294,7 @@ object StreamBench {
     // frozen from it at first start), so a throwing arm cannot leave
     // the session at the experimental size for everything after it
     // (ADVICE r13, r14 #3).
-    val runsP8 = if (only.forall(_.exists(p =>
-      "neardup_gate_p8".startsWith(p))))
+    val runsP8 = if (keep("neardup_gate_p8"))
       graft.streaming.StatefulNeardupGate.withStatePartitions(spark, Some(8)) {
         Seq(measure("neardup_gate_p8",
           graft.streaming.StatefulNeardupGate.gateStream(docsSrc()).toDF()))
@@ -311,38 +306,12 @@ object StreamBench {
     // oversized for fixture batches, each store paying per-batch
     // machinery on too few rows. Kept so the artifact still pins the
     // auto-vs-default delta every re-run.
-    val runsD32 = if (only.forall(_.exists(p =>
-      "neardup_gate_d32".startsWith(p))))
+    val runsD32 = if (keep("neardup_gate_d32"))
       graft.streaming.StatefulNeardupGate.withStatePartitions(spark, Some(32)) {
         Seq(measure("neardup_gate_d32",
           graft.streaming.StatefulNeardupGate.gateStream(docsSrc()).toDF()))
       }
     else Nil
-    val runs = runs0 ++ runsP8 ++ runsD32
-
-    deleteRecursively(srcDir)
-    deleteRecursively(keys10Dir)
-    deleteRecursively(skewDir)
-    deleteRecursively(docsDir)
-    spark.stop()
-
-    def jnum(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val js = runs.map { r =>
-      val pts = r.points.map(p =>
-        s"""{"batch":${p.batch},"rows":${p.rows},"ms":${p.ms},""" +
-          s""""state_rows":${p.stateRows},"state_bytes":${p.stateBytes},""" +
-          s""""plan_ms":${p.planMs},"add_batch_ms":${p.addBatchMs},""" +
-          s""""commit_ms":${p.commitMs},"state_commit_ms":${p.stateCommitMs}}""")
-        .mkString("[", ",", "]")
-      s""""${r.name}":{"rows_in":${r.rowsIn},"rows_out":${r.rowsOut},""" +
-        s""""wall_s":${jnum(r.wallSec)},""" +
-        s""""rows_per_s":${jnum(r.rowsIn / r.wallSec)},"batches":$pts}"""
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"streaming","sf":"$sfDir","n_batches":$nBatches,""" +
-      s""""state_store":"rocksdb","workloads":$js}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
+    runs0 ++ runsP8 ++ runsD32
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness
 
 /** Measured throughput for the REAL-CODEC video near-dup path
   * (VERDICT r13 #4): q217's catalog row rides the identity frame stub
@@ -143,14 +143,8 @@ object VideoScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val outJson = if (args.length > 2) args(2)
       else "/root/repo/BENCH_video.json"
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val passes = Harness.passes(3)
+    val spark = Harness.session(32)
     import spark.implicits._
 
     def gen(n: Long, dir: java.nio.file.Path): Unit =
@@ -158,9 +152,6 @@ object VideoScaleBench {
         .map(id => (id.toLong, blobFor(id)))
         .toDF("doc_id", "media")
         .write.mode("overwrite").parquet(dir.toString)
-
-    def materialize(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     final case class Arm(videos: Long, planted: Long, walls: Seq[Double],
                          wallSec: Double, pairsFound: Long, decoder: String)
@@ -170,10 +161,9 @@ object VideoScaleBench {
         if (decoder == "avi_mjpeg") graft.multimodal.AviMjpegFrames
         else graft.multimodal.IdentityFrames
       val walls = (1 to passes).map { _ =>
-        graft.SessionCache.clear()
-        spark.catalog.clearCache()
+        Harness.clear(spark)
         val t0 = System.nanoTime()
-        materialize(graft.queries.Multimodal.videoPhashNeardup(blobs, dec))
+        Harness.materialize(graft.queries.Multimodal.videoPhashNeardup(blobs, dec))
         (System.nanoTime() - t0) / 1e9
       }
       // the suite's across-pass statistic (ADVICE r14 #5): trimmed
@@ -191,53 +181,43 @@ object VideoScaleBench {
       arm
     }
 
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-video-base")
-    val factorDirs = factors.map(f =>
-      f -> java.nio.file.Files.createTempDirectory(s"graft-video-x$f"))
-    val tGen0 = System.nanoTime()
-    gen(baseN, baseDir)
-    factorDirs.foreach { case (f, dir) => gen(baseN * f, dir) }
-    val genSec = (System.nanoTime() - tGen0) / 1e9
-
+    val tmp = java.nio.file.Files.createTempDirectory("graft-video")
+    val baseDir = tmp.resolve("base")
+    val factorDirs = factors.map(f => f -> tmp.resolve(s"x$f"))
     def arms(decoder: String): Seq[(String, Arm)] =
       (("base", run(baseDir, baseN, decoder)) +: factorDirs.map {
         case (f, dir) => s"x$f" -> run(dir, baseN * f, decoder)
       })
 
-    val armsReal = arms("avi_mjpeg")
-    val armsStub = arms("identity")
-
-    def del(root: java.nio.file.Path): Unit = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-    del(baseDir); factorDirs.foreach { case (_, d) => del(d) }
+    val (genSec, armsReal, armsStub) = try {
+      val tGen0 = System.nanoTime()
+      gen(baseN, baseDir)
+      factorDirs.foreach { case (f, dir) => gen(baseN * f, dir) }
+      ((System.nanoTime() - tGen0) / 1e9, arms("avi_mjpeg"), arms("identity"))
+    } finally Harness.deleteTree(tmp)
     spark.stop()
 
-    def jnum(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    import Harness.num
     def armJson(a: Arm): String =
       s"""{"videos":${a.videos},"planted_pairs":${a.planted},""" +
-        s""""pairs_found":${a.pairsFound},"wall_s":${jnum(a.wallSec)},""" +
-        s""""wall_passes":${a.walls.map(jnum).mkString("[", ",", "]")},""" +
-        s""""videos_per_s":${jnum(a.videos / a.wallSec)}}"""
+        s""""pairs_found":${a.pairsFound},"wall_s":${num(a.wallSec)},""" +
+        s""""wall_passes":${a.walls.map(num).mkString("[", ",", "]")},""" +
+        s""""videos_per_s":${num(a.videos / a.wallSec)}}"""
     // per-factor ratio vs base and per-unit (ratio/factor): sub-linear
     // per-unit < 1 is the scale observable
     def decoderJson(armSeq: Seq[(String, Arm)]): String = {
       val base = armSeq.head._2
       val entries = armSeq.map { case (k, a) => s""""$k":${armJson(a)}""" }
       val ratios = factors.zip(armSeq.tail).map { case (f, (k, a)) =>
-        s""""$k":{"ratio":${jnum(a.wallSec / base.wallSec)},""" +
-          s""""per_unit":${jnum(a.wallSec / base.wallSec / f)}}"""
+        s""""$k":{"ratio":${num(a.wallSec / base.wallSec)},""" +
+          s""""per_unit":${num(a.wallSec / base.wallSec / f)}}"""
       }
       (entries :+ s""""scaling":${ratios.mkString("{", ",", "}")}""")
         .mkString("{", ",", "}")
     }
     val line = s"""{"metric":"video_neardup_real_decode","passes":$passes,""" +
       s""""frames_per_video":$FramesPerVideo,"frame_px":"${FrameW}x$FrameH",""" +
-      s""""gen_wall_s":${jnum(genSec)},""" +
+      s""""gen_wall_s":${num(genSec)},""" +
       s""""real":${decoderJson(armsReal)},""" +
       s""""identity_stub":${decoderJson(armsStub)}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),

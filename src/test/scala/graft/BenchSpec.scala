@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit tests of Bench's pure statistics: the per-entry across-pass
-  * statistic and the headline total built from it.
+/** Unit tests of Bench's pure statistics (the per-entry across-pass
+  * statistic and the headline total built from it) and of the pure
+  * Harness helpers every main shares.
   */
 class BenchSpec extends AnyFunSuite {
   test("median: true median, even sizes average the middle pair") {
@@ -36,5 +37,33 @@ class BenchSpec extends AnyFunSuite {
     assert(s.queriesSpread == Seq("q01" -> 51.0, "q02" -> 51.0))
     assert(s.sharedBuilds == Seq("shared:idx" -> 4.0))
     assert(s.sideEffects == Seq(side -> 40.0))
+  }
+
+  test("Harness.str: JSON strings round-trip quotes, backslashes and control chars") {
+    // the oracle_sql.json contract: Verify writes {str(name): str(sql)}
+    // and the checker's json.load must read back the exact SQL text
+    val sql = "select \"a\\b\"\n\r\t\u0001 from t"
+    val json = s"{${Harness.str("q1")}: ${Harness.str(sql)}}"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, String]])
+    assert(parsed.size == 1 && parsed.get("q1") == sql)
+  }
+
+  test("Harness.only: prefix filter; a shared build runs only when a prefix matches it") {
+    val all = Harness.only(Map.empty)
+    assert(all("q61_top") && all("shared:x"))
+    val q61 = Harness.only(Map("SPARK_GRAFT_ONLY" -> "q61"))
+    assert(q61("q61_top") && q61("q61_other") && !q61("q62_top"))
+    assert(!q61("shared:x") && !q61("shared:y"))
+    val optIn = Harness.only(Map("SPARK_GRAFT_ONLY" -> "q61, shared:x"))
+    assert(optIn("q61_top") && optIn("shared:x") && !optIn("shared:y"))
+  }
+
+  test("Harness.passes: default when unset, rejects 0 and non-integers") {
+    assert(Harness.passes(5, Map.empty) == 5)
+    assert(Harness.passes(5, Map("SPARK_GRAFT_PASSES" -> "2")) == 2)
+    for (bad <- Seq("0", "-1", "x"))
+      intercept[IllegalArgumentException](
+        Harness.passes(5, Map("SPARK_GRAFT_PASSES" -> bad)))
   }
 }
