@@ -2,16 +2,19 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The one place that knows how session-scoped state is held and
   * released, keyed by owning SparkSession:
   *
   *  - [[persist]]: frames a lazy plan builder persists (rank and
-  *    prefix-sum inputs, iterative sweeps). A lazy API cannot know when
+  *    prefix-sum inputs, edge lists). A lazy API cannot know when
   *    its caller is done with the plan, so they live until [[clear]].
+  *  - [[checkpoint]]: iterative round states; their loop [[release]]s them.
   *  - [[shared]]: build tables many catalog queries derive from the same
   *    input (shingles, minhash, LSH candidates, chunk tables), keyed by
   *    convention "family:build:<input dir>".
@@ -31,6 +34,7 @@ object SessionCache {
 
   private final class State {
     val persisted = ConcurrentHashMap.newKeySet[DataFrame]()
+    val checkpoints = ConcurrentHashMap.newKeySet[RDD[_]]()
     val shared = new ConcurrentHashMap[String, DataFrame]()
     val layouts = new ConcurrentHashMap[String, Integer]()
   }
@@ -61,6 +65,27 @@ object SessionCache {
     p
   }
 
+  /** `df` re-rooted on its own rows: a one-leaf plan over a local
+    * checkpoint, stored by the first job that computes it (at once if
+    * `eager`), which also cuts its RDD lineage. A released checkpoint
+    * cannot be recomputed, so release it only once everything derived
+    * from it is materialized.
+    */
+  def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+    val c = df.localCheckpoint(eager)
+    state(df.sparkSession).checkpoints.add(rows(c))
+    c
+  }
+
+  /** Free one [[checkpoint]] ahead of [[clear]]. */
+  def release(df: DataFrame): Unit = {
+    state(df.sparkSession).checkpoints.remove(rows(df))
+    rows(df).unpersist(false)
+  }
+
+  private def rows(c: DataFrame): RDD[_] =
+    c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+
   /** `build`, persisted once per (session, key) and served thereafter. */
   def shared(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val st = state(spark).shared
@@ -81,14 +106,16 @@ object SessionCache {
   def scanLayout(spark: SparkSession, root: String)(count: => Int): Int =
     state(spark).layouts.computeIfAbsent(root, _ => Integer.valueOf(count)).intValue
 
-  /** Unpersist and forget every persisted intermediate and shared build
-    * across ALL sessions in the JVM. Safe any time; later calls rebuild
-    * lazily.
+  /** Unpersist and forget every persisted intermediate, checkpoint and
+    * shared build across ALL sessions in the JVM. Safe any time; later
+    * calls rebuild lazily.
     */
   def clear(): Unit =
     states.forEach { (_, st) =>
       st.persisted.forEach(df => df.unpersist(false))
       st.persisted.clear()
+      st.checkpoints.forEach(r => r.unpersist(false))
+      st.checkpoints.clear()
       st.shared.forEach((_, df) => df.unpersist(false))
       st.shared.clear()
     }

@@ -93,13 +93,8 @@ object Clustering {
     * (vec_id, embedding, cent_id, dist_sq) — q160's pairwise stage
     * needs the vectors, q139/q142 project them away.
     */
-  def kmeansFull(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding"))
-      .transform(SessionCache.persist)
-    var cents = seedCentroids(e, k)
-    for (_ <- 1 to iters) cents = recentroid(assign(e, cents))
-    assign(e, cents)
-  }
+  def kmeansFull(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    assignTrained(emb, kmeansCentroids(emb, k, iters))
 
   /** `iters` Lloyd sweeps from the hash seeds; returns the final
     * assignment (vec_id, cluster, dist_sq).

@@ -753,15 +753,15 @@ object Dedup {
     * one kept row per component. Docs in no pair are their own
     * singleton cluster.
     *
-    * Pregel-style smallest-label propagation: each round a doc's label
-    * becomes min(own, neighbors'); fixpoint in O(diameter) rounds. The
-    * driver loop holds only a per-round changed-any-row BOOLEAN (an
-    * exact fixpoint probe that works for ids of any type) — every
-    * join/agg is distributed, nothing row-shaped ever reaches the
-    * driver, and each round's result is persisted so the next round's
-    * lineage stays one hop deep. This completes detect -> resolve ->
-    * emit for near-dup dedup (the reference's product is the KEPT
-    * subset of the corpus: /root/reference/internal/cli/mapreduce.go:91).
+    * Smallest-label propagation run to its fixpoint by
+    * [[Graph.connectedComponents]] on the shuffle-join path: each
+    * round a doc's label becomes min(own, neighbors'), O(diameter)
+    * rounds. The fixpoint probe is exact for ids of any type, nothing
+    * row-shaped reaches the driver, and every round's state is
+    * re-rooted on its rows, so each round plans one round deep. This
+    * completes detect -> resolve -> emit for near-dup dedup (the
+    * reference's product is the KEPT subset of the corpus:
+    * internal/cli/mapreduce.go:91).
     */
   def neardupClusters(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
     val spark = docs.sparkSession
@@ -776,41 +776,19 @@ object Dedup {
       math.max(docs.count(), 2L * pairs.count()))
     graft.streaming.StatefulNeardupGate.withStatePartitions(
         spark, Some(loopParts)) {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .coalesce(loopParts) // cached-layout twin of the conf: the union
-      // inherits the candidates table's core-count partitioning, and
-      // every round's join re-reads it as that many map tasks
-      .transform(SessionCache.persist)
-    var labels = docs.select(col(idCol).as("doc"), col(idCol).as("label"))
-      .transform(SessionCache.persist)
-    // Exact, id-type-agnostic fixpoint test: did ANY label change this
-    // round? (A numeric checksum would silently mis-converge for string
-    // ids, where sum() is null.) The limit(1) stops the probe join at
-    // the first changed row; the count is also the action that
-    // materializes `next`'s persist for the following round.
-    def anyChanged(next: DataFrame, prev: DataFrame): Boolean =
-      next.as("n").join(prev.as("p"), col("n.doc") === col("p.doc"))
-        .filter(col("n.label") =!= col("p.label"))
-        .limit(1).count() > 0
-    var converged = labels.isEmpty // empty corpus: nothing to propagate
-    var iters = 0
-    while (!converged && iters < MaxClusterIters) {
-      val msgs = edges.join(labels, col("src") === col("doc"))
-        .select(col("dst").as("doc"), col("label"))
-      val next = labels.union(msgs).groupBy(col("doc"))
-        .agg(min(col("label")).as("label"))
-        .transform(SessionCache.persist)
-      converged = !anyChanged(next, labels)
-      labels.unpersist()
-      labels = next
-      iters += 1
-    }
-    if (!converged)
+    // coalesce: the cached-layout twin of the conf (the pairs inherit the
+    // candidates table's core-count partitioning, re-read every round)
+    val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .coalesce(loopParts)
+    // one sweep past the cap: the last sweep is never probed, so running
+    // all of them means no sweep within the cap was a fixpoint
+    val labels = Graph.connectedComponents(docs.select(col(idCol).as("node")),
+      edges, MaxClusterIters + 1, broadcastLabels = false)
+    if (Graph.lastSweepsRun.get() > MaxClusterIters)
       throw new IllegalStateException(
         s"label propagation did not converge in $MaxClusterIters rounds")
-    labels.select(col("doc").as(idCol), col("label").as("cluster_id"),
-      (col("doc") === col("label")).cast("long").as("is_survivor"))
+    labels.select(col("node").as(idCol), col("comp").as("cluster_id"),
+      (col("node") === col("comp")).cast("long").as("is_survivor"))
     }
   }
 

@@ -43,6 +43,28 @@ object Graph {
   val lastSweepsRun: ThreadLocal[Integer] =
     ThreadLocal.withInitial(() => Integer.valueOf(0))
 
+  /** The round states of an iterative loop: the current one and the one
+    * it came from, each re-rooted on its own rows, so every round plans
+    * one round deep (a step that reads its input twice otherwise doubles
+    * the plan per round).
+    */
+  final class Rounds(init: DataFrame) {
+    private var held = List(SessionCache.checkpoint(init, eager = false))
+
+    def state: DataFrame = held.head
+
+    /** Make `step(state)` the state, materialized at once if `eager`,
+      * and release the oldest state. Unless `state` is the initial one,
+      * a job must have read it in full first: it derives from that one.
+      */
+    def advance(step: DataFrame => DataFrame, eager: Boolean = false): DataFrame = {
+      held = SessionCache.checkpoint(step(state), eager) :: held
+      held.drop(2).foreach(SessionCache.release)
+      held = held.take(2)
+      state
+    }
+  }
+
   /** Run `step` up to `maxSweeps` times, STOPPING EARLY after the
     * first sweep that leaves the state unchanged: every iterative
     * operator here is a deterministic function of the previous state,
@@ -51,17 +73,18 @@ object Graph {
     * (GraphSpec asserts equality and that a fixture actually stops).
     * The convergence probe is one node-keyed `exceptAll` per sweep —
     * the price that turns "diameter unknown, schedule 100 sweeps"
-    * into "stop at the 12th" on a web-scale graph. Each state is
-    * persisted (the sweeps and the probe both read it) and registered
-    * for cleanup.
+    * into "stop at the 12th" on a web-scale graph. Its job also
+    * materializes the sweep's state for [[Rounds]]; sweep 1, never
+    * probed, is materialized eagerly when more sweeps follow.
     */
   def iterateToFixpoint(init: DataFrame, maxSweeps: Int)
                        (step: DataFrame => DataFrame): DataFrame = {
-    var cur = SessionCache.persist(init)
+    val rounds = new Rounds(init)
     var sweeps = 0
     var converged = false
     while (sweeps < maxSweeps && !converged) {
-      val next = SessionCache.persist(step(cur))
+      val prev = rounds.state
+      sweeps += 1
       // probe only while stopping can still SAVE a sweep — never after
       // the final sweep (the loop exits anyway) and never after the
       // first (a nontrivial graph always changes state on sweep 1; if
@@ -69,13 +92,11 @@ object Graph {
       // the probe is output-identical either way). Without this guard
       // q143's proven 2-round bound paid two probe jobs that could
       // never fire — 2.1× its r7 wall.
-      converged = sweeps >= 1 && sweeps < maxSweeps - 1 &&
-        next.exceptAll(cur).isEmpty
-      sweeps += 1
-      cur = next
+      val next = rounds.advance(step, eager = sweeps == 1 && sweeps < maxSweeps)
+      converged = sweeps >= 2 && sweeps < maxSweeps && next.exceptAll(prev).isEmpty
     }
     lastSweepsRun.set(sweeps)
-    cur
+    rounds.state
   }
 
   /** Edges (src, dst, w, out_w): supplier nation ships to customer
@@ -238,10 +259,10 @@ object Graph {
     * sweep replaces a node's label with the min over itself and its
     * neighbors. After `iters` sweeps a node's label is the minimum id
     * within distance `iters` — run diameter-many sweeps for the exact
-    * components (dedup-cluster identification at corpus scale runs
-    * O(log N) sweeps of exactly this shape; GraphSpec proves both the
-    * converged multi-component case and the partial-propagation
-    * semantics).
+    * components: min-label propagation needs O(diameter) sweeps, and
+    * [[Dedup.neardupClusters]] runs exactly this sweep to its fixpoint
+    * (GraphSpec proves both the converged multi-component case and the
+    * partial-propagation semantics).
     *
     * Scale shape per sweep: one equi-join of the symmetrized edge list
     * (persisted once) against the node-sized label table + one min
@@ -257,23 +278,32 @@ object Graph {
     * key, same arithmetic, bit-identical output (GraphSpec).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, iters: Int,
-                          broadcastLabels: Boolean = true): DataFrame = {
+                          broadcastLabels: Boolean = true): DataFrame =
+    minLabelRounds(nodes, edges, iters, broadcastLabels)(identity)
+
+  /** `rounds` min-label sweeps over undirected (a, b) edges, each
+    * sweep's (node, comp) labels passed through `hop` — the shared
+    * round of both connected-components operators.
+    */
+  private def minLabelRounds(nodes: DataFrame, edges: DataFrame, rounds: Int,
+                             broadcastLabels: Boolean)
+                            (hop: DataFrame => DataFrame): DataFrame = {
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
       .transform(SessionCache.persist)
     // each round reads the label table TWICE (sweep + merge) plus the
-    // convergence probe — iterateToFixpoint persists per round
+    // convergence probe — iterateToFixpoint checkpoints per round
     iterateToFixpoint(
-        nodes.select(col("node"), col("node").as("comp")), iters) { lab =>
+        nodes.select(col("node"), col("node").as("comp")), rounds) { lab =>
       val l = if (broadcastLabels) broadcast(lab) else lab.hint("shuffle_hash")
       val nbrMin = sym.join(l, col("v") === col("node"))
         .groupBy(col("u")).agg(min(col("comp")).as("nbr_comp"))
       val m = if (broadcastLabels) broadcast(nbrMin)
         else nbrMin.hint("shuffle_hash")
-      lab.join(m, lab("node") === m("u"), "left")
+      hop(lab.join(m, lab("node") === m("u"), "left")
         .select(lab("node"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-            .as("comp"))
+            .as("comp")))
     }
   }
 
@@ -288,48 +318,35 @@ object Graph {
     * runs the same neighbor-min sweep and then a POINTER-DOUBLING hop
     * — comp(v) ← comp(comp(v)), one self-join of the node-sized label
     * table (comp values are always node ids, so the join is total).
-    * Label reach doubles per round on top of the one-hop sweep, so
-    * convergence takes O(log diameter) rounds instead of O(diameter):
-    * on a 10^9-node graph with diameter in the hundreds (web/dedup
-    * graphs after LSH bucketing), ~10 rounds instead of hundreds of
-    * shuffles. Per round: one edge⋈label join + one min aggregate +
-    * one label⋈label self-join, every shuffle on a node key.
-    * GraphSpec proves (a) exact agreement with the converged
-    * one-hop result and (b) the exponential-vs-linear convergence gap
-    * on a planted long chain.
+    * When ids increase along every path, label reach doubles per round
+    * on top of the one-hop sweep, so convergence takes O(log diameter)
+    * rounds instead of O(diameter). That bound needs the id order: a
+    * driver-side simulation of this exact round on a 200-node path took
+    * 8 rounds with sorted ids, 100 with sorted ids but the minimum moved
+    * to the midpoint, and 34–134 over 10 seeded shuffles (one-hop
+    * propagation: 200, 101 and 106–194).
+    * Per round: one edge⋈label join + one min aggregate + one
+    * label⋈label self-join, every shuffle on a node key. GraphSpec
+    * proves (a) exact agreement with the converged one-hop result and
+    * (b) the convergence gap on a planted sorted-id chain.
     */
   def connectedComponentsFast(nodes: DataFrame, edges: DataFrame,
                               rounds: Int,
-                              broadcastLabels: Boolean = true): DataFrame = {
-    val sym = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .transform(SessionCache.persist)
-    // per round the label table feeds the sweep twice, `swept` feeds
-    // the doubling self-join twice, and the probe reads the result —
-    // iterateToFixpoint persists the round state, `swept` persists here
-    iterateToFixpoint(
-        nodes.select(col("node"), col("node").as("comp")), rounds) { lab =>
-      val l = if (broadcastLabels) broadcast(lab) else lab.hint("shuffle_hash")
-      val nbrMin = sym.join(l, col("v") === col("node"))
-        .groupBy(col("u")).agg(min(col("comp")).as("nbr_comp"))
-      val m = if (broadcastLabels) broadcast(nbrMin)
-        else nbrMin.hint("shuffle_hash")
-      val swept = lab.join(m, lab("node") === m("u"), "left")
-        .select(lab("node"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-            .as("comp"))
-        .transform(SessionCache.persist)
+                              broadcastLabels: Boolean = true): DataFrame =
+    // `swept` feeds the doubling self-join twice — persist it
+    minLabelRounds(nodes, edges, rounds, broadcastLabels) { sweep =>
+      val swept = SessionCache.persist(sweep)
       val y = swept.select(col("node").as("c_node"), col("comp").as("c_comp"))
       val yb = if (broadcastLabels) broadcast(y) else y.hint("shuffle_hash")
       swept.as("x")
         .join(yb, col("comp") === col("c_node"))
         .select(col("node"), col("c_comp").as("comp"))
     }
-  }
 
-  /** Rounds for q143: sweep+doubling reach after r rounds is ≥ 2^r
-    * hops, so 2 rounds cover diameter ≤ 4 — the trade graph's diameter
-    * is 1–2 at every SF (every nation ships broadly); the fixed count
+  /** Rounds for q143: the one-hop sweeps alone cover 2 hops in 2
+    * rounds (the doubling hop adds reach where ids are monotone along
+    * paths) — the trade graph's diameter is 1–2 at every SF (every
+    * nation ships broadly); the fixed count
     * keeps the oracle unrollable. On the fixture each round costs
     * FIXED Spark job latency (cache materializations + broadcast
     * builds over a 25-row label table), not data work — at web scale
@@ -376,7 +393,7 @@ object Graph {
     val e = edges.select(col("src"), col("dst"), col("cost"))
       .transform(SessionCache.persist)
     // each sweep reads the distance table twice (relax + merge) plus
-    // the convergence probe — iterateToFixpoint persists per sweep
+    // the convergence probe — iterateToFixpoint checkpoints per sweep
     iterateToFixpoint(
         nodes.select(col("node"),
           when(col("node") === source, lit(0L))

@@ -1352,7 +1352,6 @@ object TextAnalytics {
     * cl100k counter.
     */
   def bpeInduce(s: SparkSession, docs: DataFrame, steps: Int,
-                truncateEvery: Int = 0,
                 onStep: (Int, Long) => Unit = (_, _) => (),
                 onDone: DataFrame => Unit = _ => ()): DataFrame = {
       import s.implicits._
@@ -1360,13 +1359,15 @@ object TextAnalytics {
         .select(explode(TextOps.wordsOf(col("text"))).as("word"))
         .filter(col("word").rlike("^[a-z]+$"))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      var cur = vocab.select(col("n"),
+      // each step's best-pair collect reads the whole state before
+      // Rounds advances: a deep induction's plan would otherwise nest
+      // one replace() per step, and re-analysis goes quadratic
+      val rounds = new Graph.Rounds(vocab.select(col("n"),
         concat(
           array_join(transform(
             filter(split(col("word"), ""), c => length(c) > 0),
             c => concat(lit("|"), c, lit("|"))), " "),
-          lit(" |</w>|")).as("repr"))
-        .transform(SessionCache.persist)
+          lit(" |</w>|")).as("repr")))
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       var exhausted = false
       for (step <- 1 to steps if !exhausted) {
@@ -1376,7 +1377,7 @@ object TextAnalytics {
         // pairs — without the guard, a deep induction run walks
         // element_at past a 1-element array (BpeEndToEndSpec trains 40
         // steps; the 6-step catalog entry never merged a whole word)
-        val pairs = cur.filter(size(syms) >= 2).select(col("n"),
+        val pairs = rounds.state.filter(size(syms) >= 2).select(col("n"),
           explode(transform(sequence(lit(0), size(syms) - 2), i =>
             concat(element_at(syms, i + 1), lit(" "),
               element_at(syms, i + 2)))).as("pair"))
@@ -1390,29 +1391,13 @@ object TextAnalytics {
             def unwrap(x: String) = x.stripPrefix("|").stripSuffix("|")
             merges += ((step, unwrap(lw), unwrap(rw), bestC))
             val merged = bestPair.replace("| |", "")
-            val stepped = cur.select(col("n"),
-              expr(s"replace(repr, '$bestPair', '$merged')").as("repr"))
-            // deep inductions (BpeEndToEndSpec trains 1,000 steps) carry
-            // `steps` nested replace() expressions: Catalyst re-analyzes
-            // and string-renders the WHOLE tree per step, which goes
-            // quadratic. localCheckpoint resets the logical lineage to
-            // the materialized rows every few steps; between checkpoints
-            // the un-persisted tail recomputes at most truncateEvery-1
-            // narrow replace() projections over the |vocab|-row table —
-            // cheaper than pinning ~steps cached tables. The 6-step
-            // catalog entry keeps its pure-plan shape (truncateEvery=0).
-            val next =
-              if (truncateEvery > 0) {
-                if (step % truncateEvery == 0) stepped.localCheckpoint(true)
-                else stepped
-              } else SessionCache.persist(stepped)
-            cur = next
+            rounds.advance(_.select(col("n"),
+              expr(s"replace(repr, '$bestPair', '$merged')").as("repr")))
         }
         onStep(step, System.nanoTime() - stepT0) // per-step wall, for the
-        // linearity assertion in BpeEndToEndSpec (a deep induction whose
-        // lineage is NOT truncated goes quadratic in Catalyst re-analysis)
+        // linearity assertion in BpeEndToEndSpec
       }
-      onDone(cur) // final (n, repr) vocabulary state — BpeEndToEndSpec
+      onDone(rounds.state) // final (n, repr) vocabulary state — BpeEndToEndSpec
       // replays the whole merge list sequentially on the driver and
       // asserts symbol-exact equality with this trained state
       merges.toSeq.toDF("step", "lhs", "rhs", "pair_n")

@@ -36,7 +36,7 @@ class BpeEndToEndSpec extends AnyFunSuite with CacheCleanup {
     */
   private lazy val merges: Seq[(String, String)] =
     graft.queries.TextAnalytics.bpeInduce(spark,
-        Tables.documents(spark, SfDir), steps = 40, truncateEvery = 4)
+        Tables.documents(spark, SfDir), steps = 40)
       .orderBy(col("step"))
       .collect()
       .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
@@ -158,7 +158,7 @@ class BpeEndToEndSpec extends AnyFunSuite with CacheCleanup {
     val stepNanos = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     var finalReprs: Array[String] = Array.empty
     val deep = graft.queries.TextAnalytics.bpeInduce(spark, docs,
-        steps = 1000, truncateEvery = 8,
+        steps = 1000,
         onStep = (s, n) => { stepNanos += ((s, n)); () },
         onDone = st =>
           finalReprs = st.select("repr").collect().map(_.getString(0)))
@@ -168,7 +168,7 @@ class BpeEndToEndSpec extends AnyFunSuite with CacheCleanup {
     // linearity: mean per-step wall late vs early (post-warmup). The
     // untruncated lineage grows one nested replace() per step and goes
     // quadratic in Catalyst re-analysis — at step ~900 that is >5x the
-    // early-step cost; with localCheckpoint every 8 steps it stays
+    // early-step cost; with every step's state re-rooted it stays
     // flat. 2.5x allows GC/scheduler noise without admitting the
     // quadratic shape.
     val head = stepNanos.filter(s => s._1 > 100 && s._1 <= 300).map(_._2)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Dedup
+import graft.queries.{Dedup, Graph}
 
 /** Plants known duplicates/near-duplicates and asserts each dedup
   * operator surfaces them — the fixture corpus has no dups by
@@ -138,6 +138,58 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"seed $seed: distributed clustering != union-find")
     }
+  }
+
+  /** Driver-side union-find: every id's component minimum. */
+  private def unionFindMin[T](ids: Seq[T], edges: Seq[(T, T)])
+                             (implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: T): T = if (parent(x) == x) x else find(parent(x))
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  test("neardup clusters on string ids match a reference union-find") {
+    // lexicographic order differs from numeric here ("d10" < "d9"), so
+    // the cluster id must be the string minimum of each component
+    val rnd = new scala.util.Random(11)
+    val ids = (0 until 30).map(i => s"d$i")
+    val edges = Seq.fill(20)((ids(rnd.nextInt(30)), ids(rnd.nextInt(30))))
+      .filter { case (a, b) => a != b }
+    val docs = ids.map(i => (i, s"text $i")).toDF("doc_id", "text")
+    val got = Dedup.neardupClusters(docs, edges.toDF("doc_a", "doc_b"), "doc_id")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == unionFindMin(ids, edges))
+  }
+
+  test("neardup clusters on a seeded shuffled-id path match a reference union-find") {
+    val ids = new scala.util.Random(5).shuffle((0L until 48L).toVector)
+    val edges = ids.zip(ids.tail)
+    val docs = ids.map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val got = Dedup.neardupClusters(docs, edges.toDF("doc_a", "doc_b"), "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFindMin(ids, edges))
+  }
+
+  /** A sorted-id path of `n` docs: its labels settle after n-1 rounds,
+    * and one more round finds the fixpoint.
+    */
+  private def sortedPath(n: Long) =
+    Dedup.neardupClusters((0L until n).map(i => (i, s"d$i")).toDF("doc_id", "text"),
+      (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b"), "doc_id")
+
+  test("neardup clusters: a 64-node path converges at the 64-round cap") {
+    val out = sortedPath(64L).collect()
+    assert(Graph.lastSweepsRun.get() == Dedup.MaxClusterIters)
+    assert(out.length == 64 && out.forall(_.getLong(1) == 0L))
+  }
+
+  test("neardup clusters: a 65-node path throws at the 64-round cap") {
+    val e = intercept[IllegalStateException](sortedPath(65L))
+    assert(e.getMessage == "label propagation did not converge in 64 rounds")
   }
 
   test("keepNearDupSurvivors emits one row per component plus singletons") {

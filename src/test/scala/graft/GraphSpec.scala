@@ -191,6 +191,25 @@ class GraphSpec extends AnyFunSuite with CacheCleanup {
     assert(c30 == c3)
   }
 
+  test("round state is re-rooted: the plan after 8 sweeps is as large as after 2") {
+    // 12-node path from node 0: neither loop reaches its fixpoint by
+    // sweep 8, so both runs execute every sweep they are given
+    val n = 12L
+    val und = (0L until n - 1).map(i => (i, i + 1)).toDF("a", "b")
+    val ce = cedges((0L until n - 1).map(i => (i, i + 1, 1L)))
+    def planSize(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    def sizes(run: Int => org.apache.spark.sql.DataFrame) = Seq(2, 8).map { k =>
+      val size = planSize(run(k))
+      assert(Graph.lastSweepsRun.get() == k)
+      size
+    }
+    val cc = sizes(k => Graph.connectedComponents(nodes(n), und, k))
+    assert(cc(0) == cc(1), s"CC plan nodes at 2 and 8 sweeps: $cc")
+    val sp = sizes(k => Graph.sssp(nodes(n), ce, 0L, k))
+    assert(sp(0) == sp(1), s"SSSP plan nodes at 2 and 8 sweeps: $sp")
+  }
+
   test("pointer-doubling CC agrees with converged one-hop CC") {
     val und = Seq((0L, 1L), (1L, 2L), (2L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
@@ -216,8 +235,10 @@ class GraphSpec extends AnyFunSuite with CacheCleanup {
   }
 
   test("pointer doubling converges in O(log diameter) on a long chain") {
-    // 33-node path: one-hop propagation needs 32 sweeps; with the
-    // doubling hop, label reach at least doubles per round
+    // 33-node path with ids sorted along it: one-hop propagation needs
+    // 32 sweeps; the doubling hop at least doubles label reach per
+    // round only because ids increase along the path (with the minimum
+    // id mid-path or shuffled ids it is far from log-many rounds)
     val n = 33
     val und = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("a", "b")
     val ns = (0L until n.toLong).toDF("node")

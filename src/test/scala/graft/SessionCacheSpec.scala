@@ -50,6 +50,23 @@ class SessionCacheSpec extends AnyFunSuite with CacheCleanup {
     assert(SessionCache.shared(s, "spec:outer")(fail("outer rebuilt")) eq outer)
   }
 
+  test("checkpoint: a one-leaf plan over stored rows; release() and clear() free them") {
+    val s = spark.newSession()
+    def rows(df: DataFrame) = df.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    val src = plan(s, 100031).filter(col("id") > 7)
+    val a = SessionCache.checkpoint(src, eager = true)
+    val b = SessionCache.checkpoint(a.select((col("id") + 1).as("id")), eager = false)
+    assert(Seq(a, b).forall(_.queryExecution.analyzed.children.isEmpty))
+    assert(b.count() == src.count())
+    assert(rows(b).isCheckpointed, "the first job over b cuts its lineage")
+    SessionCache.release(a)
+    assert(rows(a).getStorageLevel == StorageLevel.NONE)
+    assert(b.count() == src.count(), "b reads its own rows, not a's")
+    SessionCache.clear()
+    assert(rows(b).getStorageLevel == StorageLevel.NONE)
+  }
+
   test("persist: MEMORY_AND_DISK until clear() unpersists it") {
     val s = spark.newSession()
     val p = SessionCache.persist(plan(s, 100024))
