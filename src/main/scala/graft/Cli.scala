@@ -28,9 +28,11 @@ object Cli {
     val file = args(1)
     val keyword = if (args.length > 2) args(2) else "keep"
 
+    // SPARK_GRAFT_MASTER (a deployment address) overrides the session's
+    // local[SPARK_GRAFT_CPUS] master only when it is set.
+    val master = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq
     val spark = Harness.session(Harness.cpus,
-      "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"),
-      "spark.app.name" -> "graft-cli")
+      master :+ ("spark.app.name" -> "graft-cli"): _*)
 
     val corpus = TextCorpus.lines(spark, file)
 

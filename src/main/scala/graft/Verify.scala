@@ -11,6 +11,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => keep(n) }
       .foreach { case (name, fn) =>
+      // marks where each entry's log lines (e.g. Spark's plan-string
+      // truncation warnings) start
+      System.err.println(s"[verify] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's map stage: every chunk goes to a chat model with the
   * user prompt as the system message and the chunk text as the user
@@ -13,6 +17,10 @@ import org.apache.spark.sql.functions._
   * implementation is pluggable and the shipped clients are deterministic
   * stand-ins. The Spark-side plumbing (distribution, ordering, caching,
   * fail-fast) is identical whichever client is plugged in.
+  *
+  * `complete` must be thread-safe: [[LlmMap.mapChunks]] calls it from
+  * several threads at once, and those threads run outside any
+  * `TaskContext`.
   */
 trait ModelClient extends Serializable {
   def complete(systemPrompt: String, userText: String): String
@@ -39,17 +47,86 @@ object LlmMap {
   /** Suffix the reference injects into every prompt (mapreduce.go:91). */
   val FilterSuffix = "\nReturn the lines that you want to keep."
 
+  /** Model calls a map task keeps in flight at once. */
+  private val InFlight = 16
+
+  /** One JVM-wide pool for every task's model calls. Its threads are
+    * daemons, so an idle pool never keeps a finished driver or executor
+    * JVM alive; it is never shut down.
+    */
+  private lazy val pool: ExecutorService = Executors.newCachedThreadPool(new ThreadFactory {
+    private val n = new AtomicInteger
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"graft-llm-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+
   /** Map stage: chunks(chunk_id, text, ...) -> + result column.
     * Runs as a distributed map over however many partitions the chunk
-    * table has; Spark's task scheduler replaces the reference's
-    * one-goroutine-per-chunk errgroup (mapreduce.go:93-122), with the
-    * same fail-fast job-abort semantics on error.
+    * table has. Each task keeps up to 16 model calls in flight on a
+    * shared pool and emits its rows in input order: a sliding window
+    * that yields the head row once its call completes, then submits the
+    * next. This bounds the reference's one-goroutine-per-chunk errgroup
+    * (mapreduce.go:93-122) per task, with the same fail-fast job-abort
+    * semantics on error: a failing call fails the task with
+    * `model call failed for chunk_id=<id>` (the client's exception as
+    * its cause) and cancels the task's other calls.
     */
   def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String,
                 textCol: String = "text",
                 resultCol: String = "result"): DataFrame = {
     val sys = prompt + FilterSuffix
-    val call = udf((text: String) => client.complete(sys, text))
-    chunks.withColumn(resultCol, call(col(textCol)))
+    val in = chunks.schema
+    val textIdx = in.fieldIndex(textCol)
+    val idIdx = in.fieldNames.indexOf("chunk_id")
+    val resultField = StructField(resultCol, StringType)
+    val resultIdx = in.fieldNames.indexOf(resultCol)
+    val out = if (resultIdx >= 0) StructType(in.updated(resultIdx, resultField)) else in.add(resultField)
+    chunks.mapPartitions { rows: Iterator[Row] =>
+      new InOrder(rows, (r: Row) => client.complete(sys, r.getString(textIdx)),
+        (r: Row) => if (idIdx >= 0) s"chunk_id=${r.get(idIdx)}"
+                    else s"a row of partition ${TaskContext.getPartitionId()}")
+        .map { case (r, result) =>
+          val v = r.toSeq
+          Row.fromSeq(if (resultIdx >= 0) v.updated(resultIdx, result) else v :+ result)
+        }
+    }(Encoders.row(out))
+  }
+
+  /** The sliding window of one task: `(row, call(row))` in input order,
+    * with up to [[InFlight]] calls running on [[pool]]. Outstanding calls
+    * are cancelled when the task completes, fails or is killed.
+    */
+  private final class InOrder(rows: Iterator[Row], complete: Row => String, label: Row => String)
+    extends Iterator[(Row, String)] {
+    private val window = new java.util.ArrayDeque[(Row, Future[String])]()
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => cancelAll()))
+
+    private def cancelAll(): Unit = window.synchronized {
+      window.forEach(_._2.cancel(true))
+      window.clear()
+    }
+
+    private def fill(): Unit = window.synchronized {
+      while (window.size < InFlight && rows.hasNext) {
+        val r = rows.next()
+        window.add(r -> pool.submit(new Callable[String] { def call(): String = complete(r) }))
+      }
+    }
+
+    override def hasNext: Boolean = { fill(); window.synchronized(!window.isEmpty) }
+
+    override def next(): (Row, String) = {
+      if (!hasNext) throw new NoSuchElementException("next on an exhausted model-call window")
+      val (r, f) = window.synchronized(window.poll())
+      try r -> f.get()
+      catch {
+        case e: ExecutionException =>
+          cancelAll()
+          throw new RuntimeException(s"model call failed for ${label(r)}", e.getCause)
+      }
+    }
   }
 }

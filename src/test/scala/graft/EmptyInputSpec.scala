@@ -28,6 +28,15 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     assert(Dedup.keepNearDupSurvivors(noDocs, "doc_id", "text").count() == 0)
   }
 
+  test("map stage on an empty chunk table: zero rows, zero model calls") {
+    CountingClient.reset()
+    val noChunks = Seq.empty[(Long, String)].toDF("chunk_id", "text")
+    val out = graft.pipeline.LlmMap.mapChunks(noChunks, CountingClient("keep"), "p")
+    assert(out.columns.toSeq == Seq("chunk_id", "text", "result"))
+    assert(out.collect().isEmpty)
+    assert(CountingClient.calls.get() == 0)
+  }
+
   test("similarity and lang-id on an empty corpus") {
     val noLabeled = Seq.empty[(Long, Seq[Float], Int)]
       .toDF("vec_id", "embedding", "label")

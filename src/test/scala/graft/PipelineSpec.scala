@@ -153,6 +153,35 @@ class LlmMapSpec extends AnyFunSuite {
     assert(CountingClient.calls.get() == 1)
   }
 
+  test("map stage keeps several calls in flight per task, bounded, in input order") {
+    WindowClient.reset()
+    val chunks = (0L until 64L).map(i => (i, s"chunk $i")).toDF("chunk_id", "text").coalesce(1)
+    val out = LlmMap.mapChunks(chunks, WindowClient(sleepMs = 20), "p").collect()
+    val maxInFlight = WindowClient.maxInFlight.get()
+    assert(maxInFlight > 1 && maxInFlight <= 16, s"max in flight: $maxInFlight")
+    assert(WindowClient.callsByText.size == 64)
+    WindowClient.callsByText.forEach((t, n) => assert(n.get() == 1, s"$t called ${n.get()} times"))
+    assert(out.map(_.getLong(0)).toSeq == (0L until 64L))
+    assert(out.map(_.getString(2)).toSeq == (0 until 64).map(i => s"CHUNK $i"))
+  }
+
+  test("a failing call names its chunk_id and cancels the task's other calls") {
+    WindowClient.reset()
+    // chunks before the failing one answer fast; those after it would
+    // sleep a minute unless the failure cancels them
+    val chunks = (0L until 32L).map(i => (i, s"chunk $i")).toDF("chunk_id", "text").coalesce(1)
+    val client = WindowClient(sleepMs = 20, failOn = "chunk 5", slowAfter = 5, slowMs = 60000)
+    val e = intercept[Exception](LlmMap.mapChunks(chunks, client, "p").collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("model call failed for chunk_id=5")),
+      chain.map(_.getMessage).mkString(" | "))
+    assert(chain.exists(t => t.isInstanceOf[IllegalStateException] &&
+      t.getMessage == "simulated model failure on chunk 5"))
+    val deadline = System.nanoTime() + 5000000000L
+    while (WindowClient.inFlight.get() > 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(WindowClient.inFlight.get() == 0, "a model call outlived its task")
+  }
+
   test("combine preserves chunk order with no separator") { // mapreduce.go:131-146
     val results = Seq((2L, "C"), (0L, "A"), (1L, "B")).toDF("chunk_id", "result")
     val combined = Combine.combineAll(results).as[String].head()
@@ -169,6 +198,33 @@ final case class CountingClient(keyword: String) extends ModelClient {
   override def complete(sys: String, text: String): String = {
     CountingClient.calls.incrementAndGet()
     KeywordFilterClient(keyword).complete(sys, text)
+  }
+}
+
+/** Records how many calls run at once and how often each text is
+  * called. Answers `text.toUpperCase` after `sleepMs`; the chunk whose
+  * text is `failOn` throws at once, and chunk ids above `slowAfter`
+  * sleep `slowMs` instead.
+  */
+object WindowClient {
+  val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val callsByText =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  def reset(): Unit = { inFlight.set(0); maxInFlight.set(0); callsByText.clear() }
+}
+final case class WindowClient(sleepMs: Long, failOn: String = null,
+                              slowAfter: Long = Long.MaxValue, slowMs: Long = 0)
+  extends ModelClient {
+  override def complete(sys: String, text: String): String = {
+    WindowClient.maxInFlight.accumulateAndGet(WindowClient.inFlight.incrementAndGet(), math.max)
+    WindowClient.callsByText
+      .computeIfAbsent(text, _ => new java.util.concurrent.atomic.AtomicInteger(0)).incrementAndGet()
+    try {
+      if (text == failOn) throw new IllegalStateException(s"simulated model failure on $text")
+      Thread.sleep(if (text.stripPrefix("chunk ").toLong > slowAfter) slowMs else sleepMs)
+      text.toUpperCase
+    } finally WindowClient.inFlight.decrementAndGet()
   }
 }
 
