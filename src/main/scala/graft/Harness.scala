@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
-/** What graft's mains (Bench, Verify, Smoke, Cli and the `tools`)
+/** What graft's mains (Bench, Verify, Cli and the `tools`)
   * share: the session they run in, the dev name filter, the passes
   * count, the warm-up/clear/materialize steps of a timed pass, the
   * JSON scalars of their artifacts and temp-dir removal.

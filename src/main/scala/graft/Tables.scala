@@ -106,8 +106,7 @@ object Tables {
     * (per-round fixed cost = rounds × stages × task overhead).
     * Scale-adaptive in both directions: 1 partition for a 25-node
     * graph or 5k-doc corpus, thousands at a 1e10-row one (the rule
-    * yields MORE than a core-count constant once rows demand it —
-    * same shape as autoStatePartitions' streaming rule).
+    * yields MORE than a core-count constant once rows demand it).
     */
   val RowsPerLoopPartition = 4000000L
 

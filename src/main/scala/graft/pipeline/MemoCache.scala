@@ -30,33 +30,43 @@ object MemoCache {
   def cacheKey(prompt: String, model: String, textCol: String) =
     sha2(concat_ws(Sep, lit(prompt), lit(model), col(textCol)), 256)
 
-  private def readMemo(spark: SparkSession, memoPath: String): DataFrame = {
-    val empty = spark.createDataFrame(
+  /** The memo table at `memoPath`, or None when the path is missing
+    * or holds no files yet.
+    *
+    * ONLY a missing/empty memo path means "cold cache". Any other read
+    * failure (permissions, corrupt footer, storage flake) must
+    * propagate: swallowing it would silently recompute the whole map
+    * stage — re-invoking the model — and append duplicate keys, with
+    * no signal that anything went wrong. Existence is checked up front
+    * (filesystems differ on WHICH exception a missing path raises:
+    * local FS throws raw FileNotFoundException, not AnalysisException
+    * PATH_NOT_FOUND), so the catch below only excuses an existing-but-
+    * fileless dir (e.g. a crash between mkdir and first append). A
+    * table whose columns are not (key, result) is a mis-pointed path:
+    * it throws, so neither a map run nor a compaction writes into it.
+    */
+  private def memoTable(spark: SparkSession, memoPath: String): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(memoPath)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return None
+    val df = try spark.read.parquet(memoPath) catch {
+      case e: org.apache.spark.sql.AnalysisException
+        if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        return None
+    }
+    if (!df.columns.sameElements(Array("key", "result")))
+      throw new IllegalArgumentException(
+        s"$memoPath is not a memo table " +
+          s"(columns ${df.columns.mkString(",")}, expected key,result)")
+    Some(df)
+  }
+
+  private def readMemo(spark: SparkSession, memoPath: String): DataFrame =
+    memoTable(spark, memoPath).getOrElse(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("result", org.apache.spark.sql.types.StringType))))
-    // ONLY a missing/empty memo path means "cold cache". Any other read
-    // failure (permissions, corrupt footer, storage flake) must
-    // propagate: swallowing it would silently recompute the whole map
-    // stage — re-invoking the model — and append duplicate keys, with
-    // no signal that anything went wrong. Existence is checked up front
-    // (filesystems differ on WHICH exception a missing path raises:
-    // local FS throws raw FileNotFoundException, not AnalysisException
-    // PATH_NOT_FOUND), so the catch below only excuses an existing-but-
-    // fileless dir (e.g. a crash between mkdir and first append).
-    val path = new org.apache.hadoop.fs.Path(memoPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return empty
-    try {
-      val df = spark.read.parquet(memoPath)
-      if (df.columns.sameElements(Array("key", "result"))) df else empty
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        empty
-    }
-  }
+        org.apache.spark.sql.types.StructField("result", org.apache.spark.sql.types.StringType)))))
 
   /** Run the map stage with memoization.
     * chunks must have (chunk_id, text). Returns (chunk_id, text, result).
@@ -109,17 +119,12 @@ object MemoCache {
     * identical (MemoCacheSpec proves it).
     */
   def compactMemo(spark: SparkSession, memoPath: String): Unit = {
+    val df = memoTable(spark, memoPath) match {
+      case Some(t) => t
+      case None => return
+    }
     val path = new org.apache.hadoop.fs.Path(memoPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    // Refuse to "compact" anything that isn't a memo table: the silent
-    // empty-on-mismatch read fallback would otherwise rewrite a
-    // mis-pointed path as an empty table — data destruction.
-    val df = spark.read.parquet(memoPath)
-    if (!df.columns.sameElements(Array("key", "result")))
-      throw new IllegalArgumentException(
-        s"compactMemo: $memoPath is not a memo table " +
-          s"(columns ${df.columns.mkString(",")}, expected key,result)")
     val tmp = new org.apache.hadoop.fs.Path(memoPath + ".compact.tmp")
     val old = new org.apache.hadoop.fs.Path(memoPath + ".compact.old")
     fs.delete(tmp, true); fs.delete(old, true)

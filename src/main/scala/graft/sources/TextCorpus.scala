@@ -11,8 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `zipWithIndex` ids follow (partition, offset) order, which for file
   * sources is in-file byte order — deterministic at any parallelism.
-  * It costs one extra lightweight job (per-partition counts); at 100 TB
-  * that is a scan of file footers, not data.
+  * It costs one extra job that counts each partition's lines. Text
+  * files have no footers to hold those counts, so that job reads every
+  * byte of every partition except the last: the input is read about
+  * twice.
   */
 object TextCorpus {
   def lines(spark: SparkSession, path: String): DataFrame = {

@@ -46,9 +46,9 @@ import StatefulNeardupGate.Collision
   * key's state entry — once the watermark passes its last possible
   * probe window, so dormant bucket keys do not accrete. Under
   * continuous ingest the state population tracks the horizon's worth
-  * of buckets, not the corpus — the StreamBench `neardup_gate_bounded`
-  * arm pins state_rows/state_bytes plateauing while the unbounded arm
-  * grows monotonically on the same stream.
+  * of buckets, not the corpus — StreamingSpec's "bounded gate state
+  * plateaus" case pins its state rows flat while the unbounded gate's
+  * grow every batch on the same stream.
   */
 object BoundedNeardupGate {
 
@@ -125,23 +125,14 @@ object BoundedNeardupGate {
     * `(doc_id, text, ts)` (ts a timestamp column; the watermark drives
     * both aging and bucket-clear timers).
     *
-    * `statePartitions`: when set, pins `spark.sql.shuffle.partitions`
-    * on the session BEFORE the plan is built — state partitioning is
-    * frozen into the checkpoint at first start. Size it with
-    * [[StatefulNeardupGate.autoStatePartitions]] (same per-store
-    * machinery floor, same rule); the conf stays mutated, so run the
-    * whole start-to-finish arm inside
-    * [[StatefulNeardupGate.withStatePartitions]] so the restore cannot
-    * be forgotten (ADVICE r14 #3).
+    * To size its state partitions, start and run the query inside
+    * [[StatefulNeardupGate.withStatePartitions]].
     */
   def gateStream(docs: DataFrame, horizonMs: Long,
-                 watermarkDelay: String = "0 seconds",
-                 statePartitions: Option[Int] = None): Dataset[Collision] = {
+                 watermarkDelay: String = "0 seconds"): Dataset[Collision] = {
     val spark = docs.sparkSession
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
     import spark.implicits._
     Dedup.bandsPerRow(docs.withWatermark("ts", watermarkDelay),
         "doc_id", "text", passthrough = Seq("ts"))

@@ -63,42 +63,15 @@ object StatefulNeardupGate {
     }
   }
 
-  /** Target band rows per state partition per micro-batch — the
-    * production sizing rule behind [[autoStatePartitions]], measured
-    * (VERDICT r12 #5 / r13 #5): the gate's per-trigger floor is
-    * per-partition RocksDB store machinery (open/commit/changelog),
-    * ~94-98% of trigger wall, so oversizing the stateful shuffle
-    * multiplies fixed cost — the p8 experiment (12.5k docs x 3 bands
-    * = 37.5k band rows/batch over 8 instead of 32 partitions, ~4.7k
-    * rows/store) ran 49-64% faster than the 32-partition default on
-    * identical plans. 5000 rows/store keeps each store's per-batch
-    * work well above its fixed cost while staying far inside memory.
-    */
-  val RowsPerStatePartition = 5000L
-
-  /** State-partition count for an expected per-micro-batch document
-    * volume: ceil(docs × bands / [[RowsPerStatePartition]]) clamped to
-    * [1, cores]. Streaming state partitioning is fixed at checkpoint
-    * creation from `spark.sql.shuffle.partitions`, so this must be
-    * decided BEFORE the query first starts — pass the result as
-    * [[gateStream]]'s `statePartitions`.
-    */
-  def autoStatePartitions(docsPerBatch: Long, cores: Int): Int = {
-    val bandRows = docsPerBatch * Dedup.MinhashBands
-    math.max(1, math.min(cores,
-      math.ceil(bandRows.toDouble / RowsPerStatePartition).toInt))
-  }
-
   /** Runs `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the prior value in a finally (ADVICE r14 #3: gateStream
-    * pins the conf as a side effect — state partitioning is frozen
-    * from it at the query's first start, so it cannot be a plan-level
-    * hint — and a caller that forgot to restore silently ran all later
-    * batch work at the reduced partition count). The body must cover
-    * the streaming query's START AND COMPLETION, not just plan
-    * construction: the conf is read when the first micro-batch is
-    * planned, so restoring before the query starts would un-pin it.
-    * No-op wrapper when `n` is None.
+    * restoring the prior value in a finally. Streaming state
+    * partitioning is frozen from that conf when the query first starts,
+    * so it cannot be a plan-level hint; the body must cover the
+    * streaming query's start AND completion, not just plan
+    * construction. Sizing matters for the gates: their per-trigger
+    * floor is per-store RocksDB machinery, and on 37.5k band rows per
+    * batch 8 stores ran 49-64% faster than 32. No-op wrapper when `n`
+    * is None.
     */
   def withStatePartitions[T](spark: org.apache.spark.sql.SparkSession,
       n: Option[Int])(body: => T): T = {
@@ -108,25 +81,15 @@ object StatefulNeardupGate {
   }
 
   /** The streaming plan over a documents-shaped stream (doc_id, text).
-    *
-    * `statePartitions`: when set, pins `spark.sql.shuffle.partitions`
-    * on the session BEFORE the plan is built (state partitioning is
-    * frozen into the checkpoint at first start, so it cannot be a
-    * plan-level hint) — size it with [[autoStatePartitions]]. The
-    * session conf stays mutated (the pin must survive until the
-    * query's first batch is planned); run the whole start-to-finish
-    * arm inside [[withStatePartitions]] so the restore cannot be
-    * forgotten (ADVICE r14 #3).
+    * To size its state partitions, start and run the query inside
+    * [[withStatePartitions]].
     */
-  def gateStream(docs: DataFrame,
-                 statePartitions: Option[Int] = None): Dataset[Collision] = {
+  def gateStream(docs: DataFrame): Dataset[Collision] = {
     val spark = docs.sparkSession
     // transformWithState is RocksDB-only; pin the provider before the
     // query starts (no-op if already set)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
     import spark.implicits._
     Dedup.bandsPerRow(docs, "doc_id", "text")
       .select(col("doc"), col("band_idx").cast("int").as("band_idx"),

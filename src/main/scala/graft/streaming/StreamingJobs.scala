@@ -229,7 +229,7 @@ object StreamingJobs {
     * deterministic monotone mtime so the file source processes batches
     * in sequence order (its listing order is mtime).
     */
-  private[graft] def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
+  private def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft-inc-stage")
     b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)

@@ -28,6 +28,12 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     assert(Dedup.keepNearDupSurvivors(noDocs, "doc_id", "text").count() == 0)
   }
 
+  test("chunker on an empty corpus: zero rows, the chunk table's columns") {
+    val chunks = graft.pipeline.Chunker.chunkTable(noDocs, "doc_id", "text")
+    assert(chunks.columns.toSeq == Seq("chunk_id", "text", "n_tokens", "n_records"))
+    assert(chunks.count() == 0)
+  }
+
   test("map stage on an empty chunk table: zero rows, zero model calls") {
     CountingClient.reset()
     val noChunks = Seq.empty[(Long, String)].toDF("chunk_id", "text")

@@ -578,21 +578,51 @@ class MultimodalSpec extends AnyFunSuite {
       s"the DEPTH guard must fire, got: ${e.getMessage}")
   }
 
-  test("VideoScaleBench synthesis: blobs are real decodable MJPEG-AVIs and " +
-    "the planted re-encode pairs (and ONLY those) survive the pipeline") {
-    import graft.tools.VideoScaleBench
+  // ---- synthetic MJPEG-AVI video corpus ----------------------------
+
+  private val FramesPerVideo = 12
+  private val FrameW = 16
+  private val FrameH = 384 // 48 blocks of 8 rows -> one block per phash cell
+
+  /** Deterministic per-(video, frame, block) brightness bit — a
+    * splitmix64-style scramble, so fresh videos carry independent
+    * 48-bit per-frame signatures.
+    */
+  private def blockBit(id: Long, frame: Int, block: Int): Boolean = {
+    var z = id * 0x9E3779B97F4A7C15L + frame * 0xBF58476D1CE4E5B9L +
+      block * 0x94D049BB133111EBL
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    (z ^ (z >>> 31)) % 2 == 0
+  }
+
+  /** Video `id`: 12 quality-0.9 JPEG frames, each 48 vertical 8-row
+    * blocks that are independently bright or dark. One block is one
+    * MediaPhash cell (6144 luma bytes / 48 cells), aligned with the
+    * JPEG 8×8 DCT grid, so q85 re-encodes keep block means crisp, and
+    * unrelated videos sit at E[ham] ≈ 24, far above the ≤ 8 gate.
+    * Ids ≡ 3 (mod 4) are per-frame re-decode→q85 re-encodes of id−1:
+    * different bytes, same perceptual content.
+    */
+  private def videoBlob(id: Long): Array[Byte] = {
+    val src = if (id % 4 == 3) id - 1 else id
+    val frames = (0 until FramesPerVideo).map(k => jpegBytes(
+      grayImage(FrameW, FrameH, (_, y) => if (blockBit(src, k, y / 8)) 220 else 40), 0.9f))
+    aviMjpeg(if (src == id) frames else frames.map(j => jpegBytes(
+      javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(j)), 0.85f)))
+  }
+
+  test("synthetic MJPEG-AVIs decode; only the planted re-encode pairs survive") {
     import graft.multimodal.AviMjpegFrames
     // every blob decodes through the real walker to the declared frames
-    val frames = AviMjpegFrames.decodeFrames(VideoScaleBench.blobFor(0L))
-    assert(frames.length == VideoScaleBench.FramesPerVideo)
-    assert(frames.forall(_.length ==
-      VideoScaleBench.FrameW * VideoScaleBench.FrameH))
+    val frames = AviMjpegFrames.decodeFrames(videoBlob(0L))
+    assert(frames.length == FramesPerVideo)
+    assert(frames.forall(_.length == FrameW * FrameH))
     // a re-encode (id%4==3) carries different bytes than its source
-    assert(!java.util.Arrays.equals(
-      VideoScaleBench.blobFor(3L), VideoScaleBench.blobFor(2L)))
+    assert(!java.util.Arrays.equals(videoBlob(3L), videoBlob(2L)))
     // at n=8 the planted pairs are exactly (2,3) and (6,7); fresh videos
     // carry independent seeded 48-bit signatures, so nothing else pairs
-    val blobs = (0L until 8L).map(id => id -> VideoScaleBench.blobFor(id))
+    val blobs = (0L until 8L).map(id => id -> videoBlob(id))
       .toDF("doc_id", "media")
     val pairs = graft.queries.Multimodal
       .videoPhashNeardup(blobs, AviMjpegFrames).collect()

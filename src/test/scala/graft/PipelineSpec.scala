@@ -135,6 +135,20 @@ class ChunkerSpec extends AnyFunSuite {
   }
 }
 
+class PipelineSpec extends AnyFunSuite {
+  import TestSpark.spark
+  import spark.implicits._
+
+  test("flagship entry: chunks with their filtered model results") {
+    val out = SparkEntry.entry(spark)
+    assert(out.columns.toSeq == Seq("chunk_id", "text", "n_tokens", "n_records", "result"))
+    val results = out.select("result").as[String].collect()
+    assert(results.nonEmpty)
+    val lines = results.flatMap(_.split("\n")).filter(_.trim.nonEmpty)
+    assert(lines.forall(_.contains("merge")), lines.filterNot(_.contains("merge")).take(3).mkString(" | "))
+  }
+}
+
 class LlmMapSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -292,6 +306,22 @@ class MemoCacheSpec extends AnyFunSuite {
     MemoCache.compactMemo(spark, dir) // idempotent
     MemoCache.compactMemo(spark, dir + "_missing") // no-op on absent path
     assert(spark.read.parquet(dir).count() == 2)
+  }
+
+  test("a memo path holding another table throws before any model call") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo5").toString + "/memo"
+    Seq(1, 2).toDF("a").write.parquet(dir)
+    def files() = new java.io.File(dir).list().sorted.toSeq
+    val before = files()
+    val chunks = Seq((0L, "alpha keep")).toDF("chunk_id", "text")
+    CountingClient.reset()
+    val e = intercept[IllegalArgumentException](
+      MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir))
+    assert(e.getMessage.contains("not a memo table"), e.getMessage)
+    assert(CountingClient.calls.get() == 0)
+    assert(files() == before, "the foreign table must not be appended to")
+    intercept[IllegalArgumentException](MemoCache.compactMemo(spark, dir))
+    assert(files() == before)
   }
 }
 

@@ -14,6 +14,33 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
+  /** Runs `mkPlan` over `batches` as separate micro-batches and returns
+    * the state rows (summed over the stateful operators) after each
+    * data batch, in batch order, read from the progress events of the
+    * query named `name`.
+    */
+  private def stateRowsPerBatch(batches: Seq[org.apache.spark.sql.DataFrame],
+      mkPlan: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      name: String): Seq[Long] = {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == name) seen.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      StreamingJobs.runIncremental(spark, batches, mkPlan, name)
+      org.apache.spark.graft.ListenerBusHook
+        .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    } finally spark.streams.removeListener(listener)
+    seen.toArray(Array.empty[StreamingQueryProgress]).toSeq
+      .filter(_.numInputRows > 0).sortBy(_.batchId)
+      .map(_.stateOperators.map(_.numRowsTotal).sum)
+  }
+
   test("streaming tumbling window == batch q35") {
     val stream = StreamingJobs.eventsStream(spark, TestSpark.sf0001)
     val got = StreamingJobs.runToCompletion(spark,
@@ -594,6 +621,62 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // members (105..168), not the first 64 the unbounded gate keeps
     val lastFlood = got.filter(c => c._1 == 169L && c._3 == 0).map(_._2)
     assert(lastFlood == (105L to 168L).toSet)
+    graft.SessionCache.clear()
+  }
+
+  test("keyed state grows with keys, not rows: transformWithState running " +
+    "stats hold one state row per user") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // three micro-batches of `rows` events each, spread round-robin over
+    // `keys` users
+    def batches(rows: Int, keys: Int) = (0 until 3).map { b =>
+      (0 until rows).map { i =>
+        val id = (b * rows + i).toLong
+        (id, id % keys, 1.0)
+      }.toDF("event_id", "user_id", "value")
+        .withColumn("ts", timestamp_seconds(col("event_id")))
+    }
+    def lastStateRows(rows: Int, keys: Int, name: String) = {
+      val perBatch = stateRowsPerBatch(batches(rows, keys),
+        df => graft.streaming.StatefulRunning.runningStats(df).toDF(), name)
+      assert(perBatch.size == 3, s"$name: $perBatch")
+      perBatch.last
+    }
+    val base = lastStateRows(8, 4, "t_keys_base")
+    val rowsX4 = lastStateRows(32, 4, "t_keys_rows_x4")
+    val keysX4 = lastStateRows(8, 16, "t_keys_keys_x4")
+    assert(base > 0)
+    assert(rowsX4 == base, s"4x rows on the same keys: $rowsX4 vs $base")
+    assert(keysX4 == 4 * base, s"4x keys on the same rows: $keysX4 vs $base")
+  }
+
+  test("bounded gate state plateaus while the unbounded gate's grows " +
+    "every batch on the same stream") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // six batches of ten unrelated docs (no two share a shingle), event
+    // time ts = doc_id ms, so the horizon below spans two batches of ids
+    val perBatch = 10
+    val batches = (0 until 6).map { b =>
+      (0 until perBatch).map { i =>
+        val id = (b * perBatch + i).toLong
+        (id, s"a$id b$id c$id d$id")
+      }.toDF("doc_id", "text")
+        .withColumn("ts", timestamp_millis(col("doc_id")))
+    }
+    val bounded = stateRowsPerBatch(batches, df => graft.streaming
+      .BoundedNeardupGate.gateStream(df, horizonMs = 2L * perBatch).toDF(),
+      "t_gate_state_bounded")
+    val unbounded = stateRowsPerBatch(batches, df => graft.streaming
+      .StatefulNeardupGate.gateStream(df.drop("ts")).toDF(),
+      "t_gate_state_unbounded")
+    assert(bounded.size == 6 && unbounded.size == 6, s"$bounded / $unbounded")
+    // from batch 3 on (Spark numbers batches from 0) the state holds a
+    // horizon's worth of docs: event-time timers clear the older ones
+    assert(bounded.last <= bounded(3), s"bounded gate state rows: $bounded")
+    assert(unbounded.zip(unbounded.tail).forall { case (a, b) => b > a },
+      s"unbounded gate state rows: $unbounded")
     graft.SessionCache.clear()
   }
 }
