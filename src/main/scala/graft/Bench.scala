@@ -23,13 +23,13 @@ import scala.util.control.NonFatal
   *    With 5 passes the statistic needs three bad passes to move.
   *    "value" = sum of the per-entry trimmed means over plan queries
   *    and shared builds (see [[summarize]]);
-  *  - caches (Spark catalog + graft chunk-table memos + registered
-  *    persisted intermediates) are cleared before EVERY pass, so each
-  *    pass pays identical cold-plan work and passes are comparable;
-  *  - every query is fully materialized through the `noop` sink — a
-  *    `count()` would let Catalyst prune the projections being measured;
-  *  - failures are REPORTED (per-query "errors" map + rc!=0), never
-  *    swallowed; warmup ignores only NonFatal errors.
+  *  - each pass is one [[Harness.pass]]: caches cleared first, so every
+  *    pass pays identical cold-plan work; every entry materialized
+  *    through the `noop` sink; failures REPORTED (per-query "errors"
+  *    map + rc!=0), never swallowed; every entry metered —
+  *    "executor_cpu_s", "shuffle_write_bytes" and "spill_bytes" (disk
+  *    spill) carry the same across-pass statistic as "queries" for
+  *    every timed entry.
   *
   * Host load is not corrected for here: a speed claim is a paired,
   * alternating parent/change run of the perfbench harness, not a
@@ -115,29 +115,24 @@ object Bench {
     // round-over-round purely from attribution).
     val shared = SparkEntry.sharedBuilds.filter(kv => keep(kv._1))
     val entries = shared ++ names.map(n => n -> SparkEntry.queries(n))
-    if (warmDir.nonEmpty) Harness.warmUp(spark, warmDir, entries)
+    if (warmDir.nonEmpty) Harness.pass(spark, warmDir, entries)
 
-    var errors = Map.empty[String, String]
-    def timeOne(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try body
-      catch { case e: Throwable =>
-        if (!errors.contains(name))
-          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val timings = (1 to passes).map { _ =>
-      Harness.clear(spark)
-      entries.map { case (n, fn) => timeOne(n)(Harness.materialize(fn(spark, sfDir))) }.toMap
-    }
-    val summary = summarize(timings, entries.map(_._1), errors.keySet)
+    val runs = (1 to passes).map(_ => Harness.pass(spark, sfDir, entries).toMap)
+    val errors = entries.flatMap { case (n, _) =>
+      runs.flatMap(_(n).error).headOption.map(n -> _) }.toMap
+    val summary = summarize(runs.map(_.map { case (n, m) => n -> m.sec }),
+      entries.map(_._1), errors.keySet)
 
     import Harness.{num, str}
-    def jmap(m: Seq[(String, Double)]) =
-      m.map { case (k, v) => str(k) + ":" + num(v) }.mkString("{", ",", "}")
+    def jmap(m: Seq[(String, Double)], fmt: Double => String = num) =
+      m.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString("{", ",", "}")
+    // the meters of every timed entry, under the same across-pass
+    // statistic as "queries"; spill_bytes is disk spill
+    val timed = entries.map(_._1).filterNot(errors.contains)
+    def meter(f: Harness.Measure => Double) = timed.map(n => n -> stat(runs.map(r => f(r(n)))))
+    val bytes = (v: Double) => BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toString
     val es = errors.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${num(summary.value)},"value_min":${num(summary.valueMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num(summary.value)},"value_min":${num(summary.valueMin)},"unit":"sec","passes":${runs.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"executor_cpu_s":${jmap(meter(_.cpuSec))},"shuffle_write_bytes":${jmap(meter(_.shuffleWrite.toDouble), bytes)},"spill_bytes":${jmap(meter(_.diskSpill.toDouble), bytes)},"errors":$es,"sf":"$sfDir"}"""
     // The full per-query line outgrew the driver's 2000-char stdout tail
     // window at ~136 queries (r3/r4/r5 all recorded parsed:null because
     // the line's HEAD — "{"metric":... — fell outside the window). So:
@@ -163,7 +158,7 @@ object Bench {
       catch { case NonFatal(e) => System.err.println(s"bench detail write failed ($p): $e") }
     println(line)
     spark.stop()
-    val compact = s"""{"metric":"total","value":${num(summary.value)},"unit":"sec","passes":${timings.size},"n_queries":${summary.queries.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
+    val compact = s"""{"metric":"total","value":${num(summary.value)},"unit":"sec","passes":${runs.size},"n_queries":${summary.queries.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
     println(compact)
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,14 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.graft.ListenerBusHook
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.util.control.NonFatal
 
 /** What graft's mains (Bench, Verify, Cli and the `tools`)
   * share: the session they run in, the dev name filter, the passes
-  * count, the warm-up/clear/materialize steps of a timed pass, the
-  * JSON scalars of their artifacts and temp-dir removal.
+  * count, the one timed and metered catalog [[pass]] (with its clear
+  * and materialize steps), the JSON scalars of their artifacts and
+  * temp-dir removal. No main keeps its own timing loop or stage
+  * listener; a warm-up is a [[pass]] whose measures are dropped.
   */
 object Harness {
 
@@ -89,14 +94,65 @@ object Harness {
     spark.catalog.clearCache()
   }
 
-  /** Materializes each entry once on the small `dir`, so timed passes
-    * measure plans, not JVM/codegen/session warm-up. Failures are left
-    * to the timed passes to report.
+  /** One entry's cost in one [[pass]]: wall seconds, executor CPU
+    * seconds, shuffle-write bytes, memory- and disk-spill bytes, and
+    * the error that ended it, if any (its wall time is then a
+    * fast-fail, not a measurement).
     */
-  def warmUp(spark: SparkSession, dir: String, entries: Seq[Entry]): Unit =
-    entries.foreach { case (_, fn) =>
-      try materialize(fn(spark, dir)) catch { case NonFatal(_) => () }
-    }
+  final case class Measure(sec: Double, cpuSec: Double, shuffleWrite: Long,
+      memSpill: Long, diskSpill: Long, error: Option[String])
+
+  /** Task metrics summed over the stages completed since [[reset]]: a
+    * stage-completed event carries its stage's summed TaskMetrics.
+    */
+  private final class Meter extends SparkListener {
+    val cpuNs, shuffleWrite, memSpill, diskSpill = new AtomicLong
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+      Option(sc.stageInfo.taskMetrics).foreach { m =>
+        cpuNs.addAndGet(m.executorCpuTime)
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        memSpill.addAndGet(m.memoryBytesSpilled)
+        diskSpill.addAndGet(m.diskBytesSpilled)
+      }
+    def reset(): Unit = Seq(cpuNs, shuffleWrite, memSpill, diskSpill).foreach(_.set(0))
+  }
+
+  /** Waits until every queued listener event has been delivered, so a
+    * late stage-completed event never lands on the next entry.
+    */
+  private def drainBus(spark: SparkSession): Unit =
+    try ListenerBusHook.waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
+    catch { case _: TimeoutException =>
+      System.err.println("WARN listener bus drain timed out") }
+
+  /** One timed, metered pass: clears the caches, then materializes each
+    * entry once on `dir` and measures it (the timer stops before the
+    * listener bus is drained). A failing entry is recorded, not thrown,
+    * and the pass goes on. `report` sees each measure as it is taken.
+    */
+  def pass(spark: SparkSession, dir: String, entries: Seq[Entry],
+      report: (String, Measure) => Unit = (_, _) => ()): Seq[(String, Measure)] = {
+    clear(spark)
+    val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
+    try {
+      drainBus(spark)
+      entries.map { case (name, fn) =>
+        meter.reset()
+        val t0 = System.nanoTime()
+        val error =
+          try { materialize(fn(spark, dir)); None }
+          catch { case e: Throwable =>
+            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        drainBus(spark)
+        val m = Measure(sec, meter.cpuNs.get / 1e9, meter.shuffleWrite.get,
+          meter.memSpill.get, meter.diskSpill.get, error)
+        report(name, m)
+        name -> m
+      }
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
 
   /** JSON string literal. Escapes backslash, quote and ALL control
     * chars (< 0x20): a tab or CR in builder-authored SQL would otherwise

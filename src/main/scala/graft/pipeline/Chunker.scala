@@ -219,13 +219,4 @@ object Chunker {
     flush()
     chunks.result().filter(_.nonEmpty)
   }
-
-  /** greedyPack as a Dataset for parity checks against [[chunkTable]]. */
-  def greedyChunkTable(spark: SparkSession, text: String,
-                       budget: Int = DefaultBudget): DataFrame = {
-    import spark.implicits._
-    greedyPack(text, budget).zipWithIndex
-      .map { case (t, i) => (i.toLong, t, TokenCount.count(t).toLong) }
-      .toDF("chunk_id", "text", "n_tokens")
-  }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.SessionCache
 
@@ -61,12 +62,14 @@ object MemoCache {
     Some(df)
   }
 
+  /** The memo, or on a cold cache an empty LocalRelation: the
+    * optimizer prunes the dedup, both joins and the union against it,
+    * leaving the fresh results alone.
+    */
   private def readMemo(spark: SparkSession, memoPath: String): DataFrame =
     memoTable(spark, memoPath).getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("result", org.apache.spark.sql.types.StringType)))))
+      java.util.List.of[Row](), StructType(Seq(
+        StructField("key", StringType), StructField("result", StringType)))))
 
   /** Run the map stage with memoization.
     * chunks must have (chunk_id, text). Returns (chunk_id, text, result).

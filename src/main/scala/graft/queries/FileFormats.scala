@@ -33,11 +33,22 @@ import graft.sources.FileSources
   */
 object FileFormats {
 
-  /** Deterministic scratch dir per sf input; re-evaluations overwrite. */
-  private[queries] def scratch(d: String, leaf: String): String = {
+  /** This JVM's scratch root, deleted at exit: two processes on the
+    * same sf input never share (and delete) each other's files.
+    */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch")
+    sys.addShutdownHook(if (java.nio.file.Files.exists(root)) graft.Harness.deleteTree(root))
+    root
+  }
+
+  /** Scratch dir per sf input under [[scratchRoot]]; re-evaluations
+    * overwrite.
+    */
+  private[graft] def scratch(d: String, leaf: String): String = {
     val key = java.security.MessageDigest.getInstance("SHA-256")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_roundtrip_$key/$leaf"
+    scratchRoot.resolve(s"roundtrip_$key").resolve(leaf).toString
   }
 
   /** Hash-bucketed text digest (see object doc). `withCorrupt` adds the

@@ -63,6 +63,11 @@ object Graph {
       held = held.take(2)
       state
     }
+
+    /** Release every held state once the loop is done with them: call
+      * it only after everything derived from `state` is materialized.
+      */
+    def releaseAll(): Unit = { held.foreach(SessionCache.release); held = Nil }
   }
 
   /** Run `step` up to `maxSweeps` times, STOPPING EARLY after the

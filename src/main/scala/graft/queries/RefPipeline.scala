@@ -28,10 +28,6 @@ object RefPipeline {
   private val Keyword = "merge"
   private val Prompt = "Keep the lines about merging."
 
-  /** Unique per process (see ref_memo_resume). */
-  private lazy val memoTmpRoot: String =
-    java.nio.file.Files.createTempDirectory("graft-memo-resume").toString
-
   /** DuckDB fragment: the engine's canonical token count (must stay in
     * lockstep with graft.expressions.TokenCount).
     */
@@ -125,10 +121,10 @@ object RefPipeline {
     // chunk resolves from the memo: a cached second run makes zero model
     // calls (mapreduce_test.go:210-218), enforced inside the plan.
     "ref_memo_resume" -> ((s, d) => {
-      // per-JVM temp root: concurrent Verify/Bench processes (or other
-      // users) must never share a memo path — one process's clearMemo
-      // would fire mid-query in the other
-      val memoPath = s"${RefPipeline.memoTmpRoot}/memo_${Integer.toHexString(d.hashCode)}"
+      // under the per-JVM scratch root: concurrent Verify/Bench
+      // processes must never share a memo path — one process's
+      // clearMemo would fire mid-query in the other
+      val memoPath = FileFormats.scratch(d, "memo_resume")
       graft.pipeline.MemoCache.clearMemo(s, memoPath)
       val chunks = Chunker.documentChunks(s, d, Budget)
       // run 1: the append inside mapChunksWithMemo materializes eagerly

@@ -891,7 +891,7 @@ object Similarity {
     */
   val KCenterK = 8
 
-  /** Gonzalez greedy k-center with a PERSISTED RUNNING MIN: each sweep
+  /** Gonzalez greedy k-center with a STORED RUNNING MIN: each sweep
     * is one O(N·d) distributed pass — distance to the NEWEST center
     * only, `least()` against the materialized `mind` column, and a
     * TakeOrdered(1) argmax (per-partition top-1 + driver merge; the
@@ -901,10 +901,10 @@ object Similarity {
     * total, the r7 verdict's watch item; this is the documented
     * variant made real, selection-identical by construction
     * (incremental least of the same rounded cosines — least is
-    * associative) and asserted in SimilaritySpec. Peak cache is two
-    * corpus-wide (vec, embedding, mind) tables: the previous sweep's
-    * table is dropped as soon as the argmax has materialized the new
-    * one. Selection ranks on the ROUNDED cosine with a vec_id
+    * associative) and asserted in SimilaritySpec. The sweeps' tables
+    * are [[Graph.Rounds]] states, so at most two corpus-wide (vec,
+    * embedding, mind) tables are stored at once, and none after the
+    * last sweep. Selection ranks on the ROUNDED cosine with a vec_id
     * tie-break — the house rule that keeps both engines' argmax off
     * sub-ulp noise.
     */
@@ -917,27 +917,20 @@ object Similarity {
     var centers = Vector.empty[(Long, Option[Double])]
     if (seedRows.nonEmpty) {
       centers = Vector((seedRows.head._1, None))
-      var cur = e.select(col("vec_id"), col("embedding"),
-          (lit(1.0) - cosine(col("embedding"), typedlit(seedRows.head._2)))
-            .as("mind"))
-        .transform(SessionCache.persist)
-      var prev: Option[DataFrame] = None
+      def dist(c: Seq[Float]) = lit(1.0) - cosine(col("embedding"), typedlit(c))
+      val rounds = new Graph.Rounds(
+        e.select(col("vec_id"), col("embedding"), dist(seedRows.head._2).as("mind")))
       while (centers.size < k) {
-        // the argmax pass is what materializes `cur` into the cache;
-        // only then is the previous sweep's table safe to drop
-        val next = cur.orderBy(col("mind").desc, col("vec_id")).limit(1)
+        // the argmax job reads the whole state, so the next advance may
+        // release the state it came from
+        val next = rounds.state.orderBy(col("mind").desc, col("vec_id")).limit(1)
           .as[(Long, Seq[Float], Double)].collect().head
-        prev.foreach(_.unpersist(false)); prev = None
         centers = centers :+ ((next._1, Some(next._3)))
-        if (centers.size < k) {
-          val upd = cur.select(col("vec_id"), col("embedding"),
-              least(col("mind"),
-                lit(1.0) - cosine(col("embedding"), typedlit(next._2)))
-                .as("mind"))
-            .transform(SessionCache.persist)
-          prev = Some(cur); cur = upd
-        } else cur.unpersist(false)
+        if (centers.size < k)
+          rounds.advance(_.select(col("vec_id"), col("embedding"),
+            least(col("mind"), dist(next._2)).as("mind")))
       }
+      rounds.releaseAll()
     }
     centers.zipWithIndex.map { case ((id, r), i) =>
       (i + 1, id, r.map(x => BigDecimal(x).setScale(6,

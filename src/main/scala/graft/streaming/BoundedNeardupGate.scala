@@ -81,9 +81,10 @@ object BoundedNeardupGate {
       }
       members.put(cur.toArray)
       // One cleanup timer per bucket at the newest member's expiry —
-      // when the watermark passes it, every member is past its last
-      // possible probe window and the whole key clears.
-      val expiry = cur.last.ts_ms + horizonMs + 1
+      // Spark fires it once the watermark reaches it (expiry <=
+      // watermark), and from then on every later arrival (ts >
+      // watermark) ages every member out, so the whole key clears.
+      val expiry = cur.last.ts_ms + horizonMs
       if (cleanupAt.exists()) {
         val prev = cleanupAt.get()
         if (expiry > prev) getHandle.deleteTimer(prev)
@@ -113,7 +114,7 @@ object BoundedNeardupGate {
       if (alive.isEmpty) { members.clear(); cleanupAt.clear() }
       else {
         members.put(alive)
-        val expiry = alive.map(_.ts_ms).max + horizonMs + 1
+        val expiry = alive.map(_.ts_ms).max + horizonMs
         getHandle.registerTimer(expiry)
         cleanupAt.update(expiry)
       }

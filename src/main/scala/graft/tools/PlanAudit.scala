@@ -1,6 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.execution.SparkPlan
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Generates `PLANS.md`: a per-query PHYSICAL-PLAN SHAPE audit over the
   * whole catalog — shuffle/broadcast exchange counts, join strategies,
@@ -29,103 +40,84 @@ object PlanAudit {
     def joins: String = s"$smj/$bhj/$shj/$bnlj"
   }
 
-  def shapeOf(plan: SparkPlan): Shape = {
-    var s = Shape(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    // each persisted lineage is counted ONCE, matching what the first
-    // evaluation actually runs — an iterative query references round
-    // k-1's cached state from several places in round k's plan, and
-    // re-walking it per reference multiplied the counts (q143's 2
-    // pointer-doubling rounds read as 110 shuffles instead of 17)
-    val seenCaches = java.util.Collections.newSetFromMap(
+  /** Every node of `plan`, each visited once (by identity): the walk
+    * goes through adaptive plans, query stages and reused exchanges to
+    * the plans they hold as fields, into cached plans and into the
+    * subquery plans in node expressions (a hand-embedded scalar
+    * subquery — q126's bloom build — still carries a LOGICAL plan at
+    * this stage and is planned first). A persisted lineage is thus
+    * entered once however often the plan reads it — an iterative
+    * query references round k-1's cached state from several places in
+    * round k's plan, and re-walking it per reference multiplied the
+    * counts (q143's 2 pointer-doubling rounds read as 110 shuffles
+    * instead of 17).
+    */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def walk(p: SparkPlan): Unit = p.foreach {
-      case n: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(n.executedPlan)
-      // in an EXECUTED adaptive plan, materialized stages are
-      // QueryStageExec leaves whose real plan is a field, not a child
-      case n: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(n.plan)
-      case n: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
-          if n.hasSkewedPartition =>
-        s = s.copy(skewReads = s.skewReads + 1)
-      case n: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        // count the cached lineage too: it runs once per session, but
-        // it is real work the query's first evaluation pays
-        if (seenCaches.add(n.relation.cachedPlan)) walk(n.relation.cachedPlan)
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        s = s.copy(shuffles = s.shuffles + 1)
-      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike =>
-        s = s.copy(bcasts = s.bcasts + 1)
-      case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-        s = s.copy(smj = s.smj + 1)
-      case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-        s = s.copy(bhj = s.bhj + 1)
-      case _: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec =>
-        s = s.copy(shj = s.shj + 1)
-      case _: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
-        s = s.copy(bnlj = s.bnlj + 1)
-      case _: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-        s = s.copy(wscg = s.wscg + 1)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s = s.copy(scans = s.scans + 1,
-          pushed = s.pushed + (if (f.dataFilters.nonEmpty) 1 else 0))
-      case _: org.apache.spark.sql.execution.window.WindowExec =>
-        s = s.copy(windows = s.windows + 1)
-      case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
-        s = s.copy(aggs = s.aggs + 1)
-      case _ =>
+    val out = Seq.newBuilder[SparkPlan]
+    def visit(p: SparkPlan): Unit = if (seen.add(p)) {
+      out += p
+      val held = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case im: InMemoryTableScanExec => Seq(im.relation.cachedPlan)
+        case _ => Nil
+      }
+      val subqueries = p.expressions.flatMap(_.collect {
+        case pe: PlanExpression[_] => pe.plan
+      }).collect {
+        case sp: SparkPlan => sp
+        case lp: LogicalPlan => p.session.sessionState.executePlan(lp).sparkPlan
+      }
+      (p.children ++ held ++ subqueries).foreach(visit)
     }
-    walk(plan)
-    s
+    visit(plan)
+    out.result()
   }
 
-  /** Minimal extraction of {"name":secs} pairs from the bench detail
-    * line (no JSON library on the classpath; the format is ours).
+  def shapeOf(plan: SparkPlan): Shape =
+    nodes(plan).foldLeft(Shape(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)) { (s, p) => p match {
+      case n: AQEShuffleReadExec if n.hasSkewedPartition => s.copy(skewReads = s.skewReads + 1)
+      case _: ShuffleExchangeLike => s.copy(shuffles = s.shuffles + 1)
+      case _: BroadcastExchangeLike => s.copy(bcasts = s.bcasts + 1)
+      case _: SortMergeJoinExec => s.copy(smj = s.smj + 1)
+      case _: BroadcastHashJoinExec => s.copy(bhj = s.bhj + 1)
+      case _: ShuffledHashJoinExec => s.copy(shj = s.shj + 1)
+      case _: BroadcastNestedLoopJoinExec => s.copy(bnlj = s.bnlj + 1)
+      case _: WholeStageCodegenExec => s.copy(wscg = s.wscg + 1)
+      case f: FileSourceScanExec =>
+        s.copy(scans = s.scans + 1, pushed = s.pushed + (if (f.dataFilters.nonEmpty) 1 else 0))
+      case _: WindowExec => s.copy(windows = s.windows + 1)
+      case _: BaseAggregateExec => s.copy(aggs = s.aggs + 1)
+      case _ => s
+    }}
+
+  /** The bench detail line at `path`, if the file exists. */
+  private def benchDetail(path: String): Option[JsonNode] = {
+    val f = new java.io.File(path)
+    if (f.exists) Some(new ObjectMapper().readTree(f)) else None
+  }
+
+  /** Each entry's seconds in a bench detail: its "queries" map plus
+    * its side-effect map, whose names are disjoint.
     */
-  def benchTimes(path: String): Map[String, Double] =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) Map.empty
-    else {
-      val full = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-      // the detail line repeats every name under "queries_min"/"
-      // queries_spread"/"side_effect_queries" — scope to the median map
-      // (plus the side-effect map, whose names are disjoint)
-      // brace-DEPTH matched, not first-'}' (ADVICE r8): a nested
-      // object inside the section would silently truncate the slice
-      // and drop bench numbers from PLANS.md
-      def section(tag: String): String = {
-        val i = full.indexOf("\"" + tag + "\":")
-        if (i < 0) "" else {
-          val start = full.indexOf('{', i)
-          if (start < 0) "" else {
-            var depth = 0; var j = start
-            while (j < full.length && (depth > 0 || j == start)) {
-              full.charAt(j) match {
-                case '{' => depth += 1
-                case '}' => depth -= 1
-                case _ =>
-              }
-              j += 1
-            }
-            full.substring(start, j)
-          }
-        }
-      }
-      val txt = section("queries") + section("side_effect_queries")
-      val parsed = "\"(q[0-9]+[a-z0-9_]*|ref_[a-z_]+)\":([0-9]+\\.[0-9]+)".r
-        .findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      // guard against silent truncation: the detail line must cover
-      // (nearly) the whole catalog or the audit is mixing provenances
-      val catalogNames = graft.SparkEntry.queries.keySet
-      val missing = catalogNames -- parsed.keySet
-      require(missing.size <= BenchSlack,
-        s"bench detail at $path parsed ${parsed.size} timings for a " +
-          s"${catalogNames.size}-query catalog (slack $BenchSlack) — " +
-          s"truncated, stale, or a filtered SPARK_GRAFT_ONLY run; " +
-          s"missing: ${missing.toSeq.sorted.mkString(", ")}")
-      parsed
-    }
+  def benchTimes(detail: JsonNode, path: String): Map[String, Double] = {
+    val parsed = Seq("queries", "side_effect_queries")
+      .flatMap(k => Option(detail.get(k)).toSeq.flatMap(_.properties.asScala))
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+    // guard against silent truncation: the detail line must cover
+    // (nearly) the whole catalog or the audit is mixing provenances
+    val catalogNames = graft.SparkEntry.queries.keySet
+    val missing = catalogNames -- parsed.keySet
+    require(missing.size <= BenchSlack,
+      s"bench detail at $path parsed ${parsed.size} timings for a " +
+        s"${catalogNames.size}-query catalog (slack $BenchSlack) — " +
+        s"truncated, stale, or a filtered SPARK_GRAFT_ONLY run; " +
+        s"missing: ${missing.toSeq.sorted.mkString(", ")}")
+    parsed
+  }
 
   /** How many catalog entries may lack a bench timing before
     * [[benchTimes]] declares the detail file stale/truncated. Slack
@@ -146,7 +138,8 @@ object PlanAudit {
     // stages materialize — audit the STATIC plan so codegen spans
     // and exchange counts reflect the full pre-runtime shape
     val spark = graft.Harness.session(8, "spark.sql.adaptive.enabled" -> "false")
-    val times = benchTimes(benchPath)
+    val detail = benchDetail(benchPath)
+    val times = detail.map(benchTimes(_, benchPath)).getOrElse(Map.empty)
     val static = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> shapeOf(fn(spark, sfDir).queryExecution.executedPlan)
     }
@@ -188,18 +181,11 @@ object PlanAudit {
     // `bench s` column came from, by mtime + sf + total — so a reader
     // can tell a local re-run from the official driver bench instead
     // of silently mixing provenances.
-    val prov = {
-      val p = java.nio.file.Paths.get(benchPath)
-      if (!java.nio.file.Files.exists(p)) s"(no bench detail at $benchPath)"
-      else {
-        val full = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        def field(t: String) =
-          ("\"" + t + "\":\"?([^,\"}]*)").r.findFirstMatchIn(full)
-            .map(_.group(1)).getOrElse("?")
-        s"`$benchPath` (mtime ${java.nio.file.Files.getLastModifiedTime(p)}, " +
-          s"sf=${field("sf")}, total=${field("value")} s, " +
-          s"passes=${field("passes")})"
-      }
+    val prov = detail.fold(s"(no bench detail at $benchPath)") { j =>
+      def field(t: String) = Option(j.get(t)).fold("?")(_.asText)
+      s"`$benchPath` (mtime ${java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(benchPath))}, sf=${field("sf")}, " +
+        s"total=${field("value")} s, passes=${field("passes")})"
     }
     val intro =
       s"""# PLANS — physical-plan shape audit over the full catalog

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 import graft.Harness
 
 /** Empirical scale probe (VERDICT r7 #5, widened r9 #2/#3, widened to
@@ -30,14 +26,13 @@ import graft.Harness
   * second queries and would false-flag them; a sub-second query cannot
   * hide a scale cliff that matters).
   *
-  * Method mirrors `graft.Bench`: warmup pass at sf0.001, caches cleared
-  * before every timed pass, noop-sink materialization, per-query MIN of
-  * `passes` wall (min, not median — the probe asks "what does the plan
-  * cost", and the occasional GC pause is noise the ratio must not
-  * absorb) and per-query MAX of the telemetry counters (conservative
-  * for a spill flag). Telemetry attribution waits for the listener bus
-  * to DRAIN after each query (ADVICE r9: a fixed 300 ms sleep let late
-  * stage-completed events bleed into the next query's counters).
+  * Method: a warmup pass at sf0.001, then each timed pass is one
+  * [[graft.Harness.pass]], as in `graft.Bench` (caches cleared first,
+  * noop-sink materialization, meters read after a listener-bus drain);
+  * per query the MIN of `passes` wall (min, not median — the probe
+  * asks "what does the plan cost", and the occasional GC pause is
+  * noise the ratio must not absorb) and the MAX of the telemetry
+  * counters (conservative for a spill flag).
   */
 object ScaleProbe {
 
@@ -137,26 +132,7 @@ object ScaleProbe {
     "events/rel" -> "q80_session_concurrency",
     "events/rel" -> "q124_winsorize")
 
-  /** Aggregated task metrics since the last [[reset]] — stage-completed
-    * events carry the stage's summed TaskMetrics, so summing those
-    * gives query totals once the listener bus drains.
-    */
-  private final class Telemetry extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        ()
-      }
-    }
-    def reset(): Unit = { shuffleWrite.set(0); memSpill.set(0); diskSpill.set(0) }
-  }
-
+  /** One entry's wall seconds (NaN when it failed) and meters. */
   final case class Measure(sec: Double, shuffleWrite: Long, memSpill: Long,
                            diskSpill: Long) {
     def merge(o: Measure): Measure = Measure(
@@ -204,17 +180,6 @@ object ScaleProbe {
     val passes = Harness.passes(2)
     val fullSweep = sys.env.getOrElse("SPARK_GRAFT_SCALE_FULL", "1") != "0"
     val spark = Harness.session(32)
-    val tele = new Telemetry
-    spark.sparkContext.addSparkListener(tele)
-
-    // deterministic telemetry cut-off: drain the async listener bus
-    // before reading counters (late events mis-attributed ~query-sized
-    // byte counts under the old fixed sleep)
-    def drainBus(): Unit =
-      try org.apache.spark.graft.ListenerBusHook
-        .waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("SCALEPROBE WARN listener bus drain timed out") }
 
     val keep = Harness.only()
     val headNames = Headliners.map(_._2).filter(keep)
@@ -244,7 +209,7 @@ object ScaleProbe {
 
     // warm-up corpus: the sf0.001 fixture beside the default sf0.1 base
     val warmDir = java.nio.file.Paths.get(DefaultBase).resolveSibling("sf0.001").toString
-    Harness.warmUp(spark, warmDir,
+    Harness.pass(spark, warmDir,
       shared ++ warmNames.map(n => n -> graft.SparkEntry.queries(n)))
 
     // a per-query failure (e.g. a disk-filling spill) must not lose the
@@ -257,29 +222,15 @@ object ScaleProbe {
     // queries, so ratios stay comparable.
     def time(dir: String, factor: Int): Map[String, Measure] =
       (1 to passes).map { p =>
-        Harness.clear(spark)
         spark.conf.set("spark.sql.shuffle.partitions",
           (32 * math.max(1, math.ceil(factor / 10.0).toInt)).toString)
-        entriesFor(factor).map { case (n, fn) =>
-          tele.reset()
-          val t0 = System.nanoTime()
-          val sec = try {
-            Harness.materialize(fn(spark, dir))
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"SCALEPROBE FAIL $n @ $dir: " +
-                String.valueOf(e.getMessage).take(200))
-              Double.NaN
-          }
-          drainBus()
-          val m = Measure(sec, tele.shuffleWrite.get, tele.memSpill.get,
-            tele.diskSpill.get)
+        Harness.pass(spark, dir, entriesFor(factor), (n, m) => {
+          m.error.foreach(e => System.err.println(s"SCALEPROBE FAIL $n @ $dir: $e"))
           System.err.println(f"SCALEPROBE $dir pass $p $n ${m.sec}%.2f s " +
             f"shufW=${m.shuffleWrite / 1e6}%.0f MB " +
             f"spill=${m.memSpill / 1e6}%.0f/${m.diskSpill / 1e6}%.0f MB")
-          n -> m
-        }.toMap
+        }).map { case (n, m) => n -> Measure(if (m.error.isEmpty) m.sec else Double.NaN,
+          m.shuffleWrite, m.memSpill, m.diskSpill) }.toMap
       }.reduce((a, b) => a.map { case (k, v) => k -> v.merge(b(k)) })
 
     val base = time(baseDir, 1)

@@ -137,4 +137,14 @@ class FileFormatsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     assert(got == rows)
   }
+
+  test("round-trip scratch paths live under this JVM's own temp root") {
+    import graft.queries.FileFormats.{scratch, scratchRoot}
+    val root = scratchRoot
+    assert(java.nio.file.Files.isDirectory(root))
+    assert(root.getParent == java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+    for (d <- Seq(TestSpark.sf0001, "/some/other/sf"))
+      assert(java.nio.file.Paths.get(scratch(d, "docs_csv")).startsWith(root))
+    assert(scratch(TestSpark.sf0001, "a") != scratch("/some/other/sf", "a"))
+  }
 }

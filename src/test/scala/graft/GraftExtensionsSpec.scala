@@ -8,19 +8,28 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("token_count and vec_dot resolve and evaluate from SQL") {
-    // force TestSpark's context to exist, then build a SIBLING session
-    // (same SparkContext) with the extensions installed
+  /** Runs `body` in a SIBLING of TestSpark's session (same
+    * SparkContext) with the extensions installed.
+    */
+  private def withExtensions(body: SparkSession => Unit): Unit = {
     val base = TestSpark.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
       // withExtensions (not the spark.sql.extensions conf): that conf is
       // STATIC and ignored when the SparkContext already exists, as here
-      val ext = SparkSession.builder()
+      body(SparkSession.builder()
         .master("local[4]")
         .withExtensions(new GraftExtensions)
-        .getOrCreate()
+        .getOrCreate())
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("token_count and vec_dot resolve and evaluate from SQL") {
+    withExtensions { ext =>
       val r1 = ext.sql("SELECT token_count('hello world, tokenize me') AS n")
         .collect()(0).getInt(0)
       assert(r1 == graft.expressions.TokenCount.count("hello world, tokenize me"))
@@ -58,9 +67,35 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // non-literal k/w is rejected loudly, not silently defaulted
       intercept[Exception](
         ext.sql("SELECT winnow_fps('abc', length('abcdefgh'), 4)").collect())
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("every registered function resolves from SQL and rejects a wrong arity and a non-literal integer") {
+    // a sample SQL value per parameter name of the usage signatures
+    val sample = Map(
+      "str" -> "'a b c'", "bin" -> "CAST(x'0a0a1414' AS BINARY)",
+      "arr" -> "array('a b c', 'b c d')",
+      "a" -> "CAST(array(1.0, 2.0) AS array<float>)",
+      "b" -> "CAST(array(1.0, 2.0) AS array<float>)",
+      "v" -> "CAST(array(1.0, 2.0) AS array<float>)",
+      "c" -> "CAST(array(1.0, 2.0) AS array<double>)")
+    val intParams = Set("k", "w", "cells", "funcs", "frames")
+    withExtensions { ext =>
+      var nonLiteralChecked = 0
+      for ((name, usage, arity, _) <- GraftExtensions.functions) {
+        val params = usage.takeWhile(_ != ')').dropWhile(_ != '(').drop(1)
+          .split(",").map(_.trim).toSeq
+        assert(params.size == arity, s"$name: usage $usage vs arity $arity")
+        val args = params.map(p => if (intParams(p)) "2" else sample(p))
+        def call(as: Seq[String]) = ext.sql(s"SELECT $name(${as.mkString(", ")})").collect()
+        assert(call(args).length == 1, name)
+        intercept[Exception](call(args :+ args.last))
+        params.zipWithIndex.filter(pi => intParams(pi._1)).foreach { case (_, i) =>
+          intercept[Exception](call(args.updated(i, "length('ab')")))
+          nonLiteralChecked += 1
+        }
+      }
+      assert(GraftExtensions.functions.size == 14 && nonLiteralChecked == 7)
     }
   }
 }

@@ -210,6 +210,22 @@ class GraphSpec extends AnyFunSuite with CacheCleanup {
     assert(sp(0) == sp(1), s"SSSP plan nodes at 2 and 8 sweeps: $sp")
   }
 
+  test("Rounds.releaseAll: no held state is still stored after the loop ends") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    val rounds = new Graph.Rounds(spark.range(100).toDF("id"))
+    val states = (1 to 3).map { _ =>
+      assert(rounds.state.count() == 100) // the job that reads each state
+      rounds.advance(_.select((col("id") + 1).as("id")))
+    }
+    val held = states.takeRight(2).map(rows)
+    assert(rows(states.head).getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(held.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id)))
+    rounds.releaseAll()
+    assert(held.forall(r => !spark.sparkContext.getPersistentRDDs.contains(r.id) &&
+      r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE))
+  }
+
   test("pointer-doubling CC agrees with converged one-hop CC") {
     val und = Seq((0L, 1L), (1L, 2L), (2L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")

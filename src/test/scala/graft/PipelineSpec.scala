@@ -270,6 +270,22 @@ class MemoCacheSpec extends AnyFunSuite {
     assert(CountingClient.calls.get() == 2, "different prompt must be a cache miss")
   }
 
+  test("a cold memo plans no join and no union: the fresh results alone") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-cold").toString + "/memo"
+    val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
+    val out = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j; case u: Union => u }.isEmpty, plan.treeString)
+    // ... nor does the persisted map stage's own plan
+    assert(graft.tools.PlanAudit.nodes(out.queryExecution.executedPlan)
+      .collect { case j: BaseJoinExec => j; case u: UnionExec => u }.isEmpty)
+    assert(out.orderBy("chunk_id").select("result").as[String].collect().toSeq ==
+      Seq("alpha keep", ""))
+  }
+
   test("clearMemo (C11): cleaned cache forces recompute; idempotent") { // mapreduce_test.go:303-355
     val dir = java.nio.file.Files.createTempDirectory("graft-memo3").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")

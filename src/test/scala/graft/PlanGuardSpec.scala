@@ -200,58 +200,25 @@ class PlanGuardSpec extends AnyFunSuite {
         build.treeString.linesIterator.take(6).mkString("\n")
   }
 
-  /** Walk a physical plan AND every subquery plan hanging off its
-    * expressions (a hand-embedded scalar subquery — q126's bloom build
-    * — still carries a LOGICAL plan at this stage; plan it first).
+  /** Check every node [[tools.PlanAudit.nodes]] reaches: persisted,
+    * adaptive, stage-wrapped, reused and subquery plans included.
     */
   private def inspect(name: String,
                       plan: org.apache.spark.sql.execution.SparkPlan,
-                      offenders: scala.collection.mutable.ArrayBuffer[String]): Unit = {
-    plan.foreach { node =>
-      node match {
-        case _: CartesianProductExec =>
-          offenders += s"$name: CartesianProduct"
-        case b: BroadcastNestedLoopJoinExec if BnljWhitelist.contains(name) =>
-          checkBuildSide(name, b, offenders)
-        case _: BroadcastNestedLoopJoinExec =>
-          offenders += s"$name: BroadcastNestedLoopJoin (not whitelisted)"
-        case w: WindowExec if w.partitionSpec.isEmpty =>
-          offenders += s"$name: Window with empty partition spec"
-        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-          offenders += s"$name: WindowGroupLimit with empty partition spec"
-        // persisted intermediates wrap their plan in an InMemoryRelation
-        // that foreach does NOT enter — without this descent every
-        // .persist() would hide its subtree from the guard
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          inspect(name, im.relation.cachedPlan, offenders)
-        // ... and the cached plan itself is an AdaptiveSparkPlanExec
-        // whose inner plan is a FIELD, not a child — unwrap or the
-        // descent above sees an opaque leaf
-        case aqe: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          inspect(name, aqe.executedPlan, offenders)
-        // finalized adaptive plans park materialized stages (and reused
-        // broadcasts) behind leaf wrappers whose subtree is a field —
-        // descend or the AQE-on walk certifies a hollow plan
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          inspect(name, q.plan, offenders)
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          inspect(name, r.child, offenders)
-        case _ =>
-      }
-      node.expressions.foreach(_.foreach {
-        case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
-          pe.plan match {
-            case sp: org.apache.spark.sql.execution.SparkPlan =>
-              inspect(name, sp, offenders)
-            case lp: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-              inspect(name, spark.sessionState.executePlan(lp).sparkPlan,
-                offenders)
-            case _ =>
-          }
-        case _ =>
-      })
+                      offenders: scala.collection.mutable.ArrayBuffer[String]): Unit =
+    tools.PlanAudit.nodes(plan).foreach {
+      case _: CartesianProductExec =>
+        offenders += s"$name: CartesianProduct"
+      case b: BroadcastNestedLoopJoinExec if BnljWhitelist.contains(name) =>
+        checkBuildSide(name, b, offenders)
+      case _: BroadcastNestedLoopJoinExec =>
+        offenders += s"$name: BroadcastNestedLoopJoin (not whitelisted)"
+      case w: WindowExec if w.partitionSpec.isEmpty =>
+        offenders += s"$name: Window with empty partition spec"
+      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+        offenders += s"$name: WindowGroupLimit with empty partition spec"
+      case _ =>
     }
-  }
 
   test("no catalog plan ships a cartesian, stray nested-loop join, or global window") {
     val d = TestSpark.sf0001
@@ -336,5 +303,33 @@ class PlanGuardSpec extends AnyFunSuite {
     val okOff = scala.collection.mutable.ArrayBuffer.empty[String]
     inspect("q38_cosine_topk", ok.queryExecution.sparkPlan, okOff)
     assert(okOff.isEmpty, s"bounded broadcast falsely flagged: $okOff")
+  }
+
+  test("a cartesian product is caught behind a persisted frame and inside a scalar subquery") {
+    // both hide from a plain tree walk: a persisted frame's plan is a
+    // field of its InMemoryRelation, a subquery's plan sits in an
+    // expression
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val cross = docs.select(col("doc_id").as("a"))
+      .crossJoin(docs.select(col("doc_id").as("b"))).persist()
+    try {
+      val behindPersist = docs.join(cross, col("doc_id") === col("a"))
+      val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+      inspect("planted_persist", behindPersist.queryExecution.sparkPlan, offenders)
+      docs.createOrReplaceTempView("planted_docs")
+      val inSubquery = spark.sql(
+        """SELECT doc_id, (SELECT count(*) FROM planted_docs x
+          |  CROSS JOIN planted_docs y) AS n FROM planted_docs""".stripMargin)
+      inspect("planted_subquery", inSubquery.queryExecution.sparkPlan, offenders)
+      assert(offenders.toSet == Set("planted_persist: CartesianProduct",
+        "planted_subquery: CartesianProduct"), offenders)
+    } finally {
+      cross.unpersist(false)
+      spark.catalog.dropTempView("planted_docs")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
   }
 }

@@ -672,9 +672,11 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       .StatefulNeardupGate.gateStream(df.drop("ts")).toDF(),
       "t_gate_state_unbounded")
     assert(bounded.size == 6 && unbounded.size == 6, s"$bounded / $unbounded")
-    // from batch 3 on (Spark numbers batches from 0) the state holds a
+    // from batch 2 on (Spark numbers batches from 0) the state holds a
     // horizon's worth of docs: event-time timers clear the older ones
-    assert(bounded.last <= bounded(3), s"bounded gate state rows: $bounded")
+    // (measured 60, 120, 180, 180, 180, 180; with timers one ms late
+    // the last doc of each batch stayed a batch longer: 186 from batch 3)
+    assert(bounded.drop(2).forall(_ <= bounded(2)), s"bounded gate state rows: $bounded")
     assert(unbounded.zip(unbounded.tail).forall { case (a, b) => b > a },
       s"unbounded gate state rows: $unbounded")
     graft.SessionCache.clear()
