@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * share: the session they run in, the dev name filter, the passes
   * count, the one timed and metered catalog [[pass]] (with its clear
   * and materialize steps), the JSON scalars of their artifacts and
-  * temp-dir removal. No main keeps its own timing loop or stage
-  * listener; a warm-up is a [[pass]] whose measures are dropped.
+  * the one per-JVM temp root. No main keeps its own timing loop or
+  * stage listener; a warm-up is a [[pass]] whose measures are dropped.
   */
 object Harness {
 
@@ -176,6 +176,23 @@ object Harness {
     */
   def num(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** This JVM's temp root, deleted at exit by a shutdown hook. Every
+    * temp dir graft makes ([[tempDir]], the round-trip scratch paths,
+    * the specs' dirs) lives under it, so two processes never share
+    * (and delete) each other's files and none outlives its JVM.
+    */
+  lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-")
+    sys.addShutdownHook(if (Files.exists(root)) deleteTree(root))
+    root
+  }
+
+  private val tempDirs = new AtomicLong
+
+  /** A fresh, empty directory under [[tempRoot]]. */
+  def tempDir(prefix: String): Path =
+    Files.createDirectory(tempRoot.resolve(s"$prefix-${tempDirs.incrementAndGet()}"))
 
   /** Deletes `root` and everything under it. */
   def deleteTree(root: Path): Unit = {

@@ -53,7 +53,7 @@ object Tables {
     * downstream operations keyed the same way. Filters/projections
     * still reach the scan: PushDownPredicates pushes through
     * RepartitionByExpression, so PushedFilters/ReadSchema are
-    * unchanged (PlanAudit r15 confirms).
+    * unchanged (the r15 physical-plan audit found them so).
     *
     * Placement is MEASURED per operator, not blanket (three full-bench
     * A/Bs, r15): a TABLE-level spread won wherever the downstream is

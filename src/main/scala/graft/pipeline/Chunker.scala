@@ -35,7 +35,8 @@ import graft.expressions.TokenCount
   * therefore uses the classic two-phase prefix sum: range-partition by
   * id, cumsum within each partition, then add per-partition offsets
   * (computed from one tiny row per partition, broadcast back). Only the
-  * per-partition totals (numPartitions rows) ever touch the driver.
+  * per-partition totals (one row per shuffle partition) ever touch the
+  * driver.
   */
 object Chunker {
 
@@ -51,11 +52,9 @@ object Chunker {
     * Adds column `outCol` = inclusive prefix sum; preserves all others.
     */
   def runningSum(df: DataFrame, idCol: String, weightCol: String,
-                 outCol: String, numPartitions: Int = 0): DataFrame = {
+                 outCol: String): DataFrame = {
     val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // The upstream lineage (scan → tokenize → range shuffle) feeds BOTH
     // the per-partition-totals action below and the final window+join —
     // persist it so the most expensive stage of the pipeline runs once,

@@ -22,13 +22,11 @@ object Combine {
   /** One row: (combined: String) — results joined in chunk order with no
     * separator, exactly like the reference's strings.Builder loop.
     */
-  def combineAll(results: DataFrame,
-                 chunkIdCol: String = "chunk_id",
-                 resultCol: String = "result"): DataFrame =
+  def combineAll(results: DataFrame): DataFrame =
     results.agg(
       array_join(
         transform(
-          array_sort(collect_list(struct(col(chunkIdCol).as("id"), col(resultCol).as("r")))),
+          array_sort(collect_list(struct(col("chunk_id").as("id"), col("result").as("r")))),
           s => s.getField("r")),
         "").as("combined"))
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField}
 
 /** The reference's map stage: every chunk goes to a chat model with the
   * user prompt as the system message and the chunk text as the user
@@ -38,11 +38,6 @@ final case class KeywordFilterClient(keyword: String) extends ModelClient {
     userText.split("\n", -1).iterator.filter(_.contains(keyword)).mkString("\n")
 }
 
-/** Identity client: echoes the chunk (useful for plumbing tests). */
-final case class EchoClient() extends ModelClient {
-  override def complete(systemPrompt: String, userText: String): String = userText
-}
-
 object LlmMap {
   /** Suffix the reference injects into every prompt (mapreduce.go:91). */
   val FilterSuffix = "\nReturn the lines that you want to keep."
@@ -63,7 +58,7 @@ object LlmMap {
     }
   })
 
-  /** Map stage: chunks(chunk_id, text, ...) -> + result column.
+  /** Map stage: chunks(chunk_id, text, ...) -> + `result` column.
     * Runs as a distributed map over however many partitions the chunk
     * table has. Each task keeps up to 16 model calls in flight on a
     * shared pool and emits its rows in input order: a sliding window
@@ -74,25 +69,16 @@ object LlmMap {
     * `model call failed for chunk_id=<id>` (the client's exception as
     * its cause) and cancels the task's other calls.
     */
-  def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String,
-                textCol: String = "text",
-                resultCol: String = "result"): DataFrame = {
+  def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String): DataFrame = {
     val sys = prompt + FilterSuffix
     val in = chunks.schema
-    val textIdx = in.fieldIndex(textCol)
-    val idIdx = in.fieldNames.indexOf("chunk_id")
-    val resultField = StructField(resultCol, StringType)
-    val resultIdx = in.fieldNames.indexOf(resultCol)
-    val out = if (resultIdx >= 0) StructType(in.updated(resultIdx, resultField)) else in.add(resultField)
+    val textIdx = in.fieldIndex("text")
+    val idIdx = in.fieldIndex("chunk_id")
     chunks.mapPartitions { rows: Iterator[Row] =>
       new InOrder(rows, (r: Row) => client.complete(sys, r.getString(textIdx)),
-        (r: Row) => if (idIdx >= 0) s"chunk_id=${r.get(idIdx)}"
-                    else s"a row of partition ${TaskContext.getPartitionId()}")
-        .map { case (r, result) =>
-          val v = r.toSeq
-          Row.fromSeq(if (resultIdx >= 0) v.updated(resultIdx, result) else v :+ result)
-        }
-    }(Encoders.row(out))
+        (r: Row) => s"chunk_id=${r.get(idIdx)}")
+        .map { case (r, result) => Row.fromSeq(r.toSeq :+ result) }
+    }(Encoders.row(in.add(StructField("result", StringType))))
   }
 
   /** The sliding window of one task: `(row, call(row))` in input order,

@@ -29,12 +29,9 @@ object Ranks {
     * the same columns WITHOUT sort direction (for distinct counting).
     */
   def withGlobalRanks(df: DataFrame, sortCols: Seq[Column], keyCols: Seq[Column],
-                      rankCol: String = "rank", denseCol: String = "dense_rank",
-                      numPartitions: Int = 0): DataFrame = {
+                      rankCol: String = "rank", denseCol: String = "dense_rank"): DataFrame = {
     val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val parted = df.repartitionByRange(parts, sortCols: _*)
       .withColumn("_graft_pid", spark_partition_id())
       .transform(SessionCache.persist)

@@ -88,10 +88,8 @@ object Curation {
     graft.Tables.spread(docs, "doc_id") // kernel-heavy map side: spread the scan
       .select(col("doc_id"), TextOps.wordsOf(col("text")).as("ws"))
       .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(array_distinct(transform(
-        sequence(lit(0), size(col("ws")) - n), i =>
-          concat_ws(" ", (0 until n).map(j =>
-            element_at(col("ws"), i + j + 1)): _*)))).as("g"))
+      .select(col("doc_id"), explode(array_distinct(
+        TextOps.wordGrams(col("ws"), n))).as("g"))
   }
 
   /** The corpus (doc, distinct 5-gram) table, memoized (guide §3

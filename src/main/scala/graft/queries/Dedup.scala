@@ -122,10 +122,7 @@ object Dedup {
       .select(col(idCol).as("doc"), ws.as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc"), explode(array_distinct(
-        transform(sequence(lit(0), size(col("ws")) - 3), i =>
-          concat_ws(" ", element_at(col("ws"), i + 1),
-            element_at(col("ws"), i + 2),
-            element_at(col("ws"), i + 3))))).as("shingle"))
+        TextOps.wordGrams(col("ws"), 3))).as("shingle"))
   }
 
   /** MinHash+LSH near-duplicate candidate pairs.
@@ -210,10 +207,7 @@ object Dedup {
       .select(col(idCol).as("doc") +: extra :+ ws.as("ws"): _*)
       .filter(size(col("ws")) >= 3)
       .select(col("doc") +: extra :+ array_distinct(
-        transform(sequence(lit(0), size(col("ws")) - 3), i =>
-          concat_ws(" ", element_at(col("ws"), i + 1),
-            element_at(col("ws"), i + 2),
-            element_at(col("ws"), i + 3)))).as("sh"): _*)
+        TextOps.wordGrams(col("ws"), 3)).as("sh"): _*)
     // One native pass over the doc's shingle array yields all 9 minima
     // (expressions.MinhashSigs) — replaces 9 materialized transform
     // arrays + 9 array_min scans; bit-equal, so the DedupSpec parity
@@ -383,11 +377,8 @@ object Dedup {
     graft.Tables.spread(docs, idCol) // kernel-heavy map side: spread the scan
       .select(col(idCol).as("doc"), ws.as("ws"))
       .filter(size(col("ws")) >= 3)
-      .select(col("doc"), posexplode(transform(
-        sequence(lit(0), size(col("ws")) - 3), i =>
-          concat_ws(" ", element_at(col("ws"), i + 1),
-            element_at(col("ws"), i + 2),
-            element_at(col("ws"), i + 3)))).as(Seq("pos", "shingle")))
+      .select(col("doc"), posexplode(
+        TextOps.wordGrams(col("ws"), 3)).as(Seq("pos", "shingle")))
   }
 
   /** Memoized [[posShingleTable]] of the full documents table at `dir`
@@ -426,10 +417,7 @@ object Dedup {
       .select(col(idCol).as("doc"), ws.as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc"), array_distinct(
-        transform(sequence(lit(0), size(col("ws")) - 3), i =>
-          concat_ws(" ", element_at(col("ws"), i + 1),
-            element_at(col("ws"), i + 2),
-            element_at(col("ws"), i + 3)))).as("sh"))
+        TextOps.wordGrams(col("ws"), 3)).as("sh"))
       .select(col("doc"),
         graft.functions.minhash_sigs(col("sh"), MinhashFuncs).as("h"),
         size(col("sh")).cast("long").as("n_sh"))

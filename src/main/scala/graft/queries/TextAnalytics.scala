@@ -911,9 +911,7 @@ object TextAnalytics {
         .withColumn("n_distinct", size(array_distinct(col("ws"))).cast("long"))
       val ex = base.select(col("doc_id"), col("n_words"), col("n_distinct"),
         explode_outer(when(col("n_words") >= 2,
-          transform(sequence(lit(1), (col("n_words") - 1).cast("int")), i =>
-            concat_ws(" ", element_at(col("ws"), i),
-              element_at(col("ws"), i + 1))))).as("bg"))
+          TextOps.wordGrams(col("ws"), 2))).as("bg"))
       ex.groupBy(col("doc_id"), col("n_words"), col("n_distinct"), col("bg"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"), col("n_words"), col("n_distinct"))

@@ -23,6 +23,14 @@ object TextOps {
   def wordsOf(textCol: Column): Column =
     filter(split(lower(textCol), WsJava), w => length(w) > 0)
 
+  /** The word `n`-grams of a words array `ws`, in order, each joined by
+    * one space; `ws` must hold at least `n` words (callers filter on
+    * `size(ws) >= n`).
+    */
+  def wordGrams(ws: Column, n: Int): Column =
+    transform(sequence(lit(0), size(ws) - n), i =>
+      concat_ws(" ", (1 to n).map(j => element_at(ws, i + j)): _*))
+
   /** DuckDB twin of [[wordsOf]] over a column named `text`. */
   val wordsSql: String =
     s"list_filter(regexp_split_to_array(lower(text), '$WsSql'), w -> length(w) > 0)"

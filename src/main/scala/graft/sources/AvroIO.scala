@@ -68,7 +68,7 @@ object AvroIO {
   }
 
   /** Map a flat StructType to the Avro record schema JSON. */
-  def avroSchemaJson(schema: StructType, recordName: String = "graft_record"): String = {
+  def avroSchemaJson(schema: StructType): String = {
     def prim(dt: DataType): String = dt match {
       case LongType => "\"long\""
       case IntegerType => "\"int\""
@@ -87,7 +87,7 @@ object AvroIO {
       val t = if (f.nullable) s"""["null", ${prim(f.dataType)}]""" else prim(f.dataType)
       s"""{"name": "${f.name}", "type": $t}"""
     }
-    s"""{"type": "record", "name": "$recordName",
+    s"""{"type": "record", "name": "graft_record",
        |"fields": [${fields.mkString(", ")}]}""".stripMargin
   }
 

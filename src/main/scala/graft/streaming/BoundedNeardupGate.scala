@@ -129,13 +129,12 @@ object BoundedNeardupGate {
     * To size its state partitions, start and run the query inside
     * [[StatefulNeardupGate.withStatePartitions]].
     */
-  def gateStream(docs: DataFrame, horizonMs: Long,
-                 watermarkDelay: String = "0 seconds"): Dataset[Collision] = {
+  def gateStream(docs: DataFrame, horizonMs: Long): Dataset[Collision] = {
     val spark = docs.sparkSession
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
-    Dedup.bandsPerRow(docs.withWatermark("ts", watermarkDelay),
+    Dedup.bandsPerRow(docs.withWatermark("ts", "0 seconds"),
         "doc_id", "text", passthrough = Seq("ts"))
       .select(col("doc"), col("band_idx").cast("int").as("band_idx"),
         col("band_hash"), unix_millis(col("ts")).as("ts_ms"))

@@ -42,13 +42,13 @@ object StreamingJobs {
     val schema = spark.read.parquet(path).schema // long nanos OR timestamp[us]
     // The file source demands a DIRECTORY (in production the events
     // table is one); the fixture is a single file, so stage a symlink
-    // dir in tmp — memoized per source path so repeated streams don't
+    // dir under the JVM's temp root — memoized per source path so repeated streams don't
     // accumulate staging dirs. No data is copied.
     val src = java.nio.file.Paths.get(path)
     val stage =
       if (java.nio.file.Files.isDirectory(src)) src
       else stagingDirs.computeIfAbsent(src.toString, { _ =>
-        val d = java.nio.file.Files.createTempDirectory("graft-stream-src")
+        val d = Harness.tempDir("stream-src")
         java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
         d
       })
@@ -206,8 +206,7 @@ object StreamingJobs {
     */
   def runIncremental(spark: SparkSession, batches: Seq[DataFrame],
                      mkAgg: DataFrame => DataFrame, queryName: String): DataFrame = {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-inc-src")
+    val dir = Harness.tempDir("inc-src")
     val schema = batches.head.schema
     batches.zipWithIndex.foreach { case (b, i) => stageBatch(dir, b, i) }
     val q = try {
@@ -231,7 +230,7 @@ object StreamingJobs {
     */
   private def stageBatch(dir: java.nio.file.Path, b: DataFrame, i: Int): Unit = {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft-inc-stage")
+    val tmp = Harness.tempDir("inc-stage")
     b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val listing = Files.list(tmp)
     val part =
@@ -263,12 +262,11 @@ object StreamingJobs {
     */
   def runWithRestart(spark: SparkSession, batches: Seq[DataFrame],
                      mkAgg: DataFrame => DataFrame, splitAt: Int): DataFrame = {
-    import java.nio.file.Files
     require(splitAt > 0 && splitAt < batches.size,
       s"splitAt=$splitAt must leave batches on both sides of the restart")
-    val srcDir = Files.createTempDirectory("graft-ckpt-src")
-    val ckpt = Files.createTempDirectory("graft-ckpt-meta")
-    val outDir = Files.createTempDirectory("graft-ckpt-out")
+    val srcDir = Harness.tempDir("ckpt-src")
+    val ckpt = Harness.tempDir("ckpt-meta")
+    val outDir = Harness.tempDir("ckpt-out")
     val schema = batches.head.schema
     def mkSrc() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
@@ -314,8 +312,7 @@ object StreamingJobs {
     */
   def runForeachBatch(spark: SparkSession, batches: Seq[DataFrame],
                       onBatch: (DataFrame, Long) => Unit): Unit = {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-feb-src")
+    val dir = Harness.tempDir("feb-src")
     val schema = batches.head.schema
     batches.zipWithIndex.foreach { case (b, i) => stageBatch(dir, b, i) }
     try {

@@ -89,18 +89,6 @@ object ScaleProbe {
       "read (r16) — the SAME O(N·Q) brute scan those rows used to " +
       "rebuild inline, now built once and itemized; scoped with them"))
 
-  /** Documented super-linear rows that are NOT exact baselines: the
-    * growth decomposes into known, contracted components with a
-    * measured sub-linear production twin. EMPTY since r12: the sole
-    * r11 entry (q62's inline N·√N IVF build + corpus-fraction query
-    * fixture) was retired STRUCTURALLY — the catalog row now serves
-    * the q200-pattern fixed request from the persisted cell layout
-    * (Similarity.sharedIvfServing), so the row measures the
-    * production serving shape and the build is itemized under
-    * `shared:ivf_serving` like every other train-once intermediate.
-    */
-  val DocumentedSuperlinear: Map[String, String] = Map.empty
-
   /** (probe family, query) — the scale-critical headliners probed at
     * every factor, families keep the tables readable.
     */
@@ -149,8 +137,7 @@ object ScaleProbe {
          |  defaults: baseDir=/root/testdata/sf0.1 outMd=/root/repo/SCALE.md
          |            bigs=/root/repo/scaleprobe/x10:10
          |env: SPARK_GRAFT_PASSES (default 2),
-         |     SPARK_GRAFT_ONLY=q151,... (prefix filter),
-         |     SPARK_GRAFT_SCALE_FULL=0 (headliners only at every factor)""".stripMargin)
+         |     SPARK_GRAFT_ONLY=q151,... (prefix filter)""".stripMargin)
     sys.exit(2)
   }
 
@@ -178,14 +165,13 @@ object ScaleProbe {
       case Seq(b, out, rest @ _*) => (b, out, rest.map(parseBig))
     }
     val passes = Harness.passes(2)
-    val fullSweep = sys.env.getOrElse("SPARK_GRAFT_SCALE_FULL", "1") != "0"
     val spark = Harness.session(32)
 
     val keep = Harness.only()
     val headNames = Headliners.map(_._2).filter(keep)
     val allNames = graft.SparkEntry.queries.keys.toSeq.sorted.filter(keep)
     val shared = graft.SparkEntry.sharedBuilds.filter(kv => keep(kv._1))
-    val needFull = fullSweep && bigs.exists(_._2 <= FullSweepMaxFactor)
+    val needFull = bigs.exists(_._2 <= FullSweepMaxFactor)
     val warmNames = if (needFull) allNames else headNames
 
     // entries for one measured sweep: shared builds first (their own
@@ -197,7 +183,7 @@ object ScaleProbe {
     // and excluded above it; their PRODUCTION twins (q52/q62/q190/
     // q200, the AnnSubstitutionSpec substitution) stay in every sweep.
     def entriesFor(factor: Int): Seq[Harness.Entry] = {
-      val names0 = if (fullSweep && factor <= FullSweepMaxFactor) allNames else headNames
+      val names0 = if (factor <= FullSweepMaxFactor) allNames else headNames
       val names = if (factor <= 10) names0
         else names0.filterNot(ExactBaselines.contains)
       // the exact-arm shared build is scoped out above 10× with its
@@ -253,8 +239,7 @@ object ScaleProbe {
       def failed: Boolean = baseSec.isNaN || bigSec.isNaN
       def superLinear: Boolean =
         failed || (perUnit > PerUnitFlag && bigSec > FlagFloorSec)
-      def exempt: Boolean = !failed &&
-        (ExactBaselines.contains(name) || DocumentedSuperlinear.contains(name))
+      def exempt: Boolean = !failed && ExactBaselines.contains(name)
       def flagged: Boolean = superLinear && !exempt
     }
     def rowsFor(factor: Int, big: Map[String, Measure]): Seq[Row] =
@@ -305,12 +290,11 @@ object ScaleProbe {
       if (exempted.isEmpty) ""
       else "\n\nDocumented rows measured super-linear (EXEMPT from the " +
         "gate — the growth is the contract: exact O(N·Q) eval baselines " +
-        "whose fixture query set grows with the corpus, and build arms " +
-        "whose decomposition + measured sub-linear serving twin are " +
-        "cited; scaladocs of `ExactBaselines`/`DocumentedSuperlinear`):\n\n" +
+        "whose fixture query set grows with the corpus; scaladoc of " +
+        "`ExactBaselines`):\n\n" +
         exempted.map { case (f, r) =>
           f"- **${r.name}@${f}×** ${r.ratio}%.1f× (per-unit ${r.perUnit}%.2f): " +
-            (ExactBaselines ++ DocumentedSuperlinear)(r.name) }.mkString("\n")
+            ExactBaselines(r.name) }.mkString("\n")
     val spillPara =
       if (spilled.isEmpty) ""
       else "\n\nRows with non-zero spill (wall must stay sub-linear for " +
@@ -358,7 +342,7 @@ object ScaleProbe {
          |
          |""".stripMargin +
         allRows.map { case (f, rows) =>
-          val title = if (fullSweep && f <= FullSweepMaxFactor)
+          val title = if (f <= FullSweepMaxFactor)
             s"## ${f}× corpus — full catalog (${rows.size} rows)"
           else s"## ${f}× corpus — headliners"
           title + "\n\n" + tableOf(rows) }.mkString("\n\n") +

@@ -48,11 +48,9 @@ class BpeEndToEndSpec extends AnyFunSuite with CacheCleanup {
       Base64.getEncoder.encodeToString(
         (l + r).getBytes(StandardCharsets.UTF_8)) + " " + i
     }
-    val f = java.nio.file.Files.createTempFile("graft-induced", ".tiktoken")
+    val f = Harness.tempDir("induced").resolve("ranks.tiktoken")
     java.nio.file.Files.write(f,
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    f.toFile.deleteOnExit()
-    f
   }
 
   private lazy val table: java.util.HashMap[String, Integer] =

@@ -358,7 +358,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
     val docs = Seq((1L, s"$six $six omega"),
       (2L, "one two three four five six seven eight nine ten eleven twelve"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_linededup").toString
+    val dir = Harness.tempDir("linededup").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("q128_line_dedup")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -380,7 +380,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
       (2L, s"$hot maple torch quill vapor ridge flint"),
       (3L, s"$hot orbit nectar prism walnut cinder moss"),
       (4L, "sable garnet tundra willow basalt fjord")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_c4line").toString
+    val dir = Harness.tempDir("c4line").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("q201_c4_line_removal")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -414,7 +414,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
       (3L, "x y z x y z"),
       (4L, "sable garnet tundra willow"),
       (5L, "alpha beta gamma")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_substr").toString
+    val dir = Harness.tempDir("substr").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("q203_exactsubstr_trim")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -443,7 +443,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
       (4L, "sable garnet tundra willow basalt fjord", "srcA"),
       (5L, "lone doc lines all count here", "srcB")).toDF(
       "doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_srcboiler").toString
+    val dir = Harness.tempDir("srcboiler").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("q202_source_boilerplate")(spark, dir)
       .collect().map(r => (r.getAs[String]("source"), r.getAs[String]("line")) ->
@@ -504,8 +504,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
 
   /** Stage a documents table for catalog-query entry points. */
   private def stage(docs: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dedup_stage").toString
+    val dir = Harness.tempDir("dedup_stage").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
@@ -627,8 +626,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
         id -> ((ws.length.toLong, kept.length.toLong,
           sha(kept.mkString(" "))))
       }.toMap
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_substr_fuzz$seed").toString
+      val dir = Harness.tempDir(s"substr_fuzz$seed").toString
       docs.toDF("doc_id", "text").write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
       val got = Dedup.queries("q203_exactsubstr_trim")(spark, dir)
@@ -648,7 +646,7 @@ class DedupSpec extends AnyFunSuite with CacheCleanup {
       (4L, "p q r"),               // its only gram is shared -> 1000000 ppm
       (5L, "w1 w2 w3 w1 w2 w3"))   // repeats ONLY within itself -> 0 ppm
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dupprof").toString
+    val dir = Harness.tempDir("dupprof").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("q206_dup_profile")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->

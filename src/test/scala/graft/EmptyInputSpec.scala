@@ -177,7 +177,7 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     // the line/substring family reads from a dir — stage empty and
     // tiny parquet corpora
     def stage(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_empty10")
+      val dir = Harness.tempDir("empty10")
       df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir.toString
     }
@@ -298,7 +298,7 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     // hashFraction on an empty frame plans and evaluates to no rows
     assert(noIds.select(graft.queries.TextAnalytics
       .hashFraction(col("doc_id")).as("f")).count() == 0)
-    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val out = Harness.tempDir("empty").toString
     graft.sinks.LayoutWriter.writeRangeClustered(
       noDocs, s"$out/rc", numFiles = 4, col("doc_id"))
     assert(spark.read.parquet(s"$out/rc").count() == 0)

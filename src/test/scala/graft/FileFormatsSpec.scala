@@ -15,7 +15,7 @@ class FileFormatsSpec extends AnyFunSuite {
   import TestSpark.spark
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(name).toString
+    Harness.tempDir(name).toString
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -139,12 +139,19 @@ class FileFormatsSpec extends AnyFunSuite {
   }
 
   test("round-trip scratch paths live under this JVM's own temp root") {
-    import graft.queries.FileFormats.{scratch, scratchRoot}
-    val root = scratchRoot
+    import graft.queries.FileFormats.scratch
+    val root = Harness.tempRoot
     assert(java.nio.file.Files.isDirectory(root))
     assert(root.getParent == java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
     for (d <- Seq(TestSpark.sf0001, "/some/other/sf"))
       assert(java.nio.file.Paths.get(scratch(d, "docs_csv")).startsWith(root))
     assert(scratch(TestSpark.sf0001, "a") != scratch("/some/other/sf", "a"))
+    // every temp dir is a fresh one under the same root
+    val (a, b) = (Harness.tempDir("same"), Harness.tempDir("same"))
+    assert(a != b)
+    for (t <- Seq(a, b)) {
+      assert(java.nio.file.Files.isDirectory(t) && t.getParent == root)
+      assert(t.toFile.list().isEmpty)
+    }
   }
 }

@@ -305,8 +305,7 @@ class GraphSpec extends AnyFunSuite with CacheCleanup {
   }
 
   private def stageDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_chisq").toString
+    val dir = Harness.tempDir("chisq").toString
     rows.map { case (id, lang, source) => (id, "x", lang, source, 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

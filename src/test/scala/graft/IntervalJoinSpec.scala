@@ -26,8 +26,7 @@ class IntervalJoinSpec extends AnyFunSuite with CacheCleanup {
       (5L, 0L * M, 3L, "view", 1.0, "{}"),
       (6L, 180L * M, 3L, "view", 1.0, "{}"),
       (7L, 5L * M, 3L, "purchase", 1.0, "{}"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivjoin").toString
+    val dir = Harness.tempDir("ivjoin").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("q154_interval_join")(spark, dir)
@@ -49,8 +48,7 @@ class IntervalJoinSpec extends AnyFunSuite with CacheCleanup {
     val rows = Seq(0L, 1L, 2L, 7L, 20L).zipWithIndex.map {
       case (t, i) => (i.toLong, t * M, 1L, "click", 1.0, "{}")
     } :+ (99L, 0L * M, 2L, "click", 1.0, "{}") // other user untouched
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_debounce").toString
+    val dir = Harness.tempDir("debounce").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val kept = SparkEntry.queries("q158_debounce")(spark, dir)

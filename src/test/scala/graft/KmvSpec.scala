@@ -20,8 +20,7 @@ class KmvSpec extends AnyFunSuite with CacheCleanup {
       (0L until 1000L).map(u => (u, u * m, u, "view", 1.0, "{}")) ++
         (500L until 1500L).map(u =>
           (10000L + u, u * m, u, "purchase", 1.0, "{}"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmv").toString
+    val dir = Harness.tempDir("kmv").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("q157_kmv_set_algebra")(spark, dir)
@@ -47,8 +46,7 @@ class KmvSpec extends AnyFunSuite with CacheCleanup {
   test("kmv degenerates to the exact count below k") {
     val m = 60L * 1000000000L
     val rows = (0L until 10L).map(u => (u, u * m, u, "view", 1.0, "{}"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmv_small").toString
+    val dir = Harness.tempDir("kmv_small").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("q156_kmv_distinct")(spark, dir)

@@ -14,7 +14,7 @@ class LayoutWriterSpec extends AnyFunSuite {
   import TestSpark.spark
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(name).toString
+    Harness.tempDir(name).toString
 
   test("range-clustered write: per-file key ranges are disjoint, rows intact") {
     val orders = Tables.orders(spark, TestSpark.sf0001)

@@ -20,7 +20,7 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      Harness.tempDir("warehouse").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf0001 = "/root/testdata/sf0.001"
@@ -247,7 +247,7 @@ class MemoCacheSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("second run makes zero model calls") { // mapreduce_test.go:210-218
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString + "/memo"
+    val dir = Harness.tempDir("memo").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta"), (2L, "gamma keep")).toDF("chunk_id", "text")
     CountingClient.reset()
     val r1 = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
@@ -262,7 +262,7 @@ class MemoCacheSpec extends AnyFunSuite {
   }
 
   test("changed prompt invalidates the memo (fixes reference hazard)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo2").toString + "/memo"
+    val dir = Harness.tempDir("memo2").toString + "/memo"
     val chunks = Seq((0L, "alpha keep")).toDF("chunk_id", "text")
     CountingClient.reset()
     MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p1", "m", dir).collect()
@@ -274,7 +274,7 @@ class MemoCacheSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
     import org.apache.spark.sql.execution.UnionExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo-cold").toString + "/memo"
+    val dir = Harness.tempDir("memo-cold").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
     val out = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
     val plan = out.queryExecution.optimizedPlan
@@ -287,7 +287,7 @@ class MemoCacheSpec extends AnyFunSuite {
   }
 
   test("clearMemo (C11): cleaned cache forces recompute; idempotent") { // mapreduce_test.go:303-355
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo3").toString + "/memo"
+    val dir = Harness.tempDir("memo3").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
     CountingClient.reset()
     MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir).collect()
@@ -300,7 +300,7 @@ class MemoCacheSpec extends AnyFunSuite {
   }
 
   test("compactMemo dedupes concurrent-append keys; read view unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo4").toString + "/memo"
+    val dir = Harness.tempDir("memo4").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
     // two full runs against an empty-then-populated memo, plus a forced
     // duplicate append (what concurrent writers produce)
@@ -325,7 +325,7 @@ class MemoCacheSpec extends AnyFunSuite {
   }
 
   test("a memo path holding another table throws before any model call") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo5").toString + "/memo"
+    val dir = Harness.tempDir("memo5").toString + "/memo"
     Seq(1, 2).toDF("a").write.parquet(dir)
     def files() = new java.io.File(dir).list().sorted.toSeq
     val before = files()

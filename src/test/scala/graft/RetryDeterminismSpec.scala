@@ -18,11 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition. In a pipelined plan the scan task IS the shuffle map
   * task, so this forces Spark's retry path through every scan-rooted
   * map stage of the three shuffle-heaviest catalog entries (q151
-  * prefix join, q190 IVF-PQ serving, q119 pagerank — per PLANS.md) and
-  * their shared memoized builds; downstream reduce stages then consume
-  * retried map outputs. The spec asserts (a) failures were actually
-  * injected AND retried, (b) the chaos-run output is row-identical to
-  * the clean run's.
+  * prefix join, q190 IVF-PQ serving, q119 pagerank, by the r15
+  * physical-plan audit) and their shared memoized builds; downstream
+  * reduce stages then consume retried map outputs. The spec asserts
+  * (a) failures were actually injected AND retried, (b) the chaos-run
+  * output is row-identical to the clean run's.
   *
   * TestSpark runs `local[4, 2]` (maxFailures=2) so one failure per
   * task is retried, not fatal.

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,8 +97,11 @@ class SaltingSpec extends AnyFunSuite {
       val joined = big.join(dim, col("key") === col("dim_key"))
         .select(col("row_id"), col("key"), col("dim_name"), col("pad"))
       val got = joined.collect()
-      val shape = graft.tools.PlanAudit.shapeOf(joined.queryExecution.executedPlan)
-      assert(shape.skewReads > 0,
+      val skewReads = graft.tools.PlanAudit.nodes(joined.queryExecution.executedPlan).count {
+        case r: AQEShuffleReadExec => r.hasSkewedPartition
+        case _ => false
+      }
+      assert(skewReads > 0,
         "AQE did not skew-split the hot partition — thresholds or fixture wrong")
       val salted = Salting.saltedEquiJoin(big, dim, "key", "dim_key",
           saltFrom = Seq(col("row_id")))

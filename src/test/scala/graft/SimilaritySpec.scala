@@ -90,8 +90,7 @@ class SimilaritySpec extends AnyFunSuite with CacheCleanup {
   }
 
   test("IVF cell layout: serving reads only the probed directories, top-k unchanged") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-ivf-cells").toString + "/cells"
+    val out = Harness.tempDir("ivf-cells").toString + "/cells"
     Similarity.writeIvfCells(planted, out)
     // a serving request: TWO queries, nprobe=2 — at most 4 of the ~17
     // cells may be touched

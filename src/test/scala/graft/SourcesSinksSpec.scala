@@ -13,7 +13,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   import TestSpark.spark
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(name).toString
+    Harness.tempDir(name).toString
 
   test("text corpus: stable line ids, full pipeline matches reference semantics") {
     val lines = (1 to 300).map { i =>

@@ -296,8 +296,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // versioned state dirs (v0, v1, ...) instead of overwrite-in-place:
     // each micro-batch merges the previous state with the batch, latest
     // version per key wins — MERGE INTO semantics per trigger
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-feb-state").toString
+    val root = Harness.tempDir("feb-state").toString
     def latestWins(df: org.apache.spark.sql.DataFrame) = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("k")).orderBy(col("version").desc)

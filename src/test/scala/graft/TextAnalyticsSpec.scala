@@ -127,8 +127,7 @@ class TextAnalyticsSpec extends AnyFunSuite with CacheCleanup {
   test("group z-score: planted anchors and zero-variance NULL") {
     // {1,2,3}: z = (n·x−Σx)/sqrt(nΣx²−(Σx)²) = −3/√6, 0, +3/√6;
     // a constant stratum must yield NULL, never 0/0
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_zscore").toString
+    val tmp = Harness.tempDir("zscore").toString
     Seq((1L, "a", "x", "s", 1L), (2L, "a", "x", "s", 2L),
       (3L, "a", "x", "s", 3L),
       (10L, "b", "y", "s", 7L), (11L, "b", "y", "s", 7L))

@@ -15,8 +15,7 @@ class TextSignalsSpec extends AnyFunSuite with CacheCleanup {
   import spark.implicits._
 
   private def stage(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_textsignals").toString
+    val dir = Harness.tempDir("textsignals").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

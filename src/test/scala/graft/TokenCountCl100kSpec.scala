@@ -169,13 +169,11 @@ class TokenCountCl100kSpec extends AnyFunSuite {
     val lines = (singles ++ Seq("ab" -> 10, "cd" -> 11)).map { case (t, r) =>
       s"${b64.encodeToString(t.getBytes("UTF-8"))} $r"
     }
-    val f = java.nio.file.Files.createTempFile("graft-ranks", ".tiktoken")
-    try {
-      java.nio.file.Files.write(f,
-        scala.jdk.CollectionConverters.SeqHasAsJava(lines ++ Seq("")).asJava)
-      val r = BpeRanks.loadFile(f.toString)
-      assert(BpeRanks.countPiece("abcd", r) == 2) // [ab, cd], no "abcd"
-    } finally java.nio.file.Files.deleteIfExists(f)
+    val f = Harness.tempDir("ranks").resolve("ranks.tiktoken")
+    java.nio.file.Files.write(f,
+      scala.jdk.CollectionConverters.SeqHasAsJava(lines ++ Seq("")).asJava)
+    val r = BpeRanks.loadFile(f.toString)
+    assert(BpeRanks.countPiece("abcd", r) == 2) // [ab, cd], no "abcd"
   }
 
   test("SQL registration via GraftExtensions") {

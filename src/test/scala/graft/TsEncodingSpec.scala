@@ -25,7 +25,7 @@ class TsEncodingSpec extends AnyFunSuite {
     1699999999999999999L) // 1us-boundary rounding: truncates, not rounds
 
   private def writeRead(encode: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts-enc").toString
+    val dir = Harness.tempDir("ts-enc").toString
     val base = nanos.zipWithIndex.toDF("ts_ns", "event_id")
     encode(base).write.mode("overwrite").parquet(dir)
     Tables.normalizeTs(spark.read.parquet(dir))

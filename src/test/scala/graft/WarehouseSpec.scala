@@ -81,8 +81,7 @@ class WarehouseSpec extends AnyFunSuite {
     import spark.implicits._
     // plant first digits: 1 appears 4x (1.5, 10.0, 199.99, 1e6),
     // 9 appears 2x, 5 once; 0.5 is below 1.0 and must be excluded
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_benford").toString
+    val tmp = Harness.tempDir("benford").toString
     Seq(1.5, 10.0, 199.99, 1000000.0, 9.01, 950.0, 5.5, 0.5)
       .zipWithIndex
       .map { case (p, i) => (i.toLong, i.toLong, "O", p,
