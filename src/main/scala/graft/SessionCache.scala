@@ -57,10 +57,12 @@ object SessionCache {
   private[graft] def drain(spark: SparkSession): Unit = { states.remove(spark); () }
 
   /** Persist `df` at MEMORY_AND_DISK (spills instead of OOMing at
-    * scale) and register it for release by [[clear]].
+    * scale) and register it for release by [[clear]]. A plan that is
+    * already cached (a lazy builder called twice for one plan) is
+    * registered and returned as it is, not cached again.
     */
   def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val p = if (df.storageLevel != StorageLevel.NONE) df else df.persist(StorageLevel.MEMORY_AND_DISK)
     state(df.sparkSession).persisted.add(p)
     p
   }

@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField}
 
 import graft.expressions.TokenCount
 
@@ -32,11 +34,14 @@ import graft.expressions.TokenCount
   *
   * SCALE NOTE on the running sum: a bare `Window.orderBy(id)` collapses
   * to ONE partition — correct but a straggler at 100 TB. [[runningSum]]
-  * therefore uses the classic two-phase prefix sum: range-partition by
-  * id, cumsum within each partition, then add per-partition offsets
-  * (computed from one tiny row per partition, broadcast back). Only the
-  * per-partition totals (one row per shuffle partition) ever touch the
-  * driver.
+  * is a two-phase prefix sum instead: one job reads each partition's
+  * (min id, max id, weight total), then one local pass sorts each
+  * partition and adds its running sum to the weight of the partitions
+  * before it. When the partitions already hold increasing, disjoint id
+  * ranges (any source that numbers its rows in partition order, such
+  * as `TextCorpus`), the input is never shuffled; otherwise it is
+  * range-partitioned by id first. Only one small row per partition
+  * ever touches the driver.
   */
 object Chunker {
 
@@ -47,43 +52,111 @@ object Chunker {
     */
   def clearCaches(): Unit = graft.SessionCache.clear()
 
-  /** Scalable global running sum of `weightCol` ordered by `idCol`
-    * (ids must be globally unique; ties would make results ambiguous).
-    * Adds column `outCol` = inclusive prefix sum; preserves all others.
+  /** Scalable global running sum of the integral `weightCol` ordered
+    * by `idCol`: adds column `outCol` (LONG) and keeps all others. It
+    * equals `sum(weightCol) over (order by idCol)`: rows with equal ids
+    * all get the sum through the last of them, a null weight adds
+    * nothing, and the sum stays null until the first non-null weight.
+    *
+    * The input is persisted as it is and one job reads each partition's
+    * id range and weight total. If the non-empty partitions hold
+    * strictly increasing, disjoint id ranges, that partitioning is kept;
+    * otherwise (ids out of order, a tie across a partition boundary, a
+    * null id) the input is range-partitioned by id and persisted, which
+    * puts equal ids in one partition, and a second job reads the new
+    * totals. Either way one local pass then sorts each partition by id
+    * and runs its cumulative sum from the total of the partitions
+    * before it.
     */
   def runningSum(df: DataFrame, idCol: String, weightCol: String,
                  outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // The upstream lineage (scan → tokenize → range shuffle) feeds BOTH
-    // the per-partition-totals action below and the final window+join —
-    // persist it so the most expensive stage of the pipeline runs once,
-    // not twice (MEMORY_AND_DISK: spills instead of OOMing at scale).
-    val parted = graft.SessionCache.persist(
-      df.repartitionByRange(parts, col(idCol))
-        .withColumn("_graft_pid", spark_partition_id()))
-    // Phase 2 first (it is the materializing action): per-partition
-    // totals -> exclusive prefix offsets. One row per partition; tiny at
-    // any data scale. A plain groupBy — no window needed for totals.
-    val totals = parted.groupBy(col("_graft_pid"))
-      .agg(sum(col(weightCol)).as("_graft_total"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-    var acc = 0L
-    val offsets = totals.map { case (pid, tot) =>
-      val off = acc; acc += tot; (pid, off)
+    df.schema(weightCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"runningSum needs an integral weight; $weightCol is ${t.simpleString}")
     }
-    val offsetsDf = spark.createDataFrame(offsets.toSeq)
-      .toDF("_graft_pid", "_graft_offset")
-    // Phase 1: local cumsum within each (now cached) range partition.
-    val w = Window.partitionBy(col("_graft_pid")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted
-      .withColumn("_graft_local", sum(col(weightCol)).over(w))
-      .join(broadcast(offsetsDf), Seq("_graft_pid"))
-      .withColumn(outCol, col("_graft_local") + col("_graft_offset"))
-      .drop("_graft_pid", "_graft_local", "_graft_offset")
+    val idType = df.schema(idCol).dataType
+    val input = graft.SessionCache.persist(df)
+    val inputStats = partitionStats(input, idCol, weightCol)
+    val (parted, stats) =
+      if (increasingRanges(inputStats, idType)) (input, inputStats)
+      else {
+        val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+        // persisted: the range bounds are sampled per execution, so the
+        // totals and the local pass must read one materialization
+        val ranged = graft.SessionCache.persist(input.repartitionByRange(parts, col(idCol)))
+        (ranged, partitionStats(ranged, idCol, weightCol))
+      }
+    // per partition index: the weight before it, and whether any of
+    // that weight was non-null
+    val before = stats.scanLeft((0L, false)) { case ((acc, seen), s) =>
+      (acc + s.total, seen || s.weighted > 0)
+    }
+    val idIdx = df.schema.fieldIndex(idCol)
+    val wIdx = df.schema.fieldIndex(weightCol)
+    val pidIdx = df.schema.length
+    parted.withColumn("_graft_pid", spark_partition_id())
+      .sortWithinPartitions(col(idCol))
+      .mapPartitions { rows: Iterator[Row] =>
+        val in = rows.buffered
+        var acc = 0L
+        var seen = false
+        if (in.hasNext) {
+          val (a, s) = before(in.head.getInt(pidIdx)); acc = a; seen = s
+        }
+        // one group of equal ids at a time: its rows share one sum
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val key = Row(in.head.get(idIdx))
+          val group = Vector.newBuilder[Row]
+          while (in.hasNext && Row(in.head.get(idIdx)) == key) {
+            val r = in.next()
+            if (!r.isNullAt(wIdx)) { acc += r.getAs[Number](wIdx).longValue; seen = true }
+            group += r
+          }
+          val cum = if (seen) acc else null
+          group.result().map(r => Row.fromSeq(r.toSeq.take(pidIdx) :+ cum))
+        }
+      }(Encoders.row(df.schema.add(StructField(outCol, LongType))))
+  }
+
+  /** One partition of a [[runningSum]] input: its row count, its
+    * least and greatest non-null id (one-field rows), whether it holds
+    * a null id, and the total and count of its non-null weights.
+    */
+  private final case class PartStat(rows: Long, lo: InternalRow, hi: InternalRow,
+                                    nullId: Boolean, total: Long, weighted: Long)
+
+  /** [[PartStat]] of every partition of `df`, by partition index. */
+  private def partitionStats(df: DataFrame, idCol: String, weightCol: String): Array[PartStat] = {
+    val idType = df.schema(idCol).dataType
+    df.select(col(idCol), col(weightCol).cast("long")).queryExecution.toRdd
+      .mapPartitions { it =>
+        val ord = InterpretedOrdering.forSchema(Seq(idType))
+        val key = UnsafeProjection.create(Array[DataType](idType))
+        var rows, total, weighted = 0L
+        var lo, hi: InternalRow = null
+        var nullId = false
+        it.foreach { r =>
+          rows += 1
+          if (r.isNullAt(0)) nullId = true
+          else {
+            if (lo == null || ord.lt(r, lo)) lo = key(r).copy()
+            if (hi == null || ord.gt(r, hi)) hi = key(r).copy()
+          }
+          if (!r.isNullAt(1)) { total += r.getLong(1); weighted += 1 }
+        }
+        Iterator.single(PartStat(rows, lo, hi, nullId, total, weighted))
+      }
+      .collect()
+  }
+
+  /** Whether the non-empty partitions hold no null id and strictly
+    * increasing, disjoint id ranges.
+    */
+  private def increasingRanges(stats: Array[PartStat], idType: DataType): Boolean = {
+    val ord = InterpretedOrdering.forSchema(Seq(idType))
+    val full = stats.filter(_.rows > 0)
+    full.forall(!_.nullId) && full.zip(full.drop(1)).forall { case (a, b) => ord.lt(a.hi, b.lo) }
   }
 
   /** Word-pack one oversized record into pieces of <= budget tokens

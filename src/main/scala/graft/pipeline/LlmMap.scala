@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future, ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, FutureTask, Semaphore, ThreadFactory}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
@@ -42,8 +42,14 @@ object LlmMap {
   /** Suffix the reference injects into every prompt (mapreduce.go:91). */
   val FilterSuffix = "\nReturn the lines that you want to keep."
 
-  /** Model calls a map task keeps in flight at once. */
+  /** Model calls a map task keeps running at once. */
   private val InFlight = 16
+
+  /** Rows a map task holds at once: running calls plus finished ones
+    * waiting for an earlier row. Bounds the memory a slow head call
+    * can pin while the calls behind it go on.
+    */
+  private val MaxHeld = 4 * InFlight
 
   /** One JVM-wide pool for every task's model calls. Its threads are
     * daemons, so an idle pool never keeps a finished driver or executor
@@ -60,12 +66,13 @@ object LlmMap {
 
   /** Map stage: chunks(chunk_id, text, ...) -> + `result` column.
     * Runs as a distributed map over however many partitions the chunk
-    * table has. Each task keeps up to 16 model calls in flight on a
-    * shared pool and emits its rows in input order: a sliding window
-    * that yields the head row once its call completes, then submits the
-    * next. This bounds the reference's one-goroutine-per-chunk errgroup
+    * table has. Each task keeps up to 16 model calls running on a shared
+    * pool and starts the next one as soon as any call finishes, so one
+    * slow call does not stall the others; it holds at most 64 rows
+    * (running or finished) and emits them in input order. This bounds
+    * the reference's one-goroutine-per-chunk errgroup
     * (mapreduce.go:93-122) per task, with the same fail-fast job-abort
-    * semantics on error: a failing call fails the task with
+    * semantics on error: the first failing call fails the task with
     * `model call failed for chunk_id=<id>` (the client's exception as
     * its cause) and cancels the task's other calls.
     */
@@ -81,24 +88,46 @@ object LlmMap {
     }(Encoders.row(in.add(StructField("result", StringType))))
   }
 
-  /** The sliding window of one task: `(row, call(row))` in input order,
-    * with up to [[InFlight]] calls running on [[pool]]. Outstanding calls
-    * are cancelled when the task completes, fails or is killed.
+  /** The call window of one task: `(row, call(row))` in input order.
+    * Up to [[InFlight]] calls run on [[pool]] at once and at most
+    * [[MaxHeld]] rows are held; every finished call wakes the task
+    * thread, which then starts the next call or emits the head row.
+    * Outstanding calls are cancelled when the task completes, fails or
+    * is killed.
     */
   private final class InOrder(rows: Iterator[Row], complete: Row => String, label: Row => String)
     extends Iterator[(Row, String)] {
-    private val window = new java.util.ArrayDeque[(Row, Future[String])]()
+
+    private final class Call(val row: Row) extends FutureTask[String](new Callable[String] {
+      def call(): String = complete(row)
+    }) {
+      override protected def done(): Unit = {
+        if (!isCancelled) {
+          try get()
+          catch { case e: ExecutionException => failed.compareAndSet(null, (row, e.getCause)) }
+        }
+        running.decrementAndGet()
+        finished.release()
+      }
+    }
+
+    private val window = new java.util.ArrayDeque[Call]()
+    private val running = new AtomicInteger
+    private val finished = new Semaphore(0)
+    private val failed = new AtomicReference[(Row, Throwable)]()
     Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => cancelAll()))
 
     private def cancelAll(): Unit = window.synchronized {
-      window.forEach(_._2.cancel(true))
+      window.forEach(_.cancel(true))
       window.clear()
     }
 
     private def fill(): Unit = window.synchronized {
-      while (window.size < InFlight && rows.hasNext) {
-        val r = rows.next()
-        window.add(r -> pool.submit(new Callable[String] { def call(): String = complete(r) }))
+      while (window.size < MaxHeld && running.get < InFlight && rows.hasNext) {
+        val c = new Call(rows.next())
+        running.incrementAndGet()
+        window.add(c)
+        pool.execute(c)
       }
     }
 
@@ -106,13 +135,22 @@ object LlmMap {
 
     override def next(): (Row, String) = {
       if (!hasNext) throw new NoSuchElementException("next on an exhausted model-call window")
-      val (r, f) = window.synchronized(window.poll())
-      try r -> f.get()
-      catch {
-        case e: ExecutionException =>
-          cancelAll()
-          throw new RuntimeException(s"model call failed for ${label(r)}", e.getCause)
+      val head = window.synchronized(window.peek())
+      // a failure anywhere in the window fails the task at once
+      while (!head.isDone && failed.get() == null) {
+        finished.acquire()
+        fill()
       }
+      val err = failed.get()
+      if (err != null) fail(err._1, err._2)
+      window.synchronized(window.poll())
+      try head.row -> head.get()
+      catch { case e: ExecutionException => fail(head.row, e.getCause) }
+    }
+
+    private def fail(r: Row, cause: Throwable): Nothing = {
+      cancelAll()
+      throw new RuntimeException(s"model call failed for ${label(r)}", cause)
     }
   }
 }

@@ -9,8 +9,8 @@ import graft.SessionCache
 /** Scalable GLOBAL ranking. A bare `Window.orderBy(...)` collapses the
   * whole input to one partition — correct, but a straggler at scale
   * (and the source of Spark's "No Partition Defined" warning). This is
-  * the two-phase formulation (same shape as Chunker.runningSum's prefix
-  * sum):
+  * the two-phase formulation (per-partition totals turned into
+  * offsets, like Chunker.runningSum's prefix sum):
   *
   *  1. range-partition by the sort key — equal keys land in ONE
   *     partition (RangePartitioner maps equal keys identically), so no

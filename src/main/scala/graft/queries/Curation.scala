@@ -168,12 +168,13 @@ object Curation {
     * & parity: density is one IEEE division of two integer counts
     * (bit-identical across engines), ties break on doc_id, and the
     * cumulative token sum is [[Chunker.runningSum]]'s two-phase
-    * prefix sum over a range partition — the scalable global-order
-    * discipline (no single-partition window), with the budget
-    * comparison in exact integers. Scale shape: one corpus scan
-    * (persisted by runningSum), one range shuffle, a 1-row broadcast
-    * budget; at 100 TB the range sort on (density, id) is the same
-    * shape as any global top-k export.
+    * prefix sum — the scalable global-order discipline (no
+    * single-partition window), with the budget comparison in exact
+    * integers. The (density, id) key follows no partition order, so on
+    * a multi-partition corpus runningSum range-partitions by it. Scale
+    * shape: one corpus scan (persisted by runningSum), one range
+    * shuffle, a 1-row broadcast budget; at 100 TB the range sort on
+    * (density, id) is the same shape as any global top-k export.
     */
   def budgetSelect(docs: DataFrame): DataFrame = {
     val stops = array(TextAnalytics.Stopwords.map(lit): _*)

@@ -402,9 +402,10 @@ object EventsQueries {
     // +1/-1 deltas at its endpoints; the concurrency at each change
     // instant is the global running sum of deltas in time order —
     // computed with Chunker.runningSum, the two-phase distributed
-    // prefix sum (range partition -> per-partition totals -> offset
-    // broadcast), so no single-partition window exists even with
-    // billions of sessions.
+    // prefix sum (per-partition totals -> one local cumulative pass
+    // from each partition's offset; the grouped deltas are hash-
+    // partitioned, so it range-partitions them by time first), so no
+    // single-partition window exists even with billions of sessions.
     "q80_session_concurrency" -> ((s, d) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val flagged = events(s, d)

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.TokenCount
@@ -54,7 +56,7 @@ class TokenCountSpec extends AnyFunSuite {
   }
 }
 
-class ChunkerSpec extends AnyFunSuite {
+class ChunkerSpec extends AnyFunSuite with CacheCleanup {
   import TestSpark.spark
   import spark.implicits._
 
@@ -133,6 +135,104 @@ class ChunkerSpec extends AnyFunSuite {
       .select("doc_id", "chunk_id").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a == b)
   }
+
+  /** The exchanges of `df`'s plan, persisted inputs included. */
+  private def exchanges(df: DataFrame) =
+    graft.tools.PlanAudit.nodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec => e
+    }
+
+  private type IdWeightSum = (Option[Long], Option[Long], Option[Long])
+
+  /** `df`'s (id, w, cum) rows, sorted by id then w, nulls first. */
+  private def sorted(df: DataFrame): Seq[IdWeightSum] = {
+    def opt(v: Any) = Option(v).map(_.toString.toLong)
+    df.select("id", "w", "cum").collect().toSeq
+      .map(r => (opt(r.get(0)), opt(r.get(1)), opt(r.get(2)))).sortBy(t => (t._1, t._2))
+  }
+
+  /** `sum(w) over (order by id)` on the driver, as [[sorted]] gives it:
+    * equal ids share the sum through the last of them, a null weight
+    * adds nothing, and the sum is null until the first weight.
+    */
+  private def driverCumsum(df: DataFrame): Seq[IdWeightSum] = {
+    val rows = sorted(df.withColumn("cum", org.apache.spark.sql.functions.lit(null)))
+    var acc = Option.empty[Long]
+    rows.map(_._1).distinct.flatMap { id =>
+      val peers = rows.filter(_._1 == id)
+      peers.foreach(_._2.foreach(w => acc = Some(acc.getOrElse(0L) + w)))
+      peers.map { case (i, w, _) => (i, w, acc) }
+    }
+  }
+
+  test("runningSum over ordered partitions: a driver-side cumsum with no exchange") {
+    val df = spark.range(0, 1000, 1, 8)
+      .select($"id", ($"id" % 7 + 1).cast("int").as("w"))
+    val out = Chunker.runningSum(df, "id", "w", "cum")
+    assert(sorted(out) == driverCumsum(df))
+    assert(exchanges(out).isEmpty, out.queryExecution.executedPlan.treeString)
+  }
+
+  test("runningSum over shuffled ids range-partitions them, with the same sums") {
+    val df = spark.range(0, 1000, 1, 8)
+      .select((($"id" * 7919) % 1000).as("id"), ($"id" % 5 + 1).as("w"))
+    val out = Chunker.runningSum(df, "id", "w", "cum")
+    assert(sorted(out) == driverCumsum(df))
+    assert(exchanges(out).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]))
+  }
+
+  test("runningSum: ties across a boundary, null ids and null weights match sum() over (order by id)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("w", LongType)))
+    def frame(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    // partition 0 ends at id 3 and partition 1 starts at it
+    val tie = frame(Seq(Row(1L, 1L), Row(2L, 2L), Row(3L, 4L), Row(3L, 8L), Row(4L, 16L), Row(5L, 32L)))
+    val tieSums = Chunker.runningSum(tie, "id", "w", "cum")
+    assert(sorted(tieSums) == driverCumsum(tie))
+    assert(sorted(tieSums).flatMap(_._3) == Seq(1L, 3L, 15L, 15L, 31L, 63L))
+    assert(exchanges(tieSums).nonEmpty, "a tie across partitions takes the range branch")
+    // a null weight adds nothing; the sum is null before the first weight
+    val nulls = frame(Seq(Row(null, null), Row(1L, null), Row(3L, 5L), Row(null, null),
+      Row(2L, 4L), Row(4L, null)))
+    val nullSums = Chunker.runningSum(nulls, "id", "w", "cum")
+    assert(sorted(nullSums) == driverCumsum(nulls))
+    assert(sorted(nullSums).map(_._3) == Seq(None, None, None, Some(4L), Some(9L), Some(9L)))
+    assert(exchanges(nullSums).nonEmpty, "a null id takes the range branch")
+  }
+
+  test("a text file read as 8 partitions or as 1 combines to the same bytes") {
+    val dir = Harness.tempDir("corpus-parts")
+    val file = dir.resolve("corpus.txt")
+    val lines = (0 until 3000).map { i =>
+      if (i == 1234) ("giant " * 900).trim
+      else s"record $i " + (if (i % 3 == 0) "keep " else "") + ("w" + i % 11 + " ") * (i % 23)
+    }
+    java.nio.file.Files.write(file, lines.mkString("\n").getBytes("UTF-8"))
+    def combined(maxPartitionBytes: Long, minPartitions: Int): (Int, Int, String) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
+      s.conf.set("spark.sql.files.minPartitionNum", minPartitions.toLong)
+      val corpus = graft.sources.TextCorpus.lines(s, file.toString)
+      val chunks = Chunker.chunkTable(corpus, "line_id", "text", budget = 300)
+      val ranged = exchanges(chunks).count(_.outputPartitioning.isInstanceOf[RangePartitioning])
+      val tag = s"p$minPartitions"
+      val mapped = MemoCache.mapChunksWithMemo(chunks, KeywordFilterClient("keep"), "p", "m",
+        dir.resolve(s"memo-$tag").toString)
+      val out = dir.resolve(s"out-$tag")
+      Combine.writeCombined(mapped, out.toString)
+      val parts = java.nio.file.Files.list(out).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+      (corpus.rdd.getNumPartitions, ranged,
+        parts.map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).mkString)
+    }
+    val (n8, ranged8, many) = combined(16 * 1024, 8)
+    val (n1, _, one) = combined(1L << 30, 1)
+    assert(n8 >= 8 && n1 == 1, s"partitions: $n8 and $n1")
+    assert(ranged8 == 0, "zipWithIndex ids need no range exchange")
+    assert(many.contains("keep") && many == one)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {
@@ -196,6 +296,32 @@ class LlmMapSpec extends AnyFunSuite {
     assert(WindowClient.inFlight.get() == 0, "a model call outlived its task")
   }
 
+  test("a slow call does not stall the task's other calls") {
+    WindowClient.reset()
+    val chunks = (0L until 64L).map(i => (i, s"chunk $i")).toDF("chunk_id", "text").coalesce(1)
+    val client = WindowClient(sleepMs = 10, slowOn = "chunk 0", slowMs = 500)
+    val out = LlmMap.mapChunks(chunks, client, "p").collect()
+    val called = WindowClient.calledWhenSlowReturned.get()
+    assert(called > 16, s"calls started before chunk 0 returned: $called")
+    val maxInFlight = WindowClient.maxInFlight.get()
+    assert(maxInFlight <= 16, s"max in flight: $maxInFlight")
+    WindowClient.callsByText.forEach((t, n) => assert(n.get() == 1, s"$t called ${n.get()} times"))
+    assert(out.map(_.getLong(0)).toSeq == (0L until 64L))
+    assert(out.map(_.getString(2)).toSeq == (0 until 64).map(i => s"CHUNK $i"))
+  }
+
+  test("a hung call holds at most 64 rows of its task") {
+    WindowClient.reset()
+    val chunks = (0L until 160L).map(i => (i, s"chunk $i")).toDF("chunk_id", "text").coalesce(1)
+    val client = WindowClient(sleepMs = 10, slowOn = "chunk 0", slowMs = 1500)
+    val out = LlmMap.mapChunks(chunks, client, "p").collect()
+    val called = WindowClient.calledWhenSlowReturned.get()
+    assert(called > 16 && called <= 64, s"calls started while chunk 0 hung: $called")
+    assert(WindowClient.maxInFlight.get() <= 16)
+    assert(WindowClient.callsByText.size == 160)
+    assert(out.map(_.getString(2)).toSeq == (0 until 160).map(i => s"CHUNK $i"))
+  }
+
   test("combine preserves chunk order with no separator") { // mapreduce.go:131-146
     val results = Seq((2L, "C"), (0L, "A"), (1L, "B")).toDF("chunk_id", "result")
     val combined = Combine.combineAll(results).as[String].head()
@@ -217,18 +343,24 @@ final case class CountingClient(keyword: String) extends ModelClient {
 
 /** Records how many calls run at once and how often each text is
   * called. Answers `text.toUpperCase` after `sleepMs`; the chunk whose
-  * text is `failOn` throws at once, and chunk ids above `slowAfter`
-  * sleep `slowMs` instead.
+  * text is `failOn` throws at once, and the chunk whose text is
+  * `slowOn` and chunk ids above `slowAfter` sleep `slowMs` instead.
+  * When the `slowOn` call returns, it records how many distinct texts
+  * had been called by then.
   */
 object WindowClient {
   val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
   val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
   val callsByText =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-  def reset(): Unit = { inFlight.set(0); maxInFlight.set(0); callsByText.clear() }
+  val calledWhenSlowReturned = new java.util.concurrent.atomic.AtomicInteger(-1)
+  def reset(): Unit = {
+    inFlight.set(0); maxInFlight.set(0); callsByText.clear(); calledWhenSlowReturned.set(-1)
+  }
 }
 final case class WindowClient(sleepMs: Long, failOn: String = null,
-                              slowAfter: Long = Long.MaxValue, slowMs: Long = 0)
+                              slowAfter: Long = Long.MaxValue, slowMs: Long = 0,
+                              slowOn: String = null)
   extends ModelClient {
   override def complete(sys: String, text: String): String = {
     WindowClient.maxInFlight.accumulateAndGet(WindowClient.inFlight.incrementAndGet(), math.max)
@@ -236,7 +368,9 @@ final case class WindowClient(sleepMs: Long, failOn: String = null,
       .computeIfAbsent(text, _ => new java.util.concurrent.atomic.AtomicInteger(0)).incrementAndGet()
     try {
       if (text == failOn) throw new IllegalStateException(s"simulated model failure on $text")
-      Thread.sleep(if (text.stripPrefix("chunk ").toLong > slowAfter) slowMs else sleepMs)
+      val slow = text == slowOn || text.stripPrefix("chunk ").toLong > slowAfter
+      Thread.sleep(if (slow) slowMs else sleepMs)
+      if (text == slowOn) WindowClient.calledWhenSlowReturned.set(WindowClient.callsByText.size)
       text.toUpperCase
     } finally WindowClient.inFlight.decrementAndGet()
   }

@@ -76,6 +76,37 @@ class SessionCacheSpec extends AnyFunSuite with CacheCleanup {
     assert(p.storageLevel == StorageLevel.NONE)
   }
 
+  test("persist: a plan already cached is registered, not cached again") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val s = spark.newSession()
+    val recached = new java.util.concurrent.atomic.AtomicInteger
+    val capture = new AbstractAppender("spec-recache", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already cached")) recached.incrementAndGet()
+    }
+    val log = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    capture.start()
+    log.addAppender(capture)
+    try {
+      val first = SessionCache.persist(plan(s, 100036))
+      val again = SessionCache.persist(plan(s, 100036))
+      assert(again.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(again.count() == 14291)
+      // the same call on a Dataset it did not cache logs the notice,
+      // so the capture does see it
+      plan(s, 100043).cache(); plan(s, 100043).cache()
+      assert(recached.get() == 1, "only the direct re-cache logged")
+      SessionCache.clear()
+      assert(first.storageLevel == StorageLevel.NONE && again.storageLevel == StorageLevel.NONE)
+    } finally {
+      log.removeAppender(capture)
+      plan(s, 100043).unpersist(false)
+    }
+  }
+
   test("scanLayout: computed once per (session, root) and kept across clear()") {
     val s = spark.newSession()
     val other = spark.newSession()
