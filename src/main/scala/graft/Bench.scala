@@ -127,12 +127,13 @@ object Bench {
     def jmap(m: Seq[(String, Double)], fmt: Double => String = num) =
       m.map { case (k, v) => str(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     // the meters of every timed entry, under the same across-pass
-    // statistic as "queries"; spill_bytes is disk spill
+    // statistic as "queries": constructor seconds, Spark jobs started
+    // (rounded), executor CPU seconds, shuffle-write and disk-spill bytes
     val timed = entries.map(_._1).filterNot(errors.contains)
     def meter(f: Harness.Measure => Double) = timed.map(n => n -> stat(runs.map(r => f(r(n)))))
-    val bytes = (v: Double) => BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toString
+    val whole = (v: Double) => BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toString
     val es = errors.map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${num(summary.value)},"value_min":${num(summary.valueMin)},"unit":"sec","passes":${runs.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"executor_cpu_s":${jmap(meter(_.cpuSec))},"shuffle_write_bytes":${jmap(meter(_.shuffleWrite.toDouble), bytes)},"spill_bytes":${jmap(meter(_.diskSpill.toDouble), bytes)},"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num(summary.value)},"value_min":${num(summary.valueMin)},"unit":"sec","passes":${runs.size},"cpus":$cpus,"queries":${jmap(summary.queries)},"queries_min":${jmap(summary.queriesMin)},"queries_spread":${jmap(summary.queriesSpread)},"shared_builds":${jmap(summary.sharedBuilds)},"side_effect_queries":${jmap(summary.sideEffects)},"constructor_s":${jmap(meter(_.ctorSec))},"jobs":${jmap(meter(_.jobs.toDouble), whole)},"executor_cpu_s":${jmap(meter(_.cpuSec))},"shuffle_write_bytes":${jmap(meter(_.shuffleWrite.toDouble), whole)},"spill_bytes":${jmap(meter(_.diskSpill.toDouble), whole)},"errors":$es,"sf":"$sfDir"}"""
     // The full per-query line outgrew the driver's 2000-char stdout tail
     // window at ~136 queries (r3/r4/r5 all recorded parsed:null because
     // the line's HEAD — "{"metric":... — fell outside the window). So:

@@ -5,7 +5,7 @@ import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerBusHook
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** What graft's mains (Bench, Verify, Cli and the `tools`)
@@ -94,19 +94,23 @@ object Harness {
     spark.catalog.clearCache()
   }
 
-  /** One entry's cost in one [[pass]]: wall seconds, executor CPU
-    * seconds, shuffle-write bytes, memory- and disk-spill bytes, and
-    * the error that ended it, if any (its wall time is then a
-    * fast-fail, not a measurement).
+  /** One entry's cost in one [[pass]]: wall seconds, of them the
+    * seconds its constructor took (building the frame, eager jobs
+    * included), the Spark jobs it started, executor CPU seconds,
+    * shuffle-write bytes, memory- and disk-spill bytes, and the error
+    * that ended it, if any (its wall time is then a fast-fail, not a
+    * measurement).
     */
-  final case class Measure(sec: Double, cpuSec: Double, shuffleWrite: Long,
-      memSpill: Long, diskSpill: Long, error: Option[String])
+  final case class Measure(sec: Double, ctorSec: Double, jobs: Long, cpuSec: Double,
+      shuffleWrite: Long, memSpill: Long, diskSpill: Long, error: Option[String])
 
-  /** Task metrics summed over the stages completed since [[reset]]: a
-    * stage-completed event carries its stage's summed TaskMetrics.
+  /** Jobs started, and task metrics summed over the stages completed,
+    * since [[reset]]: a stage-completed event carries its stage's
+    * summed TaskMetrics.
     */
   private final class Meter extends SparkListener {
-    val cpuNs, shuffleWrite, memSpill, diskSpill = new AtomicLong
+    val jobs, cpuNs, shuffleWrite, memSpill, diskSpill = new AtomicLong
+    override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
       Option(sc.stageInfo.taskMetrics).foreach { m =>
         cpuNs.addAndGet(m.executorCpuTime)
@@ -114,7 +118,7 @@ object Harness {
         memSpill.addAndGet(m.memoryBytesSpilled)
         diskSpill.addAndGet(m.diskBytesSpilled)
       }
-    def reset(): Unit = Seq(cpuNs, shuffleWrite, memSpill, diskSpill).foreach(_.set(0))
+    def reset(): Unit = Seq(jobs, cpuNs, shuffleWrite, memSpill, diskSpill).foreach(_.set(0))
   }
 
   /** Waits until every queued listener event has been delivered, so a
@@ -125,10 +129,11 @@ object Harness {
     catch { case _: TimeoutException =>
       System.err.println("WARN listener bus drain timed out") }
 
-  /** One timed, metered pass: clears the caches, then materializes each
-    * entry once on `dir` and measures it (the timer stops before the
-    * listener bus is drained). A failing entry is recorded, not thrown,
-    * and the pass goes on. `report` sees each measure as it is taken.
+  /** One timed, metered pass: clears the caches, then builds and
+    * materializes each entry once on `dir` and measures it (the timer
+    * stops before the listener bus is drained). A failing entry is
+    * recorded, not thrown, and the pass goes on. `report` sees each
+    * measure as it is taken.
     */
   def pass(spark: SparkSession, dir: String, entries: Seq[Entry],
       report: (String, Measure) => Unit = (_, _) => ()): Seq[(String, Measure)] = {
@@ -140,14 +145,19 @@ object Harness {
       entries.map { case (name, fn) =>
         meter.reset()
         val t0 = System.nanoTime()
+        // a constructor that throws took the whole time
+        var ctorSec = Option.empty[Double]
         val error =
-          try { materialize(fn(spark, dir)); None }
-          catch { case e: Throwable =>
+          try {
+            val df = fn(spark, dir)
+            ctorSec = Some((System.nanoTime() - t0) / 1e9)
+            materialize(df); None
+          } catch { case e: Throwable =>
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
         val sec = (System.nanoTime() - t0) / 1e9
         drainBus(spark)
-        val m = Measure(sec, meter.cpuNs.get / 1e9, meter.shuffleWrite.get,
-          meter.memSpill.get, meter.diskSpill.get, error)
+        val m = Measure(sec, ctorSec.getOrElse(sec), meter.jobs.get, meter.cpuNs.get / 1e9,
+          meter.shuffleWrite.get, meter.memSpill.get, meter.diskSpill.get, error)
         report(name, m)
         name -> m
       }

@@ -167,14 +167,15 @@ object Curation {
     * operator's parameter — any per-doc double plugs in). Determinism
     * & parity: density is one IEEE division of two integer counts
     * (bit-identical across engines), ties break on doc_id, and the
-    * cumulative token sum is [[Chunker.runningSum]]'s two-phase
-    * prefix sum — the scalable global-order discipline (no
-    * single-partition window), with the budget comparison in exact
-    * integers. The (density, id) key follows no partition order, so on
-    * a multi-partition corpus runningSum range-partitions by it. Scale
-    * shape: one corpus scan (persisted by runningSum), one range
-    * shuffle, a 1-row broadcast budget; at 100 TB the range sort on
-    * (density, id) is the same shape as any global top-k export.
+    * cumulative token sum is [[graft.plans.GlobalOrder.runningSum]]
+    * over (density DESC, doc_id) — the scalable global-order discipline
+    * (no single-partition window), with the budget comparison in exact
+    * integers. Scale shape: one corpus scan, sorted within partitions
+    * and persisted; a one-partition corpus keeps its partitioning, and
+    * a multi-partition one (whose (density, id) ranges follow no
+    * partition order) takes one range shuffle; a 1-row broadcast
+    * budget. At 100 TB the range sort on (density, id) is the same
+    * shape as any global top-k export.
     */
   def budgetSelect(docs: DataFrame): DataFrame = {
     val stops = array(TextAnalytics.Stopwords.map(lit): _*)
@@ -187,12 +188,8 @@ object Curation {
       .filter(col("n_tok") > 0L)
       .withColumn("density", col("stop_n").cast("double") / col("n_tok"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("density"))
-    // ascending struct sort == (density DESC, doc_id ASC): 0 − x is the
-    // exact IEEE sign flip, so the order is the oracle's order
-    val keyed = base.withColumn("_sel_key",
-      struct((lit(0.0) - col("density")).as("nd"), col("doc_id").as("id")))
-    val cum = graft.pipeline.Chunker
-      .runningSum(keyed, "_sel_key", "n_tok", "cum_tok")
+    val cum = graft.plans.GlobalOrder
+      .runningSum(base, Seq(col("density").desc, col("doc_id")), "n_tok", "cum_tok")
     // the final cumulative value IS the corpus total — read it off the
     // persisted prefix-sum table instead of re-scanning the corpus
     val budget = cum.agg(max(col("cum_tok")).as("w_tot"))

@@ -401,7 +401,7 @@ object EventsQueries {
     // definition, closed interval [first event, last event]) emits
     // +1/-1 deltas at its endpoints; the concurrency at each change
     // instant is the global running sum of deltas in time order —
-    // computed with Chunker.runningSum, the two-phase distributed
+    // computed with GlobalOrder.runningSum, the two-phase distributed
     // prefix sum (per-partition totals -> one local cumulative pass
     // from each partition's offset; the grouped deltas are hash-
     // partitioned, so it range-partitions them by time first), so no
@@ -429,7 +429,7 @@ object EventsQueries {
           .as("d"))
         .groupBy(col("d.t_us").as("t_us"))
         .agg(sum(col("d.delta")).as("delta"))
-      graft.pipeline.Chunker.runningSum(deltas, "t_us", "delta", "n_active")
+      graft.plans.GlobalOrder.runningSum(deltas, Seq(col("t_us")), "delta", "n_active")
     }),
 
     // Time-series gap-fill: dense hourly series per event type with

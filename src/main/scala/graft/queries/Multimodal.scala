@@ -107,8 +107,8 @@ object Multimodal {
         .withColumn("media", col("text").cast("binary"))
         .select(col("doc_id"),
           octet_length(col("media")).cast("long").as("n_bytes"))
-      graft.pipeline.Chunker
-        .runningSum(blobs, "doc_id", "n_bytes", "cum_bytes")
+      graft.plans.GlobalOrder
+        .runningSum(blobs, Seq(col("doc_id")), "n_bytes", "cum_bytes")
         .select(col("doc_id"), col("n_bytes"),
           floor((col("cum_bytes") - 1) / MediaShardBytes).as("shard"))
         .groupBy(col("shard"))

@@ -419,14 +419,12 @@ object Relational {
     // Gaps-and-islands over the sparse orderkey sequence (TPC-H keys
     // skip ranges by design): contiguous runs found via the classic
     // key − row_number() constant-per-island trick, with the global
-    // numbering done by the two-phase range-partitioned Ranks plan —
-    // no single-partition window at any table size.
+    // numbering done by the two-phase GlobalOrder scan (orderkeys are
+    // unique, so rank is the row number) — no single-partition window
+    // at any table size.
     "q107_gaps_islands" -> ((s, d) => {
-      val ranked = graft.plans.Ranks.withGlobalRanks(
-        orders(s, d).select(col("o_orderkey")),
-        sortCols = Seq(col("o_orderkey")),
-        keyCols = Seq(col("o_orderkey")),
-        rankCol = "rn")
+      val ranked = graft.plans.GlobalOrder.withRanks(
+        orders(s, d).select(col("o_orderkey")), Seq(col("o_orderkey")), rankCol = "rn")
       ranked.withColumn("grp", col("o_orderkey") - col("rn"))
         .groupBy(col("grp"))
         .agg(min(col("o_orderkey")).as("island_start"),

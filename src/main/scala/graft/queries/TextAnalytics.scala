@@ -813,8 +813,8 @@ object TextAnalytics {
       val withTok = documents(s, d)
         .select(col("doc_id"),
           graft.functions.token_count(col("text")).cast("long").as("n_tok"))
-      graft.pipeline.Chunker
-        .runningSum(withTok, "doc_id", "n_tok", "cum_tok")
+      graft.plans.GlobalOrder
+        .runningSum(withTok, Seq(col("doc_id")), "n_tok", "cum_tok")
         .select(col("doc_id"), col("n_tok"),
           floor((col("cum_tok") - 1) / PackBudget).as("bin"))
         .groupBy(col("bin"))
@@ -1213,9 +1213,10 @@ object TextAnalytics {
     // across language strata by the largest-remainder (Hamilton)
     // method, then draw each stratum's quota deterministically. All
     // integer arithmetic: base = (N·n_l) div total, remainders ranked
-    // through the two-phase plans/Ranks (no single-partition window
-    // even on the strata dim), per-stratum draw = the q149 hash-order
-    // window. Output is exactly N rows whenever N <= corpus size.
+    // through the two-phase plans/GlobalOrder (no single-partition
+    // window even on the strata dim), per-stratum draw = the q149
+    // hash-order window. Output is exactly N rows whenever N <= corpus
+    // size.
     "q173_proportional_sample" -> ((s, d) => {
       val docs = documents(s, d).select(col("doc_id"), col("lang"))
       val strata = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
@@ -1226,9 +1227,8 @@ object TextAnalytics {
           (lit(PropN) * col("n_l") -
             expr(s"($PropN * n_l) div total") * col("total")).as("rem"))
         .transform(SessionCache.persist)
-      val ranked = graft.plans.Ranks.withGlobalRanks(q,
-        Seq(col("rem").desc, col("lang")), Seq(col("rem"), col("lang")),
-        rankCol = "seat_rank", denseCol = "_graft_dr")
+      val ranked = graft.plans.GlobalOrder.withRanks(q,
+        Seq(col("rem").desc, col("lang")), rankCol = "seat_rank", denseCol = "_graft_dr")
       val sumBase = q.agg(sum(col("base")).as("base_total"))
       val alloc = ranked.crossJoin(broadcast(sumBase))
         .select(col("lang"),
@@ -1267,7 +1267,7 @@ object TextAnalytics {
     // one explode of ≤|word|+1 pairs per vocab row, one map-side-
     // combinable count, one TakeOrdered(1), one narrow projection; the
     // driver collects exactly the winning pair per step (the
-    // q180/Ranks driver-sized-collect pattern).
+    // q180/GlobalOrder driver-sized-collect pattern).
     "q182_bpe_merges" -> ((s, d) =>
       bpeInduce(s, documents(s, d), BpeMergeSteps))
   )

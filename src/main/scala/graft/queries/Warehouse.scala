@@ -12,8 +12,8 @@ import graft.Tables._
   * next to the q93 upsert / q95 snapshot-diff family.
   *
   * Both queries keep every window partitioned (SCD2) or two-phase
-  * (equi-depth via [[graft.plans.Ranks]]) — no single-partition global
-  * window on a fact table at any scale.
+  * (equi-depth via [[graft.plans.GlobalOrder]]) — no single-partition
+  * global window on a fact table at any scale.
   */
 object Warehouse {
 
@@ -81,17 +81,15 @@ object Warehouse {
     // to q94's equal-width bins, and the profile a cost-based optimizer
     // actually wants (equal-width bins collapse under skew; equi-depth
     // bins track the mass). Exact, not sketched: bin = floor((rank-1)*B
-    // / n) over the GLOBAL order — computed with the two-phase
-    // range-partitioned rank (plans/Ranks.scala), never a
-    // single-partition window. The bin arithmetic stays exact in IEEE:
+    // / n) over the GLOBAL order — computed with the two-phase rank
+    // (plans/GlobalOrder.scala), never a single-partition window. The
+    // bin arithmetic stays exact in IEEE:
     // (rank-1)*B and n are exact integers < 2^53 and x/y with x = k*y
     // rounds to exactly k, so the floor cannot flip between engines.
     "q116_equidepth_histogram" -> ((s, d) => {
       val o = orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-      val ranked = graft.plans.Ranks.withGlobalRanks(o,
-        Seq(col("o_totalprice"), col("o_orderkey")),
-        Seq(col("o_totalprice"), col("o_orderkey")),
-        rankCol = "r", denseCol = "dr")
+      val ranked = graft.plans.GlobalOrder.withRanks(o,
+        Seq(col("o_totalprice"), col("o_orderkey")), rankCol = "r", denseCol = "dr")
       val n = o.agg(count(lit(1)).as("n_total"))
       ranked.crossJoin(broadcast(n))
         .withColumn("bin",

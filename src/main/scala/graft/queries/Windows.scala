@@ -56,14 +56,13 @@ object Windows {
           round(avg(col("l_extendedprice")).over(w), 6).as("mavg_price"))
     }),
 
-    // Global rank WITHOUT the single-partition window: two-phase
-    // range-partitioned ranking (graft.plans.Ranks) — local ranks plus
-    // per-partition offsets. Scales to fact tables; no "No Partition
-    // Defined" straggler.
+    // Global rank WITHOUT the single-partition window: the two-phase
+    // scan of graft.plans.GlobalOrder — per-partition totals, then
+    // local ranks seeded with the partitions before. Scales to fact
+    // tables; no "No Partition Defined" straggler.
     "q19_rank_dense" -> ((s, d) => {
-      graft.plans.Ranks.withGlobalRanks(part(s, d),
-          sortCols = Seq(col("p_retailprice").desc, col("p_partkey")),
-          keyCols = Seq(col("p_retailprice"), col("p_partkey")),
+      graft.plans.GlobalOrder.withRanks(part(s, d),
+          Seq(col("p_retailprice").desc, col("p_partkey")),
           rankCol = "price_rank", denseCol = "price_dense_rank")
         .select(col("p_partkey"), col("price_rank"), col("price_dense_rank"),
           round(col("p_retailprice"), 2).as("p_retailprice"))

@@ -120,14 +120,19 @@ object ScaleProbe {
     "events/rel" -> "q80_session_concurrency",
     "events/rel" -> "q124_winsorize")
 
-  /** One entry's wall seconds (NaN when it failed) and meters. */
-  final case class Measure(sec: Double, shuffleWrite: Long, memSpill: Long,
-                           diskSpill: Long) {
-    def merge(o: Measure): Measure = Measure(
-      if (sec.isNaN) o.sec else if (o.sec.isNaN) sec else math.min(sec, o.sec),
-      math.max(shuffleWrite, o.shuffleWrite),
-      math.max(memSpill, o.memSpill),
-      math.max(diskSpill, o.diskSpill))
+  /** One entry's wall and constructor seconds (NaN when it failed),
+    * Spark jobs started and meters.
+    */
+  final case class Measure(sec: Double, ctorSec: Double, jobs: Long, shuffleWrite: Long,
+                           memSpill: Long, diskSpill: Long) {
+    def merge(o: Measure): Measure = {
+      def least(a: Double, b: Double) = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
+      Measure(least(sec, o.sec), least(ctorSec, o.ctorSec),
+        math.max(jobs, o.jobs),
+        math.max(shuffleWrite, o.shuffleWrite),
+        math.max(memSpill, o.memSpill),
+        math.max(diskSpill, o.diskSpill))
+    }
   }
 
   private def usage(msg: String): Nothing = {
@@ -215,8 +220,10 @@ object ScaleProbe {
           System.err.println(f"SCALEPROBE $dir pass $p $n ${m.sec}%.2f s " +
             f"shufW=${m.shuffleWrite / 1e6}%.0f MB " +
             f"spill=${m.memSpill / 1e6}%.0f/${m.diskSpill / 1e6}%.0f MB")
-        }).map { case (n, m) => n -> Measure(if (m.error.isEmpty) m.sec else Double.NaN,
-          m.shuffleWrite, m.memSpill, m.diskSpill) }.toMap
+        }).map { case (n, m) =>
+          val ok = m.error.isEmpty
+          n -> Measure(if (ok) m.sec else Double.NaN, if (ok) m.ctorSec else Double.NaN,
+            m.jobs, m.shuffleWrite, m.memSpill, m.diskSpill) }.toMap
       }.reduce((a, b) => a.map { case (k, v) => k -> v.merge(b(k)) })
 
     val base = time(baseDir, 1)

@@ -288,8 +288,8 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     assert(Dedup.appendDedup(noDocs, batch, "doc_id", "text").count() == 1)
     // runningSum over an empty frame is empty, not a crash
     val noDeltas = Seq.empty[(Long, Long)].toDF("t_us", "delta")
-    assert(graft.pipeline.Chunker.runningSum(
-      noDeltas, "t_us", "delta", "n_active").count() == 0)
+    assert(graft.plans.GlobalOrder.runningSum(
+      noDeltas, Seq(col("t_us")), "delta", "n_active").count() == 0)
   }
 
   test("late round-4 operators on empty input") {
@@ -324,9 +324,7 @@ class EmptyInputSpec extends AnyFunSuite with CacheCleanup {
     val noEvents = Seq.empty[graft.streaming.SessionEvent].toDS()
     assert(graft.streaming.StatefulSessions.sessionize(noEvents).count() == 0)
     val noRows = Seq.empty[(Long, Double)].toDF("id", "x")
-    val ranked = graft.plans.Ranks.withGlobalRanks(noRows,
-      sortCols = Seq(col("x").desc, col("id")),
-      keyCols = Seq(col("x"), col("id")))
+    val ranked = graft.plans.GlobalOrder.withRanks(noRows, Seq(col("x").desc, col("id")))
     assert(ranked.count() == 0)
   }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.TokenCount
 import graft.pipeline._
+import graft.plans.GlobalOrder
 
 /** Shared session for all suites (one JVM-wide session; local[4]).
   * maxFailures=2 (the `local[4, 2]` form) so RetryDeterminismSpec's
@@ -168,7 +169,7 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
   test("runningSum over ordered partitions: a driver-side cumsum with no exchange") {
     val df = spark.range(0, 1000, 1, 8)
       .select($"id", ($"id" % 7 + 1).cast("int").as("w"))
-    val out = Chunker.runningSum(df, "id", "w", "cum")
+    val out = GlobalOrder.runningSum(df, Seq($"id"), "w", "cum")
     assert(sorted(out) == driverCumsum(df))
     assert(exchanges(out).isEmpty, out.queryExecution.executedPlan.treeString)
   }
@@ -176,7 +177,7 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
   test("runningSum over shuffled ids range-partitions them, with the same sums") {
     val df = spark.range(0, 1000, 1, 8)
       .select((($"id" * 7919) % 1000).as("id"), ($"id" % 5 + 1).as("w"))
-    val out = Chunker.runningSum(df, "id", "w", "cum")
+    val out = GlobalOrder.runningSum(df, Seq($"id"), "w", "cum")
     assert(sorted(out) == driverCumsum(df))
     assert(exchanges(out).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]))
   }
@@ -189,17 +190,51 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     // partition 0 ends at id 3 and partition 1 starts at it
     val tie = frame(Seq(Row(1L, 1L), Row(2L, 2L), Row(3L, 4L), Row(3L, 8L), Row(4L, 16L), Row(5L, 32L)))
-    val tieSums = Chunker.runningSum(tie, "id", "w", "cum")
+    val tieSums = GlobalOrder.runningSum(tie, Seq($"id"), "w", "cum")
     assert(sorted(tieSums) == driverCumsum(tie))
     assert(sorted(tieSums).flatMap(_._3) == Seq(1L, 3L, 15L, 15L, 31L, 63L))
     assert(exchanges(tieSums).nonEmpty, "a tie across partitions takes the range branch")
     // a null weight adds nothing; the sum is null before the first weight
     val nulls = frame(Seq(Row(null, null), Row(1L, null), Row(3L, 5L), Row(null, null),
       Row(2L, 4L), Row(4L, null)))
-    val nullSums = Chunker.runningSum(nulls, "id", "w", "cum")
+    val nullSums = GlobalOrder.runningSum(nulls, Seq($"id"), "w", "cum")
     assert(sorted(nullSums) == driverCumsum(nulls))
     assert(sorted(nullSums).map(_._3) == Seq(None, None, None, Some(4L), Some(9L), Some(9L)))
     assert(exchanges(nullSums).nonEmpty, "a null id takes the range branch")
+  }
+
+  test("withRanks: ties across a boundary, a desc key and null keys match rank() and dense_rank()") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{dense_rank, rank}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("x", LongType), StructField("g", StringType)))
+    // three rows per partition
+    def frame(rows: Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val order = Seq($"x".desc, $"g")
+    def ranks(df: DataFrame): Seq[String] =
+      df.select("x", "g", "rank", "dense_rank").collect().map(_.toString).toSeq.sorted
+    def byWindow(df: DataFrame): Seq[String] = {
+      val w = Window.orderBy(order: _*)
+      ranks(df.withColumn("rank", rank().over(w)).withColumn("dense_rank", dense_rank().over(w)))
+    }
+    // (x desc nulls last, g nulls first) increases from partition 0 to 1
+    val inOrder = frame(Row(9L, "a"), Row(7L, null), Row(9L, "a"),
+      Row(null, "c"), Row(5L, "b"), Row(5L, "b"))
+    val kept = GlobalOrder.withRanks(inOrder, order)
+    assert(ranks(kept) == byWindow(inOrder))
+    assert(ranks(kept) == Seq("[5,b,4,3]", "[5,b,4,3]", "[7,null,3,2]", "[9,a,1,1]",
+      "[9,a,1,1]", "[null,c,6,4]"))
+    assert(exchanges(kept).isEmpty, kept.queryExecution.executedPlan.treeString)
+    // the same order, but (7, null) ends partition 0 and starts partition 1
+    val split = frame(Row(9L, "a"), Row(7L, null), Row(9L, "a"),
+      Row(null, "c"), Row(7L, null), Row(5L, "b"))
+    val ranged = GlobalOrder.withRanks(split, order)
+    assert(ranks(ranged) == byWindow(split))
+    assert(exchanges(ranged).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]))
+    // a key must be an input column, with or without a direction
+    intercept[IllegalArgumentException](GlobalOrder.withRanks(split, Seq($"x" + 1)))
   }
 
   test("a text file read as 8 partitions or as 1 combines to the same bytes") {

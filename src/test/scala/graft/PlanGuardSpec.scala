@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    documented exact baseline (VERDICT r4/r5 plan audits).
   *  - A Window with an EMPTY partition spec funnels the whole dataset
   *    through one task: all global orders must go through the
-  *    two-phase plans/Ranks or Chunker.runningSum instead.
+  *    two-phase plans/GlobalOrder (runningSum, withRanks) instead.
   *
   * Plans are inspected pre-execution ([[org.apache.spark.sql.Dataset.queryExecution]].sparkPlan) with
   * subqueries included, so the guard costs plan construction only —
