@@ -106,10 +106,16 @@ object Chunker {
     * collect_list is made order-stable by sorting an array of
     * (id, pos, text) structs — never rely on partition order after a
     * shuffle.
+    *
+    * The table has one partition per task slot of the session
+    * (`defaultParallelism`), so the map stage over it keeps every core
+    * busy with model calls: a chunk table's shuffle is small, and AQE
+    * would otherwise coalesce it into a single task.
     */
   def chunkTable(records: DataFrame, idCol: String, textCol: String,
                  budget: Int = DefaultBudget): DataFrame = {
     assignChunks(records, idCol, textCol, budget)
+      .repartition(records.sparkSession.sparkContext.defaultParallelism, col("chunk_id"))
       .groupBy(col("chunk_id"))
       .agg(
         array_join(

@@ -42,14 +42,12 @@ object LlmMap {
   /** Suffix the reference injects into every prompt (mapreduce.go:91). */
   val FilterSuffix = "\nReturn the lines that you want to keep."
 
-  /** Model calls a map task keeps running at once. */
-  private val InFlight = 16
-
-  /** Rows a map task holds at once: running calls plus finished ones
-    * waiting for an earlier row. Bounds the memory a slow head call
-    * can pin while the calls behind it go on.
+  /** Rows a map task holds at once, each with its model call running
+    * or finished and waiting for an earlier row: the task's one bound on
+    * concurrent calls, and on the memory a slow head call can pin while
+    * the calls behind it go on.
     */
-  private val MaxHeld = 4 * InFlight
+  private val MaxHeld = 64
 
   /** One JVM-wide pool for every task's model calls. Its threads are
     * daemons, so an idle pool never keeps a finished driver or executor
@@ -64,38 +62,63 @@ object LlmMap {
     }
   })
 
+  /** What a map task does with its finished calls: `done` once for
+    * each call that returned, `end` once when the task succeeds, fails
+    * or is killed, after its unfinished calls are cancelled. Both run on
+    * the task's thread.
+    */
+  private[pipeline] trait CallSink {
+    def done(row: Row, result: String): Unit
+    def end(): Unit
+  }
+
+  private object NoSink extends CallSink {
+    def done(row: Row, result: String): Unit = ()
+    def end(): Unit = ()
+  }
+
   /** Map stage: chunks(chunk_id, text, ...) -> + `result` column.
     * Runs as a distributed map over however many partitions the chunk
-    * table has. Each task keeps up to 16 model calls running on a shared
-    * pool and starts the next one as soon as any call finishes, so one
-    * slow call does not stall the others; it holds at most 64 rows
-    * (running or finished) and emits them in input order. This bounds
-    * the reference's one-goroutine-per-chunk errgroup
+    * table has. Each task holds up to 64 rows, every one with its model
+    * call running or finished on a shared pool, and emits them in input
+    * order; each row it emits starts the next row's call. One slow call
+    * thus stalls its task only once the 63 rows behind it are done.
+    * This bounds the reference's one-goroutine-per-chunk errgroup
     * (mapreduce.go:93-122) per task, with the same fail-fast job-abort
     * semantics on error: the first failing call fails the task with
     * `model call failed for chunk_id=<id>` (the client's exception as
     * its cause) and cancels the task's other calls.
     */
-  def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String): DataFrame = {
+  def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String): DataFrame =
+    mapChunks(chunks, client, prompt, () => NoSink)
+
+  /** [[mapChunks]], handing each task's finished calls to the sink that
+    * `sink` makes on the task's thread.
+    */
+  private[pipeline] def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String,
+                                  sink: () => CallSink): DataFrame = {
     val sys = prompt + FilterSuffix
     val in = chunks.schema
     val textIdx = in.fieldIndex("text")
     val idIdx = in.fieldIndex("chunk_id")
     chunks.mapPartitions { rows: Iterator[Row] =>
       new InOrder(rows, (r: Row) => client.complete(sys, r.getString(textIdx)),
-        (r: Row) => s"chunk_id=${r.get(idIdx)}")
+        (r: Row) => s"chunk_id=${r.get(idIdx)}", sink())
         .map { case (r, result) => Row.fromSeq(r.toSeq :+ result) }
     }(Encoders.row(in.add(StructField("result", StringType))))
   }
 
   /** The call window of one task: `(row, call(row))` in input order.
-    * Up to [[InFlight]] calls run on [[pool]] at once and at most
-    * [[MaxHeld]] rows are held; every finished call wakes the task
-    * thread, which then starts the next call or emits the head row.
-    * Outstanding calls are cancelled when the task completes, fails or
-    * is killed.
+    * Every held row's call runs on [[pool]], at most [[MaxHeld]] rows are
+    * held, and every finished call wakes the task thread, which emits the
+    * head row once its call is done and then starts the next call (a
+    * failed call anywhere in the window fails the task at once). Each
+    * emitted row goes to `sink`. When the task completes, fails or is
+    * killed, the calls still running are cancelled, the held calls that
+    * had finished go to `sink`, and `sink` ends.
     */
-  private final class InOrder(rows: Iterator[Row], complete: Row => String, label: Row => String)
+  private final class InOrder(rows: Iterator[Row], complete: Row => String, label: Row => String,
+                              sink: CallSink)
     extends Iterator[(Row, String)] {
 
     private final class Call(val row: Row) extends FutureTask[String](new Callable[String] {
@@ -106,26 +129,31 @@ object LlmMap {
           try get()
           catch { case e: ExecutionException => failed.compareAndSet(null, (row, e.getCause)) }
         }
-        running.decrementAndGet()
         finished.release()
       }
+
+      /** The call's answer, if it has returned one. */
+      def answer: Option[String] =
+        if (!isDone || isCancelled) None
+        else try Some(get()) catch { case _: ExecutionException => None }
     }
 
     private val window = new java.util.ArrayDeque[Call]()
-    private val running = new AtomicInteger
     private val finished = new Semaphore(0)
     private val failed = new AtomicReference[(Row, Throwable)]()
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => cancelAll()))
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => end()))
 
-    private def cancelAll(): Unit = window.synchronized {
-      window.forEach(_.cancel(true))
-      window.clear()
+    private def end(): Unit = {
+      window.synchronized {
+        window.forEach { c => c.cancel(true); c.answer.foreach(sink.done(c.row, _)) }
+        window.clear()
+      }
+      sink.end()
     }
 
     private def fill(): Unit = window.synchronized {
-      while (window.size < MaxHeld && running.get < InFlight && rows.hasNext) {
+      while (window.size < MaxHeld && rows.hasNext) {
         val c = new Call(rows.next())
-        running.incrementAndGet()
         window.add(c)
         pool.execute(c)
       }
@@ -136,21 +164,16 @@ object LlmMap {
     override def next(): (Row, String) = {
       if (!hasNext) throw new NoSuchElementException("next on an exhausted model-call window")
       val head = window.synchronized(window.peek())
-      // a failure anywhere in the window fails the task at once
-      while (!head.isDone && failed.get() == null) {
-        finished.acquire()
-        fill()
-      }
+      while (!head.isDone && failed.get() == null) finished.acquire()
       val err = failed.get()
       if (err != null) fail(err._1, err._2)
       window.synchronized(window.poll())
-      try head.row -> head.get()
-      catch { case e: ExecutionException => fail(head.row, e.getCause) }
+      val result = try head.get() catch { case e: ExecutionException => fail(head.row, e.getCause) }
+      sink.done(head.row, result)
+      head.row -> result
     }
 
-    private def fail(r: Row, cause: Throwable): Nothing = {
-      cancelAll()
+    private def fail(r: Row, cause: Throwable): Nothing =
       throw new RuntimeException(s"model call failed for ${label(r)}", cause)
-    }
   }
 }

@@ -1,8 +1,19 @@
 package graft.pipeline
 
+import java.util.UUID
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.SessionCache
 
@@ -16,9 +27,13 @@ import graft.SessionCache
   *
   * Storage is a parquet table of (key, result). A run anti-joins pending
   * chunks against the memo (left_anti — no driver-side lookup), computes
-  * only the misses, appends them, and serves memo hits unioned with the
-  * fresh results. All set logic is distributed; works unchanged on a
-  * 1000-executor cluster with the memo on a shared object store.
+  * only the misses, and serves memo hits unioned with the fresh results.
+  * The map stage is the memo's only writer: each map task commits its
+  * finished calls' rows to its own file as the task ends, like the
+  * reference's per-chunk `result%d.txt`, so a failed run keeps every
+  * call that returned and a rerun makes only the calls that did not.
+  * All set logic is distributed; works unchanged on a 1000-executor
+  * cluster with the memo on a shared object store.
   */
 object MemoCache {
 
@@ -37,17 +52,18 @@ object MemoCache {
     * ONLY a missing/empty memo path means "cold cache". Any other read
     * failure (permissions, corrupt footer, storage flake) must
     * propagate: swallowing it would silently recompute the whole map
-    * stage — re-invoking the model — and append duplicate keys, with
+    * stage — re-invoking the model — and commit duplicate keys, with
     * no signal that anything went wrong. Existence is checked up front
     * (filesystems differ on WHICH exception a missing path raises:
     * local FS throws raw FileNotFoundException, not AnalysisException
     * PATH_NOT_FOUND), so the catch below only excuses an existing-but-
-    * fileless dir (e.g. a crash between mkdir and first append). A
-    * table whose columns are not (key, result) is a mis-pointed path:
-    * it throws, so neither a map run nor a compaction writes into it.
+    * fileless dir (e.g. one holding only a killed task's `_`-prefixed
+    * uncommitted file). A table whose columns are not (key, result) is
+    * a mis-pointed path: it throws, so neither a map run nor a
+    * compaction writes into it.
     */
   private def memoTable(spark: SparkSession, memoPath: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(memoPath)
+    val path = new Path(memoPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return None
     val df = try spark.read.parquet(memoPath) catch {
@@ -62,43 +78,83 @@ object MemoCache {
     Some(df)
   }
 
-  /** The memo, or on a cold cache an empty LocalRelation: the
-    * optimizer prunes the dedup, both joins and the union against it,
-    * leaving the fresh results alone.
-    */
-  private def readMemo(spark: SparkSession, memoPath: String): DataFrame =
-    memoTable(spark, memoPath).getOrElse(spark.createDataFrame(
-      java.util.List.of[Row](), StructType(Seq(
-        StructField("key", StringType), StructField("result", StringType)))))
-
   /** Run the map stage with memoization.
     * chunks must have (chunk_id, text). Returns (chunk_id, text, result).
     *
-    * The memo is read ONCE: hits come from the join below, misses are
-    * computed, PERSISTED (so the model is not re-invoked when the
-    * returned plan is consumed), appended to the memo, and unioned with
-    * the hits. Appending a duplicate key on a concurrent re-run is
-    * harmless: hits are deduped on read.
+    * The memo is read ONCE: hits come from a join against it, and the
+    * misses run through the map stage once, now, in one job: each map
+    * task commits its rows to the memo ([[TaskCommit]]) and the stage's
+    * output is kept as a local checkpoint, so consuming the returned plan
+    * never re-invokes the model. A cold memo plans no join and no union.
+    * A duplicate key from a concurrent re-run or a retried task is
+    * harmless: hits are deduped on read. A lost checkpoint is not
+    * recomputed; a rerun resumes from the committed memo.
     */
   def mapChunksWithMemo(chunks: DataFrame, client: ModelClient,
                         prompt: String, model: String,
                         memoPath: String): DataFrame = {
-    val spark = chunks.sparkSession
     val keyed = chunks.withColumn("key", cacheKey(prompt, model, "text"))
-    val memo = readMemo(spark, memoPath).dropDuplicates("key")
+    def mapped(misses: DataFrame) =
+      committed(misses, client, prompt, memoPath).select(col("chunk_id"), col("text"), col("result"))
+    memoTable(chunks.sparkSession, memoPath) match {
+      case None => mapped(keyed)
+      case Some(table) =>
+        val memo = table.dropDuplicates("key")
+        keyed.join(memo, Seq("key")).select(col("chunk_id"), col("text"), col("result"))
+          .unionByName(mapped(keyed.join(memo, Seq("key"), "left_anti")))
+    }
+  }
 
-    val hits = keyed.join(memo, Seq("key"))
-      .select(col("chunk_id"), col("text"), col("result"))
-    val misses = keyed.join(memo, Seq("key"), "left_anti")
-    val fresh = LlmMap.mapChunks(misses, client, prompt)
-      .transform(SessionCache.persist)
-    // The append is the materializing action that populates `fresh`'s
-    // cache; everything downstream reuses it instead of re-calling the
-    // model.
-    fresh.select(col("key"), col("result"))
-      .write.mode("append").parquet(memoPath)
+  /** [[LlmMap.mapChunks]] over `misses` (which carry `key`), run now as
+    * one job whose tasks each commit their finished calls to the memo at
+    * `memoPath`; the stage's rows come back as an eager checkpoint.
+    */
+  private def committed(misses: DataFrame, client: ModelClient, prompt: String,
+                        memoPath: String): DataFrame = {
+    val spark = misses.sparkSession
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val keyIdx = misses.schema.fieldIndex("key")
+    SessionCache.checkpoint(LlmMap.mapChunks(misses, client, prompt,
+      () => new TaskCommit(memoPath, keyIdx, conf.value.value)), eager = true)
+  }
 
-    hits.unionByName(fresh.select(col("chunk_id"), col("text"), col("result")))
+  private val MemoSchema = MessageTypeParser.parseMessageType(
+    "message spark_schema { optional binary key (STRING); optional binary result (STRING); }")
+
+  /** One map task's memo file. The `(key, result)` of each call that
+    * returned goes to `_<name>` under the memo; when the task ends,
+    * whether it succeeds, fails or is killed, the file is closed and
+    * renamed to `<name>`. Readers skip `_`-prefixed files, so a task that
+    * dies mid-write leaves no visible partial file; a file that cannot
+    * be committed is deleted and fails the task. A task with no returned
+    * call writes nothing.
+    */
+  private final class TaskCommit(memoPath: String, keyIdx: Int, conf: Configuration)
+    extends LlmMap.CallSink {
+    private val name =
+      f"part-${TaskContext.getPartitionId()}%05d-${UUID.randomUUID()}.snappy.parquet"
+    private val tmp = new Path(memoPath, "_" + name)
+    private val groups = new SimpleGroupFactory(MemoSchema)
+    private var writer: ParquetWriter[Group] = _
+
+    def done(row: Row, result: String): Unit = {
+      if (writer == null)
+        writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(MemoSchema)
+          .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      val g = groups.newGroup().append("key", row.getString(keyIdx))
+      if (result != null) g.append("result", result)
+      writer.write(g)
+    }
+
+    def end(): Unit = if (writer != null) {
+      val fs = tmp.getFileSystem(conf)
+      try {
+        writer.close()
+        if (!fs.rename(tmp, new Path(memoPath, name)))
+          throw new java.io.IOException(s"memo commit: rename $tmp failed")
+      } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    }
   }
 
   /** C11 — cache invalidation (`mapreduce.go:266-281`): delete the memo
@@ -111,7 +167,7 @@ object MemoCache {
     ()
   }
 
-  /** Compact the memo: concurrent appends can leave duplicate keys
+  /** Compact the memo: concurrent runs and retried tasks can leave duplicate keys
     * (harmless — reads dedupe — but they accumulate bytes and read
     * work forever). Rewrites the table deduplicated to a sibling temp
     * path, then swaps it in via rename-aside (the live memo is only

@@ -127,7 +127,8 @@ object RefPipeline {
       val memoPath = FileFormats.scratch(d, "memo_resume")
       graft.pipeline.MemoCache.clearMemo(s, memoPath)
       val chunks = Chunker.documentChunks(s, d, Budget)
-      // run 1: the append inside mapChunksWithMemo materializes eagerly
+      // run 1: mapChunksWithMemo runs its map stage, which commits the
+      // memo, eagerly
       graft.pipeline.MemoCache.mapChunksWithMemo(
         chunks, KeywordFilterClient(Keyword), Prompt, "local", memoPath)
       val resumed = graft.pipeline.MemoCache.mapChunksWithMemo(

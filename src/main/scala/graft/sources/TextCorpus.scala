@@ -1,26 +1,24 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 
 /** The reference's C1 source: ONE newline-delimited UTF-8 text file,
   * records = lines (`/root/reference/internal/cli/mapreduce.go:33-38`,
   * `:207`). The engine reads it distributed — no whole-file driver
-  * read — and assigns stable 0-based line ids so every downstream
-  * operator (chunking's running sum, ordered combine) has the total
-  * order the reference gets implicitly from its in-memory string.
+  * read — in one pass, and gives every line an id that increases in
+  * file order, so every downstream operator (chunking's running sum,
+  * ordered combine) has the total order the reference gets implicitly
+  * from its in-memory string.
   *
-  * `zipWithIndex` ids follow (partition, offset) order, which for file
-  * sources is in-file byte order — deterministic at any parallelism.
-  * It costs one extra job that counts each partition's lines. Text
-  * files have no footers to hold those counts, so that job reads every
-  * byte of every partition except the last: the input is read about
-  * twice.
+  * Ids are `monotonically_increasing_id`s: ordered, not dense (the
+  * partition index in the upper bits, the line's offset within its
+  * partition in the lower). A file source's partitions follow in-file
+  * byte order, so the ids do too, at any parallelism, and each
+  * partition's id range lies above the one before it.
   */
 object TextCorpus {
-  def lines(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.textFile(path).rdd.zipWithIndex()
-      .map { case (text, id) => (id, text) }
-      .toDF("line_id", "text")
-  }
+  def lines(spark: SparkSession, path: String): DataFrame =
+    spark.read.text(path)
+      .select(monotonically_increasing_id().as("line_id"), col("value").as("text"))
 }

@@ -265,7 +265,7 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
     val (n8, ranged8, many) = combined(16 * 1024, 8)
     val (n1, _, one) = combined(1L << 30, 1)
     assert(n8 >= 8 && n1 == 1, s"partitions: $n8 and $n1")
-    assert(ranged8 == 0, "zipWithIndex ids need no range exchange")
+    assert(ranged8 == 0, "line ids in partition order need no range exchange")
     assert(many.contains("keep") && many == one)
   }
 }
@@ -307,7 +307,7 @@ class LlmMapSpec extends AnyFunSuite {
     val chunks = (0L until 64L).map(i => (i, s"chunk $i")).toDF("chunk_id", "text").coalesce(1)
     val out = LlmMap.mapChunks(chunks, WindowClient(sleepMs = 20), "p").collect()
     val maxInFlight = WindowClient.maxInFlight.get()
-    assert(maxInFlight > 1 && maxInFlight <= 16, s"max in flight: $maxInFlight")
+    assert(maxInFlight > 1 && maxInFlight <= 64, s"max in flight: $maxInFlight")
     assert(WindowClient.callsByText.size == 64)
     WindowClient.callsByText.forEach((t, n) => assert(n.get() == 1, s"$t called ${n.get()} times"))
     assert(out.map(_.getLong(0)).toSeq == (0L until 64L))
@@ -339,7 +339,7 @@ class LlmMapSpec extends AnyFunSuite {
     val called = WindowClient.calledWhenSlowReturned.get()
     assert(called > 16, s"calls started before chunk 0 returned: $called")
     val maxInFlight = WindowClient.maxInFlight.get()
-    assert(maxInFlight <= 16, s"max in flight: $maxInFlight")
+    assert(maxInFlight <= 64, s"max in flight: $maxInFlight")
     WindowClient.callsByText.forEach((t, n) => assert(n.get() == 1, s"$t called ${n.get()} times"))
     assert(out.map(_.getLong(0)).toSeq == (0L until 64L))
     assert(out.map(_.getString(2)).toSeq == (0 until 64).map(i => s"CHUNK $i"))
@@ -351,8 +351,8 @@ class LlmMapSpec extends AnyFunSuite {
     val client = WindowClient(sleepMs = 10, slowOn = "chunk 0", slowMs = 1500)
     val out = LlmMap.mapChunks(chunks, client, "p").collect()
     val called = WindowClient.calledWhenSlowReturned.get()
-    assert(called > 16 && called <= 64, s"calls started while chunk 0 hung: $called")
-    assert(WindowClient.maxInFlight.get() <= 16)
+    assert(called == 64, s"calls started while chunk 0 hung: $called")
+    assert(WindowClient.maxInFlight.get() <= 64)
     assert(WindowClient.callsByText.size == 160)
     assert(out.map(_.getString(2)).toSeq == (0 until 160).map(i => s"CHUNK $i"))
   }
@@ -374,6 +374,26 @@ final case class CountingClient(keyword: String) extends ModelClient {
     CountingClient.calls.incrementAndGet()
     KeywordFilterClient(keyword).complete(sys, text)
   }
+}
+
+/** Throws on the `poison` text once `others` calls have returned
+  * (counted JVM-wide), and otherwise keeps the lines holding "keep".
+  */
+object PoisonClient {
+  val returned = new java.util.concurrent.atomic.AtomicInteger(0)
+  def reset(): Unit = returned.set(0)
+}
+final case class PoisonClient(poison: String, others: Int) extends ModelClient {
+  override def complete(sys: String, text: String): String =
+    if (text == poison) {
+      val deadline = System.nanoTime() + 10000000000L
+      while (PoisonClient.returned.get() < others && System.nanoTime() < deadline) Thread.sleep(5)
+      throw new IllegalStateException(s"poisoned chunk: $text")
+    } else {
+      val r = KeywordFilterClient("keep").complete(sys, text)
+      PoisonClient.returned.incrementAndGet()
+      r
+    }
 }
 
 /** Records how many calls run at once and how often each text is
@@ -439,20 +459,100 @@ class MemoCacheSpec extends AnyFunSuite {
     assert(CountingClient.calls.get() == 2, "different prompt must be a cache miss")
   }
 
+  /** `run`'s result and the executed plan of each `localCheckpoint`
+    * action it ran: the map jobs of [[MemoCache.mapChunksWithMemo]].
+    */
+  private def mapJobPlans[T](run: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") { plans.add(qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = run
+      org.apache.spark.graft.ListenerBusHook.waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
+      (out, plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("a cold memo plans no join and no union: the fresh results alone") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
-    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.{MapPartitionsExec, UnionExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val dir = Harness.tempDir("memo-cold").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
-    val out = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
-    val plan = out.queryExecution.optimizedPlan
-    assert(plan.collect { case j: Join => j; case u: Union => u }.isEmpty, plan.treeString)
-    // ... nor does the persisted map stage's own plan
-    assert(graft.tools.PlanAudit.nodes(out.queryExecution.executedPlan)
-      .collect { case j: BaseJoinExec => j; case u: UnionExec => u }.isEmpty)
+    def joinsAndUnions(plan: org.apache.spark.sql.execution.SparkPlan) =
+      graft.tools.PlanAudit.nodes(plan).collect { case j: BaseJoinExec => j; case u: UnionExec => u }
+    val (out, Seq(cold)) = mapJobPlans(
+      MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir))
+    // the map job ran the model calls, and read nothing but the chunks
+    assert(graft.tools.PlanAudit.nodes(cold).exists(_.isInstanceOf[MapPartitionsExec]), cold.treeString)
+    assert(joinsAndUnions(cold).isEmpty, cold.treeString)
     assert(out.orderBy("chunk_id").select("result").as[String].collect().toSeq ==
       Seq("alpha keep", ""))
+    // a warm memo's map job anti-joins the chunks against it
+    val (_, Seq(warm)) = mapJobPlans(
+      MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir))
+    assert(joinsAndUnions(warm).nonEmpty, warm.treeString)
+  }
+
+  test("a cold memo's map stage runs one task per slot, however small the chunk shuffle") {
+    val dir = Harness.tempDir("memo-fanout").toString + "/memo"
+    val docs = (0L until 200L).map(i => (i, s"doc $i keep " + ("w " * (i % 9).toInt).trim))
+      .toDF("doc_id", "text")
+    val chunks = Chunker.chunkTable(docs, "doc_id", "text", budget = 40)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        stageTasks.add(e.stageInfo.numTasks); ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
+      org.apache.spark.graft.ListenerBusHook.waitUntilListenerBusEmpty(sc, 30000L)
+    } finally sc.removeSparkListener(listener)
+    // the map job's last stage is the map stage
+    val mapStageTasks = stageTasks.toArray(Array.empty[Integer]).last.intValue
+    assert(mapStageTasks == sc.defaultParallelism,
+      s"map stage tasks: $mapStageTasks of ${sc.defaultParallelism} slots")
+  }
+
+  test("a failed run commits every call that returned: the resume makes only the failed call") {
+    val dir = Harness.tempDir("memo-crash")
+    val memo = dir.resolve("memo").toString
+    // 17 chunks over 4 tasks; chunk 9's call throws once all others returned
+    val chunks = (0L until 17L).map(i => (i, s"chunk $i keep\nline $i")).toDF("chunk_id", "text")
+    PoisonClient.reset()
+    val e = intercept[Exception](MemoCache.mapChunksWithMemo(
+      chunks, PoisonClient("chunk 9 keep\nline 9", others = 16), "p", "m", memo))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("model call failed for chunk_id=9")),
+      chain.map(_.getMessage).mkString(" | "))
+    // tasks the failed job left running end (and commit) on their own
+    val deadline = System.nanoTime() + 10000000000L
+    def running = spark.sparkContext.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+    while (running > 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    val names = new java.io.File(memo).list().toSeq.filterNot(_.startsWith("."))
+    assert(names.nonEmpty && names.forall(n => n.startsWith("part-") && n.endsWith(".parquet")),
+      names.mkString(", "))
+    def combined(memoPath: String, client: ModelClient, tag: String): String = {
+      val out = dir.resolve(s"out-$tag")
+      Combine.writeCombined(MemoCache.mapChunksWithMemo(chunks, client, "p", "m", memoPath),
+        out.toString)
+      java.nio.file.Files.list(out).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+        .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).mkString
+    }
+    CountingClient.reset()
+    val resumed = combined(memo, CountingClient("keep"), "resumed")
+    assert(CountingClient.calls.get() == 1, "the resume re-calls only the chunk that failed")
+    val clean = combined(dir.resolve("memo-clean").toString, KeywordFilterClient("keep"), "clean")
+    assert(resumed.contains("chunk 9 keep") && resumed == clean)
   }
 
   test("clearMemo (C11): cleaned cache forces recompute; idempotent") { // mapreduce_test.go:303-355
