@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.graft.ListenerBusHook
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,8 +29,9 @@ object Harness {
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC,
     * nanosecond parquet timestamps read as longs (the fixtures' ts
-    * columns), no UI and WARN logging. `conf` adds or overrides
-    * settings (e.g. `spark.master` for a deployment address).
+    * columns), no UI, WARN logging and no plan-truncation notices.
+    * `conf` adds or overrides settings (e.g. `spark.master` for a
+    * deployment address).
     */
   def session(cpus: Int, conf: (String, String)*): SparkSession = {
     val b = SparkSession.builder()
@@ -54,6 +57,13 @@ object Harness {
     conf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // debug strings are truncated on purpose (build.sbt caps
+    // spark.sql.maxPlanStringLength for the deep graph plans; wide
+    // schemas pass spark.sql.debug.maxToStringFields), so the notices
+    // are expected: one per deep plan, one per JVM
+    for (l <- Seq("org.apache.spark.sql.catalyst.util.StringUtils",
+        "org.apache.spark.util.SparkStringUtils"))
+      Configurator.setLevel(l, Level.ERROR)
     spark
   }
 

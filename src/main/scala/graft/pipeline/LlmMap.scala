@@ -42,10 +42,10 @@ object LlmMap {
   /** Suffix the reference injects into every prompt (mapreduce.go:91). */
   val FilterSuffix = "\nReturn the lines that you want to keep."
 
-  /** Rows a map task holds at once, each with its model call running
-    * or finished and waiting for an earlier row: the task's one bound on
-    * concurrent calls, and on the memory a slow head call can pin while
-    * the calls behind it go on.
+  /** Rows a map task holds at once, each with its result known or its
+    * model call running or finished, waiting for an earlier row: the
+    * task's one bound on concurrent calls, and on the memory a slow head
+    * call can pin while the calls behind it go on.
     */
   private val MaxHeld = 64
 
@@ -90,40 +90,49 @@ object LlmMap {
     * its cause) and cancels the task's other calls.
     */
   def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String): DataFrame =
-    mapChunks(chunks, client, prompt, () => NoSink)
+    mapChunks(chunks, client, prompt, _ => None, () => NoSink)
 
-  /** [[mapChunks]], handing each task's finished calls to the sink that
-    * `sink` makes on the task's thread.
+  /** [[mapChunks]], where a row for which `known` gives a result is a
+    * hit: it is emitted with that result (which may be null), with no
+    * model call, and is not handed to the sink. Each task's finished
+    * calls go to the sink that `sink` makes on the task's thread.
     */
   private[pipeline] def mapChunks(chunks: DataFrame, client: ModelClient, prompt: String,
+                                  known: Row => Option[String],
                                   sink: () => CallSink): DataFrame = {
     val sys = prompt + FilterSuffix
     val in = chunks.schema
     val textIdx = in.fieldIndex("text")
     val idIdx = in.fieldIndex("chunk_id")
     chunks.mapPartitions { rows: Iterator[Row] =>
-      new InOrder(rows, (r: Row) => client.complete(sys, r.getString(textIdx)),
+      new InOrder(rows, (r: Row) => client.complete(sys, r.getString(textIdx)), known,
         (r: Row) => s"chunk_id=${r.get(idIdx)}", sink())
         .map { case (r, result) => Row.fromSeq(r.toSeq :+ result) }
     }(Encoders.row(in.add(StructField("result", StringType))))
   }
 
-  /** The call window of one task: `(row, call(row))` in input order.
-    * Every held row's call runs on [[pool]], at most [[MaxHeld]] rows are
+  /** The call window of one task: `(row, known(row) or call(row))` in
+    * input order. A known row is done as it enters the window; every
+    * other held row's call runs on [[pool]]. At most [[MaxHeld]] rows are
     * held, and every finished call wakes the task thread, which emits the
     * head row once its call is done and then starts the next call (a
     * failed call anywhere in the window fails the task at once). Each
-    * emitted row goes to `sink`. When the task completes, fails or is
-    * killed, the calls still running are cancelled, the held calls that
-    * had finished go to `sink`, and `sink` ends.
+    * emitted called row goes to `sink`. When the task completes, fails or
+    * is killed, the calls still running are cancelled, the held calls
+    * that had finished go to `sink`, and `sink` ends.
     */
-  private final class InOrder(rows: Iterator[Row], complete: Row => String, label: Row => String,
+  private final class InOrder(rows: Iterator[Row], complete: Row => String,
+                              known: Row => Option[String], label: Row => String,
                               sink: CallSink)
     extends Iterator[(Row, String)] {
 
-    private final class Call(val row: Row) extends FutureTask[String](new Callable[String] {
-      def call(): String = complete(row)
-    }) {
+    private final class Call(val row: Row, cached: Option[String])
+      extends FutureTask[String](new Callable[String] {
+        def call(): String = cached.getOrElse(complete(row))
+      }) {
+      /** Whether the row's result came from `known`, not from a call. */
+      val hit: Boolean = cached.isDefined
+
       override protected def done(): Unit = {
         if (!isCancelled) {
           try get()
@@ -145,7 +154,7 @@ object LlmMap {
 
     private def end(): Unit = {
       window.synchronized {
-        window.forEach { c => c.cancel(true); c.answer.foreach(sink.done(c.row, _)) }
+        window.forEach { c => c.cancel(true); if (!c.hit) c.answer.foreach(sink.done(c.row, _)) }
         window.clear()
       }
       sink.end()
@@ -153,9 +162,10 @@ object LlmMap {
 
     private def fill(): Unit = window.synchronized {
       while (window.size < MaxHeld && rows.hasNext) {
-        val c = new Call(rows.next())
+        val row = rows.next()
+        val c = new Call(row, known(row))
         window.add(c)
-        pool.execute(c)
+        if (c.hit) c.run() else pool.execute(c)
       }
     }
 
@@ -169,7 +179,7 @@ object LlmMap {
       if (err != null) fail(err._1, err._2)
       window.synchronized(window.poll())
       val result = try head.get() catch { case e: ExecutionException => fail(head.row, e.getCause) }
-      sink.done(head.row, result)
+      if (!head.hit) sink.done(head.row, result)
       head.row -> result
     }
 

@@ -13,6 +13,7 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.SessionCache
@@ -25,13 +26,15 @@ import graft.SessionCache
   * old answers. The engine fixes that: the memo key is
   * sha2(prompt || model || chunk_text), so any input change is a miss.
   *
-  * Storage is a parquet table of (key, result). A run anti-joins pending
-  * chunks against the memo (left_anti — no driver-side lookup), computes
-  * only the misses, and serves memo hits unioned with the fresh results.
-  * The map stage is the memo's only writer: each map task commits its
-  * finished calls' rows to its own file as the task ends, like the
-  * reference's per-chunk `result%d.txt`, so a failed run keeps every
-  * call that returned and a rerun makes only the calls that did not.
+  * Storage is a parquet table of (key, result). Like the reference's
+  * resume loop (use a chunk's cached result if there is one, otherwise
+  * call the model), a run left-joins the chunks to the memo (no
+  * driver-side lookup) and runs them all through one map job, which
+  * calls the model only for the chunks the memo does not hold. That job
+  * is the memo's only writer: each map task commits its finished calls'
+  * rows to its own file as the task ends, like the reference's per-chunk
+  * `result%d.txt`, so a failed run keeps every call that returned and a
+  * rerun makes only the calls that did not.
   * All set logic is distributed; works unchanged on a 1000-executor
   * cluster with the memo on a shared object store.
   */
@@ -46,8 +49,8 @@ object MemoCache {
   def cacheKey(prompt: String, model: String, textCol: String) =
     sha2(concat_ws(Sep, lit(prompt), lit(model), col(textCol)), 256)
 
-  /** The memo table at `memoPath`, or None when the path is missing
-    * or holds no files yet.
+  /** The memo table at `memoPath`, or an empty `(key, result)` table
+    * when the path is missing or holds no files yet.
     *
     * ONLY a missing/empty memo path means "cold cache". Any other read
     * failure (permissions, corrupt footer, storage flake) must
@@ -62,61 +65,57 @@ object MemoCache {
     * a mis-pointed path: it throws, so neither a map run nor a
     * compaction writes into it.
     */
-  private def memoTable(spark: SparkSession, memoPath: String): Option[DataFrame] = {
+  private def memoTable(spark: SparkSession, memoPath: String): DataFrame = {
     val path = new Path(memoPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return None
+    lazy val empty = spark.createDataFrame(java.util.List.of[Row](),
+      new StructType().add("key", StringType).add("result", StringType))
+    if (!fs.exists(path)) return empty
     val df = try spark.read.parquet(memoPath) catch {
       case e: org.apache.spark.sql.AnalysisException
         if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        return None
+        return empty
     }
     if (!df.columns.sameElements(Array("key", "result")))
       throw new IllegalArgumentException(
         s"$memoPath is not a memo table " +
           s"(columns ${df.columns.mkString(",")}, expected key,result)")
-    Some(df)
+    df
   }
 
   /** Run the map stage with memoization.
     * chunks must have (chunk_id, text). Returns (chunk_id, text, result).
     *
-    * The memo is read ONCE: hits come from a join against it, and the
-    * misses run through the map stage once, now, in one job: each map
-    * task commits its rows to the memo ([[TaskCommit]]) and the stage's
-    * output is kept as a local checkpoint, so consuming the returned plan
-    * never re-invokes the model. A cold memo plans no join and no union.
-    * A duplicate key from a concurrent re-run or a retried task is
-    * harmless: hits are deduped on read. A lost checkpoint is not
-    * recomputed; a rerun resumes from the committed memo.
+    * The memo is read ONCE. Every run has one path: the chunks are
+    * left-joined to the deduped memo and go through the map stage once,
+    * now, in one job. A hit keeps its memo result with no model call;
+    * each map task commits its calls' rows to the memo ([[TaskCommit]]),
+    * never a hit's. The stage's output is kept as a local checkpoint, so
+    * consuming the returned plan never re-invokes the model or reads the
+    * memo. A cold memo is an empty local relation, whose join the
+    * optimizer folds away. A duplicate key from a concurrent re-run or a
+    * retried task is harmless: the memo is deduped on read. A lost
+    * checkpoint is not recomputed; a rerun resumes from the committed memo.
     */
   def mapChunksWithMemo(chunks: DataFrame, client: ModelClient,
                         prompt: String, model: String,
                         memoPath: String): DataFrame = {
-    val keyed = chunks.withColumn("key", cacheKey(prompt, model, "text"))
-    def mapped(misses: DataFrame) =
-      committed(misses, client, prompt, memoPath).select(col("chunk_id"), col("text"), col("result"))
-    memoTable(chunks.sparkSession, memoPath) match {
-      case None => mapped(keyed)
-      case Some(table) =>
-        val memo = table.dropDuplicates("key")
-        keyed.join(memo, Seq("key")).select(col("chunk_id"), col("text"), col("result"))
-          .unionByName(mapped(keyed.join(memo, Seq("key"), "left_anti")))
-    }
-  }
-
-  /** [[LlmMap.mapChunks]] over `misses` (which carry `key`), run now as
-    * one job whose tasks each commit their finished calls to the memo at
-    * `memoPath`; the stage's rows come back as an eager checkpoint.
-    */
-  private def committed(misses: DataFrame, client: ModelClient, prompt: String,
-                        memoPath: String): DataFrame = {
-    val spark = misses.sparkSession
+    val spark = chunks.sparkSession
+    // a memo result may be null, so a hit is marked on its own
+    val memo = memoTable(spark, memoPath).dropDuplicates("key")
+      .select(col("key"), col("result").as("_memo"), lit(true).as("_hit"))
+    val joined = chunks.withColumn("key", cacheKey(prompt, model, "text"))
+      .join(memo, Seq("key"), "left")
+    val keyIdx = joined.schema.fieldIndex("key")
+    val memoIdx = joined.schema.fieldIndex("_memo")
+    val hitIdx = joined.schema.fieldIndex("_hit")
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val keyIdx = misses.schema.fieldIndex("key")
-    SessionCache.checkpoint(LlmMap.mapChunks(misses, client, prompt,
-      () => new TaskCommit(memoPath, keyIdx, conf.value.value)), eager = true)
+    val mapped = LlmMap.mapChunks(joined, client, prompt,
+      (r: Row) => if (r.isNullAt(hitIdx)) None else Some(r.getString(memoIdx)),
+      () => new TaskCommit(memoPath, keyIdx, conf.value.value))
+    SessionCache.checkpoint(mapped.select(col("chunk_id"), col("text"), col("result")),
+      eager = true)
   }
 
   private val MemoSchema = MessageTypeParser.parseMessageType(
@@ -178,12 +177,10 @@ object MemoCache {
     * identical (MemoCacheSpec proves it).
     */
   def compactMemo(spark: SparkSession, memoPath: String): Unit = {
-    val df = memoTable(spark, memoPath) match {
-      case Some(t) => t
-      case None => return
-    }
     val path = new org.apache.hadoop.fs.Path(memoPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return
+    val df = memoTable(spark, memoPath)
     val tmp = new org.apache.hadoop.fs.Path(memoPath + ".compact.tmp")
     val old = new org.apache.hadoop.fs.Path(memoPath + ".compact.old")
     fs.delete(tmp, true); fs.delete(old, true)

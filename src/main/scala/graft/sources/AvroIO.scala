@@ -11,6 +11,7 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro container-file interchange — the remaining row-oriented format a
   * data-engineering estate hands off (Kafka archives, Hive row tables,
@@ -44,28 +45,6 @@ import org.apache.spark.sql.types._
   * is the row-interchange path, not the lake format.
   */
 object AvroIO {
-
-  /** Java-serializable carrier for the session Hadoop configuration
-    * (the standard writeObject/readFields pattern): tasks must resolve
-    * the output FileSystem with the SAME conf the driver used —
-    * a fresh `new Configuration()` on executors drops programmatic
-    * settings (fs.defaultFS, object-store credentials), so on
-    * HDFS/object-store deployments tasks could write to a different or
-    * unauthenticated filesystem than the driver prepared (ADVICE r11).
-    */
-  private class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
 
   /** Map a flat StructType to the Avro record schema JSON. */
   def avroSchemaJson(schema: StructType): String = {
@@ -104,7 +83,7 @@ object AvroIO {
     fs.mkdirs(root)
     // the driver's conf rides to tasks — executors must hit the SAME
     // filesystem/credentials the delete/mkdirs above ran against
-    val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     df.rdd.foreachPartition { it =>
       if (it.hasNext) {
         val schema = new Schema.Parser().parse(schemaJson)

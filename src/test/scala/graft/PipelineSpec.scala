@@ -376,6 +376,20 @@ final case class CountingClient(keyword: String) extends ModelClient {
   }
 }
 
+/** Counts calls, keeps the lines holding "keep", and answers null for
+  * the chunk whose text is `nullOn`.
+  */
+object NullOnClient {
+  val calls = new java.util.concurrent.atomic.AtomicLong(0)
+  def reset(): Unit = calls.set(0)
+}
+final case class NullOnClient(nullOn: String) extends ModelClient {
+  override def complete(sys: String, text: String): String = {
+    NullOnClient.calls.incrementAndGet()
+    if (text == nullOn) null else KeywordFilterClient("keep").complete(sys, text)
+  }
+}
+
 /** Throws on the `poison` text once `others` calls have returned
   * (counted JVM-wide), and otherwise keeps the lines holding "keep".
   */
@@ -442,10 +456,13 @@ class MemoCacheSpec extends AnyFunSuite {
     val r1 = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
       .orderBy("chunk_id").select("result").as[String].collect().toSeq
     assert(CountingClient.calls.get() == 3)
+    def files() = new java.io.File(dir).list().sorted.toSeq
+    val before = files()
     CountingClient.reset()
     val r2 = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
       .orderBy("chunk_id").select("result").as[String].collect().toSeq
     assert(CountingClient.calls.get() == 0, "cached run must not call the model")
+    assert(files() == before, "a hit must not be committed again")
     assert(r1 == r2)
     assert(r1 == Seq("alpha keep", "", "gamma keep"))
   }
@@ -493,10 +510,62 @@ class MemoCacheSpec extends AnyFunSuite {
     assert(joinsAndUnions(cold).isEmpty, cold.treeString)
     assert(out.orderBy("chunk_id").select("result").as[String].collect().toSeq ==
       Seq("alpha keep", ""))
-    // a warm memo's map job anti-joins the chunks against it
+    // a warm memo's map job left-joins the chunks to it
     val (_, Seq(warm)) = mapJobPlans(
       MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir))
     assert(joinsAndUnions(warm).nonEmpty, warm.treeString)
+  }
+
+  test("a partly-warm run returns one checkpoint: the combine plans no join and reads no memo") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = Harness.tempDir("memo-partly")
+    val memo = dir.resolve("memo")
+    val chunks = (0L until 12L).map(i => (i, s"chunk $i keep\nline $i")).toDF("chunk_id", "text")
+    // the first run sees half the chunks; one of its answers is null
+    NullOnClient.reset()
+    MemoCache.mapChunksWithMemo(chunks.filter($"chunk_id" < 6),
+      NullOnClient("chunk 2 keep\nline 2"), "p", "m", memo.toString)
+    assert(NullOnClient.calls.get() == 6)
+    NullOnClient.reset()
+    val out = MemoCache.mapChunksWithMemo(chunks,
+      NullOnClient("chunk 2 keep\nline 2"), "p", "m", memo.toString)
+    assert(NullOnClient.calls.get() == 6, "the rerun calls only the chunks the memo lacks")
+    val leaves = out.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      out.queryExecution.analyzed.treeString)
+    val combine = graft.tools.PlanAudit.nodes(Combine.combineAll(out).queryExecution.executedPlan)
+    assert(!combine.exists(p => p.isInstanceOf[BaseJoinExec] || p.isInstanceOf[FileSourceScanExec]),
+      combine.mkString("\n"))
+    // with the memo gone, the combine still has everything it needs
+    Harness.deleteTree(memo)
+    Combine.writeCombined(out, dir.resolve("out").toString)
+    val combined = java.nio.file.Files.list(dir.resolve("out")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.getFileName.toString.startsWith("part-"))
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).mkString
+    assert(combined == (0 until 12).filter(_ != 2).map(i => s"chunk $i keep").mkString + "\n")
+  }
+
+  test("a warm rerun's map and combine start 6 jobs, a cold run's 3") {
+    val dir = Harness.tempDir("memo-jobs")
+    val chunks = (0L until 40L).map(i => (i, s"chunk $i keep\nline $i")).toDF("chunk_id", "text")
+    // the jobs of one map and combine; the pass adds one for its write
+    // of the returned empty frame
+    def jobs(tag: String): Long = {
+      val Seq((_, m)) = Harness.pass(spark, "", Seq(tag -> { (s: SparkSession, _: String) =>
+        val mapped = MemoCache.mapChunksWithMemo(chunks, KeywordFilterClient("keep"), "p", "m",
+          dir.resolve("memo").toString)
+        Combine.writeCombined(mapped, dir.resolve(s"out-$tag").toString)
+        s.emptyDataFrame
+      }))
+      assert(m.error.isEmpty, m.error)
+      m.jobs - 1
+    }
+    // cold: the map job, and the combine's shuffle and write jobs
+    assert(jobs("cold") == 3)
+    // warm: also the memo's schema read, its dedup shuffle and its
+    // broadcast to the join; the combine reads the checkpoint alone
+    assert(jobs("warm") == 6)
   }
 
   test("a cold memo's map stage runs one task per slot, however small the chunk shuffle") {
