@@ -26,11 +26,12 @@ import graft.plans.GlobalOrder
   *     bound and word preservation, not exact boundaries
   *     (`mapreduce_test.go:402-436`).
   *
-  *  2. [[greedyPack]] — reference-exact sequential greedy packing
-  *     including the oversized-line word-split fallback
-  *     (`mapreduce.go:228-254`), as a driver-side fold. For parity tests
-  *     and small corpora only; not a distributed operator by nature
-  *     (greedy reset state is order-dependent and non-associative).
+  *  2. Reference-exact sequential greedy packing, including the
+  *     oversized-line word-split fallback (`mapreduce.go:228-254`): the
+  *     test-side oracle `graft.ReferencePacker.greedyPack`, a
+  *     driver-side fold that the chunker specs compare against; not a
+  *     distributed operator by nature (greedy reset state is
+  *     order-dependent and non-associative).
   */
 object Chunker {
 
@@ -138,44 +139,4 @@ object Chunker {
                      budget: Int = DefaultBudget): DataFrame =
     graft.SessionCache.shared(spark, s"chunks:$dir:$budget")(
       chunkTable(graft.Tables.documents(spark, dir), "doc_id", "text", budget))
-
-  // ---------------------------------------------------------------------
-  // Reference-exact greedy packing (driver-side; parity tests only).
-  // ---------------------------------------------------------------------
-
-  /** Greedy packer with the reference's exact semantics
-    * (mapreduce.go:199-263): pack consecutive lines while the running
-    * token sum stays <= budget; a line whose own cost exceeds the budget
-    * is word-split (whitespace collapsed) and word-packed
-    * (mapreduce.go:228-254). Per-chunk trailing newline trimmed.
-    */
-  def greedyPack(text: String, budget: Int = DefaultBudget): Seq[String] = {
-    val chunks = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var curTokens = 0
-    def flush(): Unit = {
-      if (cur.nonEmpty) {
-        chunks += cur.toString.stripSuffix("\n")
-        cur.clear(); curTokens = 0
-      }
-    }
-    def add(piece: String, tokens: Int): Unit = {
-      if (curTokens + tokens > budget) flush()
-      cur.append(piece).append("\n")
-      curTokens += tokens
-    }
-    for (line <- text.split("\n", -1)) {
-      val t = TokenCount.count(line)
-      if (t > budget) {
-        // Oversized line: flush, then word-split (same packer as the
-        // distributed C3b path in assignChunks).
-        flush()
-        chunks ++= wordPack(line, budget)
-      } else {
-        add(line, t)
-      }
-    }
-    flush()
-    chunks.result().filter(_.nonEmpty)
-  }
 }

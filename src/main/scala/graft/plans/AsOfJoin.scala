@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * the key, state bounded by the window sort. The naive alternatives do
   * not survive scale: a range-condition join explodes to (left x right)
   * per key before its filter, and per-row subqueries are quadratic.
-  * This is the same single-timeline trick the chunker uses for its
-  * running sum.
+  * The catalog's as-of entries q33 and q106 run on it.
   */
 object AsOfJoin {
 

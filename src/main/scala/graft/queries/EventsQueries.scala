@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SessionCache
 import graft.Tables._
+import graft.plans.AsOfJoin
 
 /** Event-stream semantics in batch form (SURVEY.md §2.2 Streaming row):
   * tumbling/sliding/session windows, gap sessionization, and an as-of
@@ -52,6 +53,23 @@ object EventsQueries {
           .as("value_credit"))
   }
 
+  /** q33/q106's as-of: each error event `(event_id, user_id, ts)` with
+    * `p_id` and `name` (`value` over the purchase row) of its user's
+    * latest purchase at or before its `ts` (ties on `ts`: the larger
+    * `p_id`), both taken from that one purchase; null when there is none.
+    */
+  private def purchaseAsOfError(s: SparkSession, d: String,
+                                name: String, value: Column): DataFrame = {
+    val e = events(s, d)
+    AsOfJoin.asof(
+      e.filter(col("event_type") === "error")
+        .select(col("event_id"), col("user_id"), col("ts")),
+      e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("event_id").as("p_id"),
+          value.as(name)),
+      "user_id", "ts", Seq("p_id", name), tieBreak = col("p_id"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Per-group HLL next to the exact distinct count — the grouped form
@@ -83,57 +101,29 @@ object EventsQueries {
     }),
 
     // As-of join: each error event picks the latest purchase of the same
-    // user at-or-before its timestamp. Implemented as ONE shuffle: union
-    // both sides keyed by user, order by (ts, kind, event_id), and carry
-    // the last non-null purchase id/value forward — no range-explosion
-    // join, no per-key skew beyond the window sort. This is the 100 TB
-    // formulation of as-of (a broadcast/range join would blow up).
+    // user at-or-before its timestamp (ties on ts: the larger event_id),
+    // through the one as-of operator: ONE shuffle on user_id, no
+    // range-explosion join. The purchase id and value come from the
+    // SAME latest purchase, even when its value is null.
     "q33_asof_join" -> ((s, d) => {
-      val e = events(s, d)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit(0).as("kind"), col("event_id"),
-          col("event_id").as("p_id"), col("value").as("p_value"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"),
-          lit(null).cast("long").as("p_id"), lit(null).cast("double").as("p_value"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("kind"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      purchases.unionByName(errors)
-        .withColumn("asof_purchase_id", last(col("p_id"), ignoreNulls = true).over(w))
-        .withColumn("asof_value", last(col("p_value"), ignoreNulls = true).over(w))
-        .filter(col("kind") === 1)
-        .select(col("event_id"), col("user_id"), col("asof_purchase_id"),
-          round(col("asof_value"), 2).as("asof_value"))
+      purchaseAsOfError(s, d, "p_value", col("value"))
+        .select(col("event_id"), col("user_id"), col("p_id").as("asof_purchase_id"),
+          round(col("p_value"), 2).as("asof_value"))
     }),
 
     // As-of with a staleness TOLERANCE: like q33, but a purchase older
     // than 1 hour is too stale to attribute — the bounded-staleness
     // lookup real feature-serving uses (an unbounded as-of happily
-    // joins a year-old record). Same single-shuffle union+window plan;
-    // the tolerance is a post-window null-out, equivalent to bounding
-    // the search window itself.
+    // joins a year-old record). The tolerance is a null-out after the
+    // as-of, equivalent to bounding the search window itself: if the
+    // latest purchase is stale, every earlier one is too.
     "q106_asof_tolerance" -> ((s, d) => {
-      val e = events(s, d)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit(0).as("kind"), col("event_id"),
-          col("event_id").as("p_id"), unix_micros(col("ts")).as("p_us"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"),
-          lit(null).cast("long").as("p_id"), lit(null).cast("long").as("p_us"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("kind"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fresh =
-        unix_micros(col("ts")) - col("last_p_us") <= 3600L * 1000000L
-      purchases.unionByName(errors)
-        .withColumn("last_p_id", last(col("p_id"), ignoreNulls = true).over(w))
-        .withColumn("last_p_us", last(col("p_us"), ignoreNulls = true).over(w))
-        .filter(col("kind") === 1)
+      val gapUs = unix_micros(col("ts")) - col("p_us")
+      val fresh = gapUs <= 3600L * 1000000L
+      purchaseAsOfError(s, d, "p_us", unix_micros(col("ts")))
         .select(col("event_id"), col("user_id"),
-          when(fresh, col("last_p_id")).as("asof_purchase_id"),
-          when(fresh, floor((unix_micros(col("ts")) - col("last_p_us"))
-            / 1000000.0).cast("long")).as("gap_s"))
+          when(fresh, col("p_id")).as("asof_purchase_id"),
+          when(fresh, floor(gapUs / 1000000.0).cast("long")).as("gap_s"))
     }),
 
     // Gap sessionization (30-min inactivity): lag + cumulative new-session

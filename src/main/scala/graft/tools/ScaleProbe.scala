@@ -120,21 +120,6 @@ object ScaleProbe {
     "events/rel" -> "q80_session_concurrency",
     "events/rel" -> "q124_winsorize")
 
-  /** One entry's wall and constructor seconds (NaN when it failed),
-    * Spark jobs started and meters.
-    */
-  final case class Measure(sec: Double, ctorSec: Double, jobs: Long, shuffleWrite: Long,
-                           memSpill: Long, diskSpill: Long) {
-    def merge(o: Measure): Measure = {
-      def least(a: Double, b: Double) = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
-      Measure(least(sec, o.sec), least(ctorSec, o.ctorSec),
-        math.max(jobs, o.jobs),
-        math.max(shuffleWrite, o.shuffleWrite),
-        math.max(memSpill, o.memSpill),
-        math.max(diskSpill, o.diskSpill))
-    }
-  }
-
   private def usage(msg: String): Nothing = {
     System.err.println(
       s"""$msg
@@ -203,6 +188,16 @@ object ScaleProbe {
     Harness.pass(spark, warmDir,
       shared ++ warmNames.map(n => n -> graft.SparkEntry.queries(n)))
 
+    // Per entry over the passes: the least wall and constructor seconds
+    // of the passes that ran (NaN when none did), the most of each
+    // counter, and the first error.
+    def merge(a: Harness.Measure, b: Harness.Measure): Harness.Measure = {
+      def least(x: Double, y: Double) = if (x.isNaN) y else if (y.isNaN) x else math.min(x, y)
+      Harness.Measure(least(a.sec, b.sec), least(a.ctorSec, b.ctorSec), a.jobs max b.jobs,
+        a.cpuSec max b.cpuSec, a.shuffleWrite max b.shuffleWrite, a.memSpill max b.memSpill,
+        a.diskSpill max b.diskSpill, a.error.orElse(b.error))
+    }
+
     // a per-query failure (e.g. a disk-filling spill) must not lose the
     // other measurements — record it as NaN and keep probing.
     // Shuffle partitions scale with the corpus factor (32 per 10× —
@@ -211,7 +206,7 @@ object ScaleProbe {
     // ~30 MB×arrays per task into the pair aggregations and produced
     // the only observed spill). AQE coalesces the excess on the small
     // queries, so ratios stay comparable.
-    def time(dir: String, factor: Int): Map[String, Measure] =
+    def time(dir: String, factor: Int): Map[String, Harness.Measure] =
       (1 to passes).map { p =>
         spark.conf.set("spark.sql.shuffle.partitions",
           (32 * math.max(1, math.ceil(factor / 10.0).toInt)).toString)
@@ -221,10 +216,9 @@ object ScaleProbe {
             f"shufW=${m.shuffleWrite / 1e6}%.0f MB " +
             f"spill=${m.memSpill / 1e6}%.0f/${m.diskSpill / 1e6}%.0f MB")
         }).map { case (n, m) =>
-          val ok = m.error.isEmpty
-          n -> Measure(if (ok) m.sec else Double.NaN, if (ok) m.ctorSec else Double.NaN,
-            m.jobs, m.shuffleWrite, m.memSpill, m.diskSpill) }.toMap
-      }.reduce((a, b) => a.map { case (k, v) => k -> v.merge(b(k)) })
+          n -> (if (m.error.isEmpty) m else m.copy(sec = Double.NaN, ctorSec = Double.NaN))
+        }.toMap
+      }.reduce((a, b) => a.map { case (k, v) => k -> merge(v, b(k)) })
 
     val base = time(baseDir, 1)
     val bigByFactor = bigs.map { case (dir, f) => (f, time(dir, f)) }
@@ -249,7 +243,7 @@ object ScaleProbe {
       def exempt: Boolean = !failed && ExactBaselines.contains(name)
       def flagged: Boolean = superLinear && !exempt
     }
-    def rowsFor(factor: Int, big: Map[String, Measure]): Seq[Row] =
+    def rowsFor(factor: Int, big: Map[String, Harness.Measure]): Seq[Row] =
       entriesFor(factor).map(_._1).flatMap { n =>
         (base.get(n), big.get(n)) match {
           case (Some(b), Some(g)) => Some(Row(n, familyOf(n), b.sec, g.sec,

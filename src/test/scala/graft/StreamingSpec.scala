@@ -32,7 +32,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     }
     spark.streams.addListener(listener)
     try {
-      StreamingJobs.runIncremental(spark, batches, mkPlan, name)
+      StreamRuns.runIncremental(spark, batches, mkPlan, name)
       org.apache.spark.graft.ListenerBusHook
         .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
     } finally spark.streams.removeListener(listener)
@@ -43,7 +43,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
 
   test("streaming tumbling window == batch q35") {
     val stream = StreamingJobs.eventsStream(spark, TestSpark.sf0001)
-    val got = StreamingJobs.runToCompletion(spark,
+    val got = StreamRuns.runToCompletion(spark,
       StreamingJobs.tumblingCounts(stream), "t_tumbling")
     val want = graft.queries.EventsQueries.queries("q35_tumbling_window")(
       spark, TestSpark.sf0001)
@@ -53,7 +53,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
 
   test("stream-stream interval join == batch q71 range join") {
     val stream = StreamingJobs.eventsStream(spark, TestSpark.sf0001)
-    val got = StreamingJobs.runAppend(spark,
+    val got = StreamRuns.runAppend(spark,
       StreamingJobs.attributionJoin(stream, stream), "t_ssjoin")
     val want = graft.queries.EventsQueries.queries("q71_view_attribution")(
       spark, TestSpark.sf0001)
@@ -91,7 +91,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       (11L, "2024-01-04 10:00:00", 7L, "view", 0.0),
       (12L, "2024-01-04 10:00:00", 8L, "purchase", 1.0))
     val batches = Seq(b1, b2, b3, b4)
-    val got = StreamingJobs.runIncremental(spark, batches,
+    val got = StreamRuns.runIncremental(spark, batches,
       df => StreamingJobs.attributionJoinOuter(df, df), "t_outer_attr")
       .collect()
       .map(r => r.getAs[Long]("purchase_id") ->
@@ -121,7 +121,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       ("purchase", "buy", 10.0), ("error", "ops", 0.5))
       .toDF("event_type", "category", "weight")
     val stream = StreamingJobs.eventsStream(spark, TestSpark.sf0001)
-    val got = StreamingJobs.runAppend(spark,
+    val got = StreamRuns.runAppend(spark,
       StreamingJobs.enrichStream(stream, dim), "t_enrich")
     val want = StreamingJobs.enrichStream(
       Tables.events(spark, TestSpark.sf0001), dim)
@@ -169,7 +169,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     val b3 = evs(("2024-01-01 00:20:00", "view", 99.0))
     // batch 4 advances the clock further so any leaked state would flush
     val b4 = evs(("2024-01-01 08:00:00", "view", 7.0))
-    val got = StreamingJobs.runIncremental(spark, Seq(b1, b2, b3, b4),
+    val got = StreamRuns.runIncremental(spark, Seq(b1, b2, b3, b4),
       StreamingJobs.tumblingCounts, "t_incremental")
     val all = got.collect()
     val rows = all.map(r => (String.valueOf(r.get(0)), r.getString(1)) ->
@@ -220,9 +220,9 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     val batches = Seq(b1, b2, b3, b4)
     // run 1 processes b1+b2 then STOPS (AvailableNow caught up); run 2
     // starts a fresh query from the same checkpointLocation over b3+b4
-    val restarted = StreamingJobs.runWithRestart(
+    val restarted = StreamRuns.runWithRestart(
       spark, batches, StreamingJobs.tumblingCounts, splitAt = 2)
-    val uninterrupted = StreamingJobs.runIncremental(
+    val uninterrupted = StreamRuns.runIncremental(
       spark, batches, StreamingJobs.tumblingCounts, "t_ckpt_uninterrupted")
     // exactly-once across the stop/restart boundary: a re-read of the
     // pre-stop files, lost sink output, or a leaked late event would all
@@ -256,7 +256,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       (5L, "2024-01-01 01:20:00", 8L, 0.7))
     val b3 = evs((6L, "2024-01-01 02:10:00", 8L, 5.05),
       (7L, "2024-01-01 02:20:00", 7L, 2.2))
-    val got = StreamingJobs.runIncremental(spark, Seq(b1, b2, b3),
+    val got = StreamRuns.runIncremental(spark, Seq(b1, b2, b3),
       df => graft.streaming.StatefulRunning.runningStats(df).toDF(),
       "t_tws_running")
     val all = Seq(b1, b2, b3).reduce(_.unionAll(_))
@@ -284,7 +284,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // replay of event 1 in a LATER micro-batch (at-least-once delivery),
     // plus a fresh event
     val b2 = evs(("2024-01-01 00:10:00", 1L, 1.0), ("2024-01-01 00:40:00", 3L, 3.0))
-    val got = StreamingJobs.runIncremental(spark, Seq(b1, b2),
+    val got = StreamRuns.runIncremental(spark, Seq(b1, b2),
       df => StreamingJobs.dedupStream(df, "event_id"), "t_dedup")
     val ids = got.select("event_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L), s"replay must be suppressed: $ids")
@@ -309,7 +309,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // delivery) alongside a fresh k=2 update
     val b3 = Seq((2L, "b3", 3L), (1L, "a2", 2L)).toDF("k", "v", "version")
     var lastId = -1L
-    StreamingJobs.runForeachBatch(spark, Seq(b1, b2, b3), (batch, id) => {
+    StreamRuns.runForeachBatch(spark, Seq(b1, b2, b3), (batch, id) => {
       val prev =
         if (id == 0) batch.limit(0)
         else spark.read.parquet(s"$root/v${id - 1}")
@@ -352,7 +352,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     assert(batches.forall(_.count() > 0))
     val acc = Array.fill(TextAnalytics.CmsD)(
       scala.collection.mutable.Map.empty[Long, Long])
-    StreamingJobs.runForeachBatch(spark, batches, (batch, _) => {
+    StreamRuns.runForeachBatch(spark, batches, (batch, _) => {
       for (k <- 0 until TextAnalytics.CmsD; (b, c) <- counters(batch, k))
         acc(k)(b) = acc(k).getOrElse(b, 0L) + c
     })
@@ -380,7 +380,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       ev.filter(col("ts_us") > c2))
     assert(batches.forall(_.count() > 0))
     import spark.implicits._
-    val got = StreamingJobs.runIncremental(spark, batches,
+    val got = StreamRuns.runIncremental(spark, batches,
       df => StatefulDebounce.debounce(df.as[KeyedEvent]).toDF,
       "t_debounce")
       .select("event_id").as[Long].collect().toSet
@@ -407,7 +407,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       KeyedEvent(1L, "click", 11L, 4L * mUs)).toDF
     val b2 = Seq(KeyedEvent(1L, "click", 12L, 6L * mUs),
       KeyedEvent(1L, "click", 13L, 30L * mUs)).toDF
-    val kept = StreamingJobs.runIncremental(spark, Seq(b1, b2),
+    val kept = StreamRuns.runIncremental(spark, Seq(b1, b2),
       df => StatefulDebounce.debounce(df.as[KeyedEvent]).toDF,
       "t_debounce_planted")
       .select("event_id").as[Long].collect().toSet
@@ -438,8 +438,8 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     val batches = Seq(b1, b2, b3, b4)
     val mk = (df: org.apache.spark.sql.DataFrame) =>
       graft.streaming.StatefulRunning.runningStats(df).toDF()
-    val restarted = StreamingJobs.runWithRestart(spark, batches, mk, splitAt = 2)
-    val uninterrupted = StreamingJobs.runIncremental(
+    val restarted = StreamRuns.runWithRestart(spark, batches, mk, splitAt = 2)
+    val uninterrupted = StreamRuns.runIncremental(
       spark, batches, mk, "t_tws_restart_base")
     // exactly-once: no pre-stop event re-read (which would double-count
     // into the state), no lost emission, bit-equal running sums
@@ -474,11 +474,11 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     val batches = Seq(b1, b2, b3)
     val mk = (df: org.apache.spark.sql.DataFrame) =>
       StatefulDebounce.debounce(df.as[KeyedEvent]).toDF
-    val restarted = StreamingJobs.runWithRestart(spark, batches, mk, splitAt = 2)
+    val restarted = StreamRuns.runWithRestart(spark, batches, mk, splitAt = 2)
     val kept = restarted.select("event_id").as[Long].collect().toSet
     assert(kept == Set(10L, 20L, 13L), s"got $kept")
     // and the restarted run equals the uninterrupted one exactly
-    val uninterrupted = StreamingJobs.runIncremental(
+    val uninterrupted = StreamRuns.runIncremental(
       spark, batches, mk, "t_debounce_restart_base")
     assert(canon(restarted) == canon(uninterrupted))
   }
@@ -499,7 +499,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
       ev.filter(col("ts_us") > c1 && col("ts_us") <= c2),
       ev.filter(col("ts_us") > c2))
     assert(batches.forall(_.count() > 0))
-    val got = StreamingJobs.runIncremental(spark, batches,
+    val got = StreamRuns.runIncremental(spark, batches,
       df => StatefulEwma.smooth(df.as[TypedTick]).toDF, "t_ewma")
       .collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("hour_sec")) ->
@@ -522,7 +522,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
 
   test("streaming session window == batch q37") {
     val stream = StreamingJobs.eventsStream(spark, TestSpark.sf0001)
-    val got = StreamingJobs.runToCompletion(spark,
+    val got = StreamRuns.runToCompletion(spark,
       StreamingJobs.sessionCounts(stream), "t_session")
     val want = graft.queries.EventsQueries.queries("q37_session_window")(
       spark, TestSpark.sf0001)
@@ -553,7 +553,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     val perRow = Dedup.bandsPerRow(all, "doc_id", "text")
     assert(canon(perRow)
       == canon(Dedup.minhashBands(Dedup.shingleTable(all, "doc_id", "text"))))
-    val got = StreamingJobs.runIncremental(spark, Seq(b1, b2, b3),
+    val got = StreamRuns.runIncremental(spark, Seq(b1, b2, b3),
       df => graft.streaming.StatefulNeardupGate.gateStream(df).toDF(),
       "t_neardup_gate")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -596,7 +596,7 @@ class StreamingSpec extends AnyFunSuite with CacheCleanup {
     // the re-admitted 700 only
     val b3 = docs(Seq(700L -> base, 720L -> base))
     val all = Seq(b1, b2, b3).reduce(_ unionAll _)
-    val got = StreamingJobs.runIncremental(spark, Seq(b1, b2, b3),
+    val got = StreamRuns.runIncremental(spark, Seq(b1, b2, b3),
       df => graft.streaming.BoundedNeardupGate.gateStream(df, horizon).toDF(),
       "t_bounded_gate")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
